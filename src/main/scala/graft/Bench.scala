@@ -297,6 +297,36 @@ object Bench {
       }
     } catch { case _: Throwable => () }
 
+  /** Per-query samples of one bench session. A query that throws is
+    * recorded in `failed` (name -> exception class and message) and dropped
+    * from `results`, so a fast failure never reads as a fast query.
+    */
+  private[graft] final class Timings {
+    private val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+
+    def time(name: String)(run: => Any): Unit = {
+      val t0 = System.nanoTime()
+      try {
+        run
+        samples(name) = samples.getOrElse(name, Vector.empty) :+ (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable => failed(name) = s"${e.getClass.getName}: ${e.getMessage}" }
+    }
+
+    def min(name: String): Double = samples.get(name).fold(0.0)(_.min)
+
+    /** name -> sorted samples, in `order`, for every query that never failed. */
+    def results(order: Seq[String]): Seq[(String, Seq[Double])] =
+      order.filterNot(failed.contains).flatMap(n => samples.get(n).map(n -> _.sorted))
+  }
+
+  /** (total_min, total_median, total_max) over timed queries; the median is
+    * the lower middle sample, as in [[main]].
+    */
+  private[graft] def totals(results: Seq[(String, Seq[Double])]): (Double, Double, Double) =
+    (results.map(_._2.min).sum, results.map { case (_, ts) => ts((ts.length - 1) / 2) }.sum,
+      results.map(_._2.max).sum)
+
   /** The COMPACT driver line (r14 finding 1): the consumer keeps only the
     * last ~2 KB of stdout and head-truncates, and the old line's full
     * 223-entry per-query map alone was ~2.7 KB — which is why `parsed` has
@@ -313,7 +343,7 @@ object Bench {
       scale10: Seq[(String, Double, Double)], expOf: (Double, Double) => Double,
       relMs: Double, relSeries: Long, totalMin: Double, totalMed: Double,
       totalMax: Double, budget: Double, elapsedSec: Double,
-      contention: Double): String = {
+      contention: Double, failed: Seq[String] = Seq.empty): String = {
     def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val top = medians.toSeq.sortBy(-_._2).take(20)
@@ -325,7 +355,9 @@ object Bench {
       .mkString("{", ",", "}")
     val secs = sections.map("\"" + _ + "\"").mkString("[", ",", "]")
     val skip = skipped.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","unit":"sec","runs":$runs,"sf":"$sf","n_queries":$nQueries,"sections":$secs,"skipped":$skip,"budget_sec":${f2(budget)},"elapsed_sec":${f2(elapsedSec)},"contention_index":${f2(contention)},"contended":${contention > ContendedAt},"queries_top":$top,"scale10_top":$s10Top,"rel_ms_per_series":${f3(relMs)},"rel_series":$relSeries,"noisy":$noisyJson,"detail":"BENCH_SUMMARY.json","total_max":${f3(totalMax)},"total_min":${f3(totalMin)},"value":${f3(totalMed)}}"""
+    // capped like `noisy`; BENCH_SUMMARY.json lists every failure with its cause
+    val failedJson = failed.take(12).map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","unit":"sec","runs":$runs,"sf":"$sf","n_queries":$nQueries,"n_failed":${failed.size},"failed":$failedJson,"sections":$secs,"skipped":$skip,"budget_sec":${f2(budget)},"elapsed_sec":${f2(elapsedSec)},"contention_index":${f2(contention)},"contended":${contention > ContendedAt},"queries_top":$top,"scale10_top":$s10Top,"rel_ms_per_series":${f3(relMs)},"rel_series":$relSeries,"noisy":$noisyJson,"detail":"BENCH_SUMMARY.json","total_max":${f3(totalMax)},"total_min":${f3(totalMin)},"value":${f3(totalMed)}}"""
   }
 
   // ---- cross-session prior guard, as unit-testable pieces (BenchPriorSpec
@@ -491,23 +523,20 @@ object Bench {
     // budget, passes 2..runs cover only the core tier and each later pass
     // runs only if the clock can afford it plus the reserved sections.
     val order = SparkEntry.queries.toSeq.sortBy(_._1)
-    val raw = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
+    val timings = new Timings
+    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       // toRdd fixes the optimized plan BEFORE counting, so every output
       // column is really computed — a plain .count() lets Catalyst prune
       // aggregate values/projections that don't affect row counts and
       // under-measures aggregation-heavy queries by ~2x
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => -1L }
-      val t = (System.nanoTime() - t0) / 1e9
-      raw(name) = raw.getOrElse(name, Vector.empty) :+ t
-    }
+      timings.time(name)(fn(spark, sfDir).queryExecution.toRdd.count())
     order.foreach { case (name, fn) => timeOne(name, fn) }
     var passesDone = 1
-    val coreOrder = if (tiered) order.filterNot { case (n, _) => gateTier(n) } else order
+    // a query that failed once is not re-run: it has no timing to improve
+    def coreOrder = (if (tiered) order.filterNot { case (n, _) => gateTier(n) } else order)
+      .filterNot { case (n, _) => timings.failed.contains(n) }
     while (passesDone < runs && {
-      val corePassCost = coreOrder.map { case (n, _) => raw(n).min }.sum
+      val corePassCost = coreOrder.map { case (n, _) => timings.min(n) }.sum
       !budgetActive ||
         remainingSec > corePassCost * 1.15 + EstAnn + EstS10Sub + EstTail
     }) {
@@ -520,9 +549,10 @@ object Bench {
       }
       passesDone += 1
     }
-    // name -> sorted per-run seconds
-    val results: Seq[(String, Seq[Double])] =
-      order.map { case (name, _) => name -> raw(name).sorted }
+    // name -> sorted per-run seconds, failed queries left out
+    val results: Seq[(String, Seq[Double])] = timings.results(order.map(_._1))
+    val failedJson = timings.failed.toSeq.map { case (k, e) => "\"" + k + "\":" + graft.api.Envelope.esc(e) }
+      .mkString("{", ",", "}")
     // LOWER-middle for even sample counts (same index for odd): a
     // budget-degraded 2-pass session must not headline every query at its
     // WORST of 2 — the r15 rehearsal did exactly that when one co-tenant
@@ -531,6 +561,7 @@ object Bench {
     def med(ts: Seq[Double]): Double = ts((ts.length - 1) / 2)
     // bare qNN keys (unique by construction; full names in CORRECTNESS_r*.json)
     def short(name: String): String = name.takeWhile(_ != '_')
+    val failedShort = timings.failed.keys.toSeq.map(short)
     // prior session's adjudicated medians, short-keyed (see scaladoc). The
     // file is sf-tagged: medians from a different scale factor are neither
     // comparable (guard would mass-flag) nor overwritable (a quick sf0.001
@@ -594,15 +625,13 @@ object Bench {
       }.mkString("{", ",", "}")
     def emit(): Unit = {
       val medians = results.map { case (k, ts) => short(k) -> med(ts) }.toMap
-      val totalMed = results.map { case (_, ts) => med(ts) }.sum
-      val totalMin = results.map(_._2.min).sum
-      val totalMax = results.map(_._2.max).sum
+      val (totalMin, totalMed, totalMax) = totals(results)
       val cIdx = contentionIndex(medians, prior)
       val (_, picked) = spikePick()
       val noisy = noisyJsonOf(picked, emRetimed)
-      println(driverLine(runs, sfDir, results.size, sectionsDone,
+      println(driverLine(runs, sfDir, order.size, sectionsDone,
         sectionsSkipped, medians, noisy, emScale10, expOf, relMs, relSeries,
-        totalMin, totalMed, totalMax, budget, elapsedSec, cIdx))
+        totalMin, totalMed, totalMax, budget, elapsedSec, cIdx, failedShort))
       val qsFull = results.map { case (k, ts) => "\"" + short(k) + "\":" + f2(med(ts)) }
         .mkString("{", ",", "}")
       val matrix = results.map { case (k, ts) =>
@@ -620,7 +649,7 @@ object Bench {
       val s10fj = emS10Flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
       val rskipj = emRetimeSkipped.map("\"" + _ + "\"").mkString("[", ",", "]")
       atomicWrite("BENCH_SUMMARY.json",
-        s"""{"ts":"${java.time.Instant.now()}","runs":$runs,"passes_done":$passesDone,"tiered":$tiered,"budget_sec":${f2(budget)},"elapsed_sec":${f2(elapsedSec)},"contention_index":${f2(cIdx)},"contended":${cIdx > ContendedAt},"retime_skipped":$rskipj,"sf":"$sfDir","sections":$secs,"skipped":$skip,"total_min":${f3(totalMin)},"total_median":${f3(totalMed)},"total_max":${f3(totalMax)},"rel_ms_per_series":${f3(relMs)},"rel_series":$relSeries,"noisy":$noisy,"retimed":$rt,"prior_flagged":$pfj,"scale10_flagged":$s10fj,"scale10_retimed":$s10rt,"ann_index":$emAnnJson,"v4_cycle":$emV4Json,"scale10":$s10,"queries_median":$qsFull,"queries":$matrix}""")
+        s"""{"ts":"${java.time.Instant.now()}","runs":$runs,"passes_done":$passesDone,"tiered":$tiered,"budget_sec":${f2(budget)},"elapsed_sec":${f2(elapsedSec)},"contention_index":${f2(cIdx)},"contended":${cIdx > ContendedAt},"retime_skipped":$rskipj,"sf":"$sfDir","sections":$secs,"skipped":$skip,"total_min":${f3(totalMin)},"total_median":${f3(totalMed)},"total_max":${f3(totalMax)},"failed":$failedJson,"rel_ms_per_series":${f3(relMs)},"rel_series":$relSeries,"noisy":$noisy,"retimed":$rt,"prior_flagged":$pfj,"scale10_flagged":$s10fj,"scale10_retimed":$s10rt,"ann_index":$emAnnJson,"v4_cycle":$emV4Json,"scale10":$s10,"queries_median":$qsFull,"queries":$matrix}""")
     }
     emit()
     // section skip decisions (priority per the r15 plan: queries >
@@ -1036,9 +1065,7 @@ object Bench {
       .map { case (n, t1, t10) =>
         s""""$n":{"t1":${f3(t1)},"t10":${f3(t10)},"exp":${f2(expOf(t1, t10))}}""" }
       .mkString("{", ",", "}")
-    val totalMed = results.map { case (_, ts) => med(ts) }.sum
-    val totalMin = results.map(_._2.min).sum
-    val totalMax = results.map(_._2.max).sum
+    val (totalMin, totalMed, totalMax) = totals(results)
     // spike candidates as [min, median, max], capped for line-size headroom
     // (driver keeps the last ~2 KB, head-truncated; full matrix in
     // BENCH_DETAIL.json). Selection — the r7 lesson: ranking by max/min
@@ -1105,7 +1132,7 @@ object Bench {
     // one, and the committed record must say so on its face
     val retimeSkippedJson = retimeSkipped.map("\"" + _ + "\"").mkString("[", ",", "]")
     val detailJson =
-      s"""{"ts":"$ts","runs":$runs,"passes_done":$passesDone,"tiered":$tiered,"budget_sec":${f2(budget)},"sf":"$sfDir","contention_index":${f2(contentionIndex(results.map { case (k, tsv) => short(k) -> med(tsv) }.toMap, prior))},"retime_skipped":$retimeSkippedJson,"total_min":${f3(totalMin)},"total_median":${f3(totalMed)},"total_max":${f3(totalMax)},"retimed":$retimedJson,"prior_flagged":$priorFlaggedJson,"scale10_flagged":$s10FlaggedJson,"scale10_retimed":$s10RetimedJson,"ann_index":$annJson,"v4_cycle":$v4Json,"scale10":$scale10Detail,"queries":$detail}"""
+      s"""{"ts":"$ts","runs":$runs,"passes_done":$passesDone,"tiered":$tiered,"budget_sec":${f2(budget)},"sf":"$sfDir","contention_index":${f2(contentionIndex(results.map { case (k, tsv) => short(k) -> med(tsv) }.toMap, prior))},"retime_skipped":$retimeSkippedJson,"total_min":${f3(totalMin)},"total_median":${f3(totalMed)},"total_max":${f3(totalMax)},"failed":$failedJson,"retimed":$retimedJson,"prior_flagged":$priorFlaggedJson,"scale10_flagged":$s10FlaggedJson,"scale10_retimed":$s10RetimedJson,"ann_index":$annJson,"v4_cycle":$v4Json,"scale10":$scale10Detail,"queries":$detail}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
       (detailJson + "\n").getBytes("UTF-8"))
     catch { case _: Throwable => () }

@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare (`scripts/check.py`) and
+  * verify_errors.json (query → exception class and message, `{}` when every
+  * query dumped). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
@@ -21,6 +23,9 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     graft.core.Graft.quietNoisyLogs()
     new java.io.File(outDir).mkdirs()
+    // query -> "ExceptionClass: message" for every query that failed to
+    // dump, so an oracle miss has its cause on record beside the dump
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
@@ -28,20 +33,14 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // escaped as in the envelope: a tab or CR in an oracle's SQL must not
+    // make check.py's json.load fail and silently zero the whole compare
+    val q = graft.api.Envelope.esc _
+    Files.writeString(Paths.get(s"$outDir/verify_errors.json"),
+      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

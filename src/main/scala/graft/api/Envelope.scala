@@ -17,8 +17,10 @@ object Envelope {
 
   val Version = "0.7.0"
 
-  /** JSON string escape (same contract as the oracle dump in Verify). */
-  private def esc(s: String): String = "\"" + s.flatMap {
+  /** JSON string escape, shared by the envelope, the oracle dump in Verify
+    * and the bench summary.
+    */
+  private[graft] def esc(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

@@ -119,14 +119,11 @@ final class GraftApi(sources: DataFrame, metricDaily: DataFrame) {
 
   /** GET /api/forecast/daily (`routers/forecast.py:160-231`): generate via
     * the deterministic chain, strictly-future filter, normalize to the
-    * 7-row contract.
+    * 7-row contract — one per-series pass ([[Forecast.dailyContract]]).
     */
-  def forecastDaily(sourceName: String, metric: String, horizon: Int = 7): DataFrame = {
-    val md = filtered(sourceName, metric, None, None)
-    val fc = Forecast.holdLastForecast(Forecast.fetchSeries(md), math.max(horizon, 7))
-    Forecast.normalizeContract(Forecast.strictlyFuture(fc, md))
+  def forecastDaily(sourceName: String, metric: String, horizon: Int = 7): DataFrame =
+    Forecast.dailyContract(filtered(sourceName, metric, None, None), horizon)
       .orderBy("metric_date")
-  }
 
   /** POST /api/forecast/backtest (`routers/forecast.py` + M6). */
   def backtest(sourceName: String, metric: String, folds: Int = 5, horizon: Int = 7,

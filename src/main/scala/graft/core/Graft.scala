@@ -87,11 +87,17 @@ object Graft {
     * alternative: Catalyst folds the foldable key out of the partition
     * spec and the physical node still sees no partitioning (measured on
     * Spark 4.1, r15).
+    *
+    * The same holds for `ResolveWriteToStream`, which WARNs "adaptive.enabled
+    * is not supported in streaming DataFrames/Datasets" on every streaming
+    * query start: AQE is on for the batch work and the streaming engine
+    * turns it off for its own plans, so the line carries no information.
     */
   def quietNoisyLogs(): Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    try Seq("org.apache.spark.sql.execution.window.WindowExec",
+        "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream").foreach(
+      org.apache.logging.log4j.core.config.Configurator.setLevel(_,
+        org.apache.logging.log4j.Level.ERROR))
     catch { case _: Throwable => () } // log backend absent/changed: cosmetic
 }
 

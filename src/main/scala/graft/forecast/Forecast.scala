@@ -1,14 +1,20 @@
 package graft.forecast
 
-import graft.operators.{DailyKpi, Windows}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Forecasting chain (SURVEY.md §2.5) — the deterministic parts of the
-  * reference's forecaster, re-expressed as whole-DataFrame transforms so ALL
-  * series are produced in one distributed plan instead of the reference's
-  * per-series Python loop.
+  * reference's forecaster.
+  *
+  * The per-series rules (gap-fill + value fallback, hold-last, strictly
+  * future, the 7-row contract, the backtest and reliability folds) are plain
+  * functions over one series' day-sorted values, as in the reference's
+  * per-series loop; each DataFrame entry point runs them for every series in
+  * ONE `groupByKey(series).flatMapGroups` pass ([[perSeries]]). A series is
+  * tens to hundreds of rows, so re-deriving fold tables through joins and
+  * window ranks cost far more in Spark jobs than the arithmetic itself.
   *
   * The SARIMAX fit itself (`backend/app/services/forecast.py:68-92`) is not
   * numerically reproducible on the JVM; the reference degrades to a
@@ -19,14 +25,239 @@ import org.apache.spark.sql.functions._
   */
 object Forecast {
 
+  // ---- per-series rules: plain functions over one series, rows sorted by
+  //      day (epoch days). Nullable inputs are Options, with Spark's
+  //      avg/sum/count/min/max semantics: nulls are skipped, an all-null
+  //      aggregate is null.
+
+  /** A metric_daily row of one series: day (epoch days) and the nullable
+    * daily aggregates.
+    */
+  final case class MdDay(day: Int, sum: Option[Double], avg: Option[Double] = None,
+                         count: Option[Double] = None)
+
+  /** A forecast row of one series: target day (epoch days) and nullable
+    * yhat/bounds.
+    */
+  final case class Fc(day: Int, yhat: Option[Double], lower: Option[Double], upper: Option[Double])
+
+  /** A row of the 7-row forecast contract; `date` is None on pad rows. */
+  final case class ContractRow(day: Int, yhat: Double, lower: Double, upper: Double,
+                               date: Option[String], metricDate: String)
+
+  /** Rolling-origin backtest summary of one series ([[backtest]]). */
+  final case class BacktestScore(folds: Long, avgMae: Double, avgRmse: Double,
+                                 avgMape: Double, avgSmape: Double, score: Double)
+
+  /** Reliability summary of one series ([[reliability]]); the metric
+    * aggregates are None when every fold's metric is null.
+    */
+  final case class ReliabilityScore(folds: Long, mapeAgg: Option[Double], rmseAgg: Option[Double],
+                                    smapeAgg: Option[Double], instability: Option[Double], score: Int)
+
+  /** Value fallback chain (`forecast.py:33`, Python `or`): the first of
+    * value_sum, value_avg, value_count that is neither null nor 0.0, else 0.0
+    * — the per-row twin of [[graft.operators.DailyKpi.valueFallback]].
+    */
+  def fallbackValue(r: MdDay): Double =
+    Iterator(r.sum, r.avg, r.count).flatten.find(_ != 0.0).getOrElse(0.0)
+
+  /** Calendar-day gap fill of one day-sorted series: every day from the first
+    * to the last, missing days as 0.0 (rows sharing a day are all kept).
+    */
+  def gapFill(series: Seq[(Int, Double)]): Seq[(Int, Double)] =
+    if (series.isEmpty) series else {
+      val byDay = series.groupBy(_._1)
+      (series.head._1 to series.last._1).flatMap(d => byDay.getOrElse(d, Seq(d -> 0.0)))
+    }
+
+  /** Series builder rule (`forecast.py:22-37`): fallback chain, then gap fill. */
+  def dailyValues(md: Seq[MdDay]): Seq[(Int, Double)] = gapFill(md.map(r => r.day -> fallbackValue(r)))
+
+  /** Spark's `sequence(from, to)`: inclusive, stepping down when from > to. */
+  private def steps(from: Int, to: Int): Range = from to to by (if (from <= to) 1 else -1)
+
+  /** M2 hold-last rule for one day-sorted series (see [[holdLastForecast]]). */
+  def holdLastSeries(series: Seq[(Int, Option[Double])], horizon: Int, minPoints: Int = 14): Seq[Fc] =
+    if (series.isEmpty) Nil else {
+      val total = sumOpt(series.map(_._2))
+      val (lastDay, lastVal) = series.last
+      val allZero = total.exists(_ == 0.0)
+      val yhat = if (allZero) Some(0.0) else lastVal
+      val band = if (allZero) Some(0.0) else if (series.length < minPoints) lastVal else Some(0.0)
+      steps(1, horizon).map(step => Fc(lastDay + step, yhat, band, band))
+    }
+
+  /** M9 strictly-future rule (`routers/forecast.py:193-201`): rows after the
+    * series' last observed day, ascending, at most 7.
+    */
+  def strictlyFutureSeries(fc: Seq[Fc], lastObs: Int): Seq[Fc] =
+    fc.filter(_.day > lastObs).sortBy(_.day).take(7)
+
+  /** M8 contract rule for one series (see [[normalizeContract]]). */
+  def normalizeSeries(fc: Seq[Fc]): Seq[ContractRow] = {
+    def fin(v: Option[Double]): Double = v.filter(x => !x.isNaN && !x.isInfinite).getOrElse(0.0)
+    def iso(day: Int): String = java.time.LocalDate.ofEpochDay(day).toString
+    val kept = fc.sortBy(_.day).take(7).map { f =>
+      val y = fin(f.yhat); val lo = fin(f.lower); val hi = fin(f.upper)
+      ContractRow(f.day, y, math.min(math.min(lo, hi), y), math.max(math.max(lo, hi), y),
+        Some(iso(f.day)), iso(f.day) + "T00:00:00Z")
+    }
+    val pads = kept.lastOption.filter(_ => kept.length < 7).toSeq.flatMap { last =>
+      steps(1, 7 - kept.length).map { i =>
+        ContractRow(last.day + i, 0.0, 0.0, 0.0, None, iso(last.day + i) + "T00:00:00Z")
+      }
+    }
+    kept ++ pads
+  }
+
+  /** GET /api/forecast/daily for one day-sorted metric_daily series:
+    * [[dailyValues]], hold-last over max(horizon, 7) days, strictly future,
+    * 7-row contract.
+    */
+  def dailyContractSeries(md: Seq[MdDay], horizon: Int): Seq[ContractRow] =
+    if (md.isEmpty) Nil else {
+      val fc = holdLastSeries(dailyValues(md).map { case (d, v) => d -> Some(v) }, math.max(horizon, 7))
+      normalizeSeries(strictlyFutureSeries(fc, md.last.day))
+    }
+
+  /** M6 rule for one day-sorted metric_daily series (see [[backtest]]);
+    * None when no fold is valid.
+    */
+  def backtestSeries(md: Seq[MdDay], folds: Int = 5, horizon: Int = 7,
+                     windowN: Int = 90): Option[BacktestScore] = {
+    val tail = dailyValues(md).map(_._2).takeRight(math.max(0, windowN + folds * horizon))
+    val m = tail.length
+    val stats = steps(0, folds - 1).flatMap { t =>
+      val trainLen = m - (t + 1) * horizon
+      // break rule: train >= 8 and the naive value exists
+      if (trainLen < 8 || trainLen > m) None else {
+        val p = tail(trainLen - 1)
+        val test = tail.slice(trainLen, trainLen + horizon).toSeq
+        if (test.isEmpty) None
+        else Some((
+          mean(test.map(a => math.abs(a - p))),
+          math.sqrt(mean(test.map(a => StrictMath.pow(a - p, 2)))),
+          stableMean(test.map(a => math.abs(a - p) / math.max(math.abs(a), 1e-6)), 1e8) * 100.0,
+          mean(test.map { a =>
+            val d = math.abs(a) + math.abs(p)
+            math.abs(a - p) / (if (d == 0.0) 1.0 else d)
+          }) * 100.0))
+      }
+    }
+    if (stats.isEmpty) None else {
+      val avgMape = stableMean(stats.map(_._3), 1e8)
+      val avgSmape = mean(stats.map(_._4))
+      Some(BacktestScore(stats.length, mean(stats.map(_._1)), mean(stats.map(_._2)), avgMape, avgSmape,
+        math.max(0.0, sqlLeast(100.0, 100.0 - (avgMape + avgSmape) / 2.0))))
+    }
+  }
+
+  /** M7 rule for one day-sorted metric_daily series, value_sum only (see
+    * [[reliability]]); None when no fold is valid.
+    */
+  def reliabilitySeries(md: Seq[MdDay], days: Int = 90, folds: Int = 5,
+                        horizon: Int = 7): Option[ReliabilityScore] = {
+    val h = math.max(1, horizon)
+    val y = md.map(_.sum).takeRight(math.max(0, days))
+    val n = y.length
+    val effFolds = math.min(folds, math.max(n - (h + 1), 0))
+    val stats = steps(0, folds - 1).filter(_ < effFolds).flatMap { kf =>
+      val trainEnd = n - (effFolds - kf) * h
+      if (trainEnd < 1) None // "if not train: continue"
+      else {
+        val p = y(trainEnd - 1)
+        val pairs = y.slice(trainEnd, trainEnd + h).map(a => for (av <- a; pv <- p) yield (av, pv))
+        def term(f: (Double, Double) => Double) = pairs.map(_.map(f.tupled))
+        Some((
+          meanOpt(term((a, p) => StrictMath.pow(a - p, 2))).map(math.sqrt),
+          stableMeanOpt(term((a, p) => math.abs(a - p) / (math.abs(a) + 1e-9)), 1e6).map(_ * 100.0),
+          meanOpt(term((a, p) => 2.0 * math.abs(a - p) / (math.abs(a) + math.abs(p) + 1e-9))).map(_ * 100.0)))
+      }
+    }
+    if (stats.isEmpty) None else {
+      val mapes = stats.flatMap(_._2)
+      val mapeAgg = stableMeanOpt(stats.map(_._2), 1e6)
+      val instability =
+        if (stats.length >= 2) mapes.reduceOption(sqlGreatest).map(_ - mapes.reduce(sqlLeast)).map(_ / 10.0)
+        else Some(0.0)
+      // greatest/least skip nulls, so a null mape_agg scores 100
+      val raw = for (m <- mapeAgg; i <- instability) yield sqlLeast(100.0, 100.0 - m / 2.0 - i)
+      Some(ReliabilityScore(stats.length, mapeAgg, meanOpt(stats.map(_._1)), meanOpt(stats.map(_._3)),
+        instability, math.floor(math.max(0.0, raw.getOrElse(100.0))).toLong.toInt))
+    }
+  }
+
+  // Spark's double semantics: avg/sum over non-null values (null when there
+  // are none), least/greatest ordering NaN above every number
+  private def mean(xs: Seq[Double]): Double = xs.sum / xs.length
+  private def sumOpt(xs: Seq[Option[Double]]): Option[Double] =
+    if (xs.exists(_.isDefined)) Some(xs.flatten.sum) else None
+  private def meanOpt(xs: Seq[Option[Double]]): Option[Double] =
+    Some(xs.flatten).filter(_.nonEmpty).map(mean)
+  private def sqlLeast(a: Double, b: Double): Double = if (a.isNaN) b else if (b.isNaN) a else math.min(a, b)
+  private def sqlGreatest(a: Double, b: Double): Double = if (a.isNaN || b.isNaN) Double.NaN else math.max(a, b)
+
+  /** Row-level twin of [[stableAvg]]: each term floored at `scale` into an
+    * exact integer sum, so the mean does not depend on summation order.
+    */
+  private def stableMean(xs: Seq[Double], scale: Double): Double =
+    xs.map(x => BigInt(math.floor(x * scale).toLong)).sum.toDouble / scale / xs.length
+  private def stableMeanOpt(xs: Seq[Option[Double]], scale: Double): Option[Double] =
+    Some(xs.flatten).filter(_.nonEmpty).map(stableMean(_, scale))
+
+  // ---- the one distributed pass ----------------------------------------
+
+  /** Runs `rule` once per series: `df` grouped by `keys` in one
+    * `groupByKey(series).flatMapGroups` pass (the
+    * [[graft.anomaly.AnomalyService.iforestRouterScores]] shape). Each group
+    * reaches `rule` as (epoch day, nullable `valueCols` as doubles), sorted by
+    * `dayCol`; rows without a day are skipped. Every output row is prefixed
+    * with the series' key values; output fields named in `dates` carry epoch
+    * days and leave as DateType.
+    */
+  private def perSeries(df: DataFrame, keys: Seq[String], dayCol: String, valueCols: Seq[String],
+                        out: Seq[StructField], dates: Set[String] = Set.empty)
+                       (rule: Array[(Int, IndexedSeq[Option[Double]])] => Seq[Seq[Any]]): DataFrame = {
+    val in = df.select((keys.map(col) :+ unix_date(col(dayCol).cast("date")).as("__day")) ++
+        valueCols.map(c => col(c).cast("double")): _*)
+      .filter(col("__day").isNotNull)
+    val nk = keys.length
+    val keySchema = StructType(in.schema.take(nk))
+    val outSchema = StructType(keySchema ++ out)
+    in.groupByKey(r => Row.fromSeq(r.toSeq.take(nk)))(Encoders.row(keySchema))
+      .flatMapGroups { (key: Row, rows: Iterator[Row]) =>
+        val series = rows.map { r =>
+          (r.getInt(nk), (nk + 1 until r.length).map(i => if (r.isNullAt(i)) None else Some(r.getDouble(i))))
+        }.toArray.sortBy(_._1)
+        rule(series).iterator.map(o => Row.fromSeq(key.toSeq ++ o))
+      }(Encoders.row(outSchema))
+      .select(outSchema.fieldNames.toSeq.map(f =>
+        if (dates(f)) date_from_unix_date(col(f)).as(f) else col(f)): _*)
+  }
+
+  /** [[perSeries]] over metric_daily: each series as day-sorted [[MdDay]]s.
+    * Reading only value_sum (`valueCols`) leaves avg and count None.
+    */
+  private def perMdSeries(metricDaily: DataFrame, keys: Seq[String], out: Seq[StructField],
+                          dates: Set[String] = Set.empty,
+                          valueCols: Seq[String] = Seq("value_sum", "value_avg", "value_count"))
+                         (rule: Seq[MdDay] => Seq[Seq[Any]]): DataFrame =
+    perSeries(metricDaily, keys, "metric_date", valueCols, out, dates) { rows =>
+      rule(rows.toSeq.map { case (d, v) => MdDay(d, v(0), v.lift(1).flatten, v.lift(2).flatten) })
+    }
+
+  private def dbl(name: String) = StructField(name, DoubleType)
+  private def nullable(v: Option[Double]): Any = v.getOrElse(null)
+
   /** Series builder (`forecast.py:22-37`): metric_daily -> per-series daily
     * values with the falsy-0.0 fallback chain, gap-filled to calendar days.
     */
-  def fetchSeries(metricDaily: DataFrame, keys: Seq[String] = Seq("source_id", "metric")): DataFrame = {
-    val withValue = metricDaily.withColumn("value",
-      DailyKpi.valueFallback(Seq(col("value_sum"), col("value_avg"), col("value_count").cast("double"))))
-    Windows.gapFillDaily(withValue.select((keys.map(col) :+ col("metric_date") :+ col("value")): _*), keys)
-  }
+  def fetchSeries(metricDaily: DataFrame, keys: Seq[String] = Seq("source_id", "metric")): DataFrame =
+    perMdSeries(metricDaily, keys, Seq(StructField("metric_date", IntegerType), dbl("value")),
+        Set("metric_date")) { md =>
+      dailyValues(md).map { case (d, v) => Seq[Any](d, v) }
+    }
 
   /** M2 — deterministic forecast chain for horizon `h`, per series:
     *   - all-zero series        => zeros, bounds zero         (forecast.py:46-52)
@@ -37,24 +268,13 @@ object Forecast {
     */
   def holdLastForecast(series: DataFrame, horizon: Int, minPoints: Int = 14,
                        keys: Seq[String] = Seq("source_id", "metric"),
-                       modelVersion: String = "sarimax-0.1"): DataFrame = {
-    val k = keys.map(col)
-    val per = series.groupBy(k: _*).agg(
-      count(lit(1)).as("n"),
-      sum(col("value")).as("total"),
-      max_by(col("value"), col("metric_date")).as("last_val"),
-      max(col("metric_date")).as("last_date"))
-    val stepped = per.select(k ++ Seq(col("n"), col("total"), col("last_val"), col("last_date"),
-      explode(sequence(lit(1), lit(horizon))).as("step")): _*)
-    stepped.select(k ++ Seq(
-      date_add(col("last_date"), col("step")).as("target_date"),
-      when(col("total") === 0.0, 0.0).otherwise(col("last_val")).as("yhat"),
-      when(col("total") === 0.0, 0.0)
-        .when(col("n") < minPoints, col("last_val")).otherwise(0.0).as("yhat_lower"),
-      when(col("total") === 0.0, 0.0)
-        .when(col("n") < minPoints, col("last_val")).otherwise(0.0).as("yhat_upper"),
-      lit(modelVersion).as("model_version")): _*)
-  }
+                       modelVersion: String = "sarimax-0.1"): DataFrame =
+    perSeries(series, keys, "metric_date", Seq("value"),
+        Seq(StructField("target_date", IntegerType), dbl("yhat"), dbl("yhat_lower"), dbl("yhat_upper"),
+          StructField("model_version", StringType)), Set("target_date")) { rows =>
+      holdLastSeries(rows.map { case (d, v) => d -> v(0) }.toSeq, horizon, minPoints).map(f =>
+        Seq[Any](f.day, nullable(f.yhat), nullable(f.lower), nullable(f.upper), modelVersion))
+    }
 
   /** M3 — moving-average fallback forecaster with residual-sd bands
     * (the unmounted seasonal router, `backend/app/schemas/forecast.py:122-143`):
@@ -118,8 +338,7 @@ object Forecast {
     val k = keys.map(col)
     // the series feeds THREE branches (per-series aggregates, lag residuals,
     // tail rows); materialize once so each branch doesn't re-run the whole
-    // upstream (events scan -> daily agg -> gap-fill) — same measured
-    // pattern as [[backtest]]/[[reliability]]
+    // upstream (events scan -> daily agg -> gap-fill)
     val series = series0.localCheckpoint(true)
     val wDesc = Window.partitionBy(k: _*).orderBy(col("metric_date").desc)
     val wAsc = Window.partitionBy(k: _*).orderBy(col("metric_date").asc)
@@ -157,7 +376,8 @@ object Forecast {
 
   // ---- M5: error metrics (forecast.py:134-156) as aggregate columns over
   //      (actual, pred) pairs. Two epsilon conventions exist in the
-  //      reference; both are kept (see reliabilityFolds for the 1e-9 one).
+  //      reference; both are kept (see reliabilitySeries for the 1e-9 one,
+  //      whose terms reach ~5e12 and are therefore floored at 1e-6, not 1e-8).
   /** Order-independent mean: terms summed as DECIMAL(38,18) so partial-agg /
     * shuffle order can't perturb the result. MAPE terms over gap-filled
     * series reach ~1e8 (eps denominators on filled zeros), where plain double
@@ -165,13 +385,6 @@ object Forecast {
     */
   private[graft] def stableAvg(term: Column): Column =
     sum(floor(term * 1e8).cast("decimal(38,0)")).cast("double") / 1e8 / count(term)
-
-  /** Coarser 1e-6 variant for the reliability path, whose eps=1e-9
-    * denominators produce terms up to ~5e12 — 1e8 scaling would overflow the
-    * per-term int64 floor there.
-    */
-  private[graft] def stableAvg6(term: Column): Column =
-    sum(floor(term * 1e6).cast("decimal(38,0)")).cast("double") / 1e6 / count(term)
 
   def mae(a: Column, p: Column): Column = avg(abs(a - p))
   def rmse(a: Column, p: Column): Column = sqrt(avg(pow(a - p, 2)))
@@ -188,54 +401,16 @@ object Forecast {
     * window_n + folds*horizon points; fold t trains on all but the last
     * (t+1)*horizon points and predicts the next block with the last train
     * value; fold valid while train >= 8 and test is a full block;
-    * score = clamp(100 - (avg_mape+avg_smape)/2, 0, 100).
-    *
-    * Pure relational: every series is backtested in one plan (the reference
-    * loops fold-by-fold in the driver).
+    * score = clamp(100 - (avg_mape+avg_smape)/2, 0, 100). Series without a
+    * valid fold emit no row. Rule: [[backtestSeries]].
     */
   def backtest(metricDaily: DataFrame, folds: Int = 5, horizon: Int = 7, windowN: Int = 90,
-               keys: Seq[String] = Seq("source_id", "metric")): DataFrame = {
-    val k = keys.map(col)
-    val need = windowN + folds * horizon
-    val full = fetchSeries(metricDaily, keys)
-    // tail(need) then re-rank chronologically
-    val wDesc = Window.partitionBy(k: _*).orderBy(col("metric_date").desc)
-    val wAsc = Window.partitionBy(k: _*).orderBy(col("metric_date").asc)
-    // the tailed series feeds THREE plan branches (fold table + two joins);
-    // without materialization each branch re-runs the whole upstream
-    // (events scan -> daily aggregation -> windows). The tail is tiny
-    // (series x <=need rows), so one eager local checkpoint beats three
-    // upstream recomputes — measured 3.0s -> ~1.6s at sf0.1.
-    val tailed = full.withColumn("rd", row_number().over(wDesc)).filter(col("rd") <= need)
-      .withColumn("rn", row_number().over(wAsc))
-      .withColumn("m", count(lit(1)).over(Window.partitionBy(k: _*)))
-      .localCheckpoint(true)
-    // fold table: one row per (series, t) with train_len = m - (t+1)*h
-    val foldTbl = tailed.select(k :+ col("m"): _*).distinct()
-      .select(k ++ Seq(col("m"), explode(sequence(lit(0), lit(folds - 1))).as("t")): _*)
-      .withColumn("train_len", col("m") - (col("t") + 1) * horizon)
-      .filter(col("train_len") >= 8) // break rule: train>=8 and full test block
-    // the naive forecast for fold t = value at rn == train_len
-    val lastVals = foldTbl.join(tailed.select(k ++ Seq(col("rn"), col("value").as("yhat")): _*),
-      keys, "inner").filter(col("rn") === col("train_len")).drop("rn")
-    // test rows: rn in (train_len, train_len + h]
-    val testRows = lastVals.join(
-      tailed.select(k ++ Seq(col("rn"), col("value").as("actual")): _*), keys, "inner")
-      .filter(col("rn") > col("train_len") && col("rn") <= col("train_len") + horizon)
-    val foldStats = testRows.groupBy(k :+ col("t"): _*).agg(
-      mae(col("actual"), col("yhat")).as("mae"),
-      rmse(col("actual"), col("yhat")).as("rmse"),
-      mape(col("actual"), col("yhat")).as("mape"),
-      smape(col("actual"), col("yhat")).as("smape"))
-    foldStats.groupBy(k: _*).agg(
-      count(lit(1)).as("folds"),
-      avg(col("mae")).as("avg_mae"),
-      avg(col("rmse")).as("avg_rmse"),
-      stableAvg(col("mape")).as("avg_mape"),
-      avg(col("smape")).as("avg_smape"))
-      .withColumn("score",
-        greatest(lit(0.0), least(lit(100.0), lit(100.0) - (col("avg_mape") + col("avg_smape")) / 2.0)))
-  }
+               keys: Seq[String] = Seq("source_id", "metric")): DataFrame =
+    perMdSeries(metricDaily, keys, StructField("folds", LongType, nullable = false) +:
+        Seq("avg_mae", "avg_rmse", "avg_mape", "avg_smape", "score").map(dbl)) { md =>
+      backtestSeries(md, folds, horizon, windowN).toSeq.map(b =>
+        Seq[Any](b.folds, b.avgMae, b.avgRmse, b.avgMape, b.avgSmape, b.score))
+    }
 
   /** M7 — persisted reliability scorer
     * (`backend/app/services/forecast_reliability.py:57-158`): last `days`
@@ -243,96 +418,46 @@ object Forecast {
     * to n-(horizon+1), naive last-train-value predictor, eps=1e-9 metric
     * variants (smape doubled numerator), instability=(max_mape-min_mape)/10,
     * score = int(clamp(100 - mape_agg/2 - instability, 0, 100)).
+    * Rule: [[reliabilitySeries]].
     */
   def reliability(metricDaily: DataFrame, days: Int = 90, folds: Int = 5, horizon: Int = 7,
-                  keys: Seq[String] = Seq("source_id", "metric")): DataFrame = {
-    val k = keys.map(col)
-    val h = math.max(1, horizon)
-    val wDesc = Window.partitionBy(k: _*).orderBy(col("metric_date").desc)
-    val wAsc = Window.partitionBy(k: _*).orderBy(col("metric_date").asc)
-    // same multi-branch reuse as [[backtest]] — materialize the small tail
-    val series = metricDaily
-      .select(k ++ Seq(col("metric_date"), col("value_sum").cast("double").as("y")): _*)
-      .withColumn("rd", row_number().over(wDesc)).filter(col("rd") <= days)
-      .withColumn("rn", row_number().over(wAsc))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(k: _*)))
-      .localCheckpoint(true)
-    val foldTbl = series.select(k :+ col("n"): _*).distinct()
-      .withColumn("eff_folds", least(lit(folds), greatest(col("n") - (h + 1), lit(0))))
-      .select(k ++ Seq(col("n"), col("eff_folds"), explode(sequence(lit(0), lit(folds - 1))).as("kf")): _*)
-      .filter(col("kf") < col("eff_folds"))
-      .withColumn("train_end", col("n") - (col("eff_folds") - col("kf")) * h)
-      .filter(col("train_end") >= 1) // "if not train: continue"
-    val lastVals = foldTbl.join(series.select(k ++ Seq(col("rn"), col("y").as("yhat")): _*), keys)
-      .filter(col("rn") === col("train_end")).drop("rn")
-    val testRows = lastVals.join(series.select(k ++ Seq(col("rn"), col("y").as("a")): _*), keys)
-      .filter(col("rn") > col("train_end") && col("rn") <= col("train_end") + h)
-    val foldStats = testRows.groupBy(k :+ col("kf"): _*).agg(
-      avg(abs(col("a") - col("yhat"))).as("mae"),
-      sqrt(avg(pow(col("a") - col("yhat"), 2))).as("rmse"),
-      (stableAvg6(abs(col("a") - col("yhat")) / (abs(col("a")) + 1e-9)) * 100.0).as("mape"),
-      (avg(lit(2.0) * abs(col("a") - col("yhat")) / (abs(col("a")) + abs(col("yhat")) + 1e-9)) * 100.0).as("smape"),
-      avg(col("yhat") - col("a")).as("bias"))
-    foldStats.groupBy(k: _*).agg(
-      count(lit(1)).as("folds"),
-      stableAvg6(col("mape")).as("mape_agg"),
-      avg(col("rmse")).as("rmse_agg"),
-      avg(col("smape")).as("smape_agg"),
-      max(col("mape")).as("max_mape"),
-      min(col("mape")).as("min_mape"))
-      .withColumn("instability",
-        when(col("folds") >= 2, (col("max_mape") - col("min_mape")) / 10.0).otherwise(0.0))
-      .withColumn("score",
-        floor(greatest(lit(0.0), least(lit(100.0),
-          lit(100.0) - col("mape_agg") / 2.0 - col("instability")))).cast("int"))
-      .drop("max_mape", "min_mape")
-  }
+                  keys: Seq[String] = Seq("source_id", "metric")): DataFrame =
+    perMdSeries(metricDaily, keys, StructField("folds", LongType, nullable = false) +:
+        Seq("mape_agg", "rmse_agg", "smape_agg", "instability").map(dbl) :+
+        StructField("score", IntegerType), valueCols = Seq("value_sum")) { md =>
+      reliabilitySeries(md, days, folds, horizon).toSeq.map(r =>
+        Seq[Any](r.folds, nullable(r.mapeAgg), nullable(r.rmseAgg), nullable(r.smapeAgg),
+          nullable(r.instability), r.score))
+    }
+
+  private val contractFields = Seq(StructField("target_date", IntegerType),
+    dbl("yhat"), dbl("yhat_lower"), dbl("yhat_upper"),
+    StructField("date", StringType), StructField("metric_date", StringType))
+
+  private def contractRow(c: ContractRow): Seq[Any] =
+    Seq[Any](c.day, c.yhat, c.lower, c.upper, c.date.orNull, c.metricDate)
 
   /** M8+M9 — forecast contract normalizer
     * (`backend/app/routers/forecast.py:109-154`): order bounds (swap), widen
     * to include yhat, non-finite -> 0, sort ascending, trim to 7 rows, pad
     * with zero rows continuing the date sequence; `metric_date` as UTC
     * midnight `...T00:00:00Z`; legacy `date` only on non-padded rows.
+    * Rule: [[normalizeSeries]].
     */
-  def normalizeContract(forecast: DataFrame, keys: Seq[String] = Seq("source_id", "metric")): DataFrame = {
-    val k = keys.map(col)
-    def fin(c: Column): Column =
-      when(c.isNull || c.isNaN || abs(c) === Double.PositiveInfinity, 0.0).otherwise(c)
-    val y = fin(col("yhat")); val lo0 = fin(col("yhat_lower")); val hi0 = fin(col("yhat_upper"))
-    val lo1 = least(lo0, hi0); val hi1 = greatest(lo0, hi0)
-    val ordered = forecast
-      .withColumn("__y", y)
-      .withColumn("__lo", least(lo1, y))
-      .withColumn("__hi", greatest(hi1, y))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(k: _*).orderBy(col("target_date").asc)))
-      .filter(col("__rn") <= 7)
-    val counted = ordered.withColumn("__cnt", count(lit(1)).over(Window.partitionBy(k: _*)))
-    val kept = counted.select(k ++ Seq(col("target_date"), col("__y").as("yhat"),
-      col("__lo").as("yhat_lower"), col("__hi").as("yhat_upper"),
-      date_format(col("target_date"), "yyyy-MM-dd").as("date")): _*)
-    val pads = counted.filter(col("__rn") === col("__cnt") && col("__cnt") < 7)
-      .select(k ++ Seq(col("target_date").as("__last"), col("__cnt")): _*)
-      .select(k ++ Seq(explode(sequence(lit(1), (lit(7) - col("__cnt")).cast("int"))).as("__i"), col("__last")): _*)
-      .select(k ++ Seq(date_add(col("__last"), col("__i").cast("int")).as("target_date"),
-        lit(0.0).as("yhat"), lit(0.0).as("yhat_lower"), lit(0.0).as("yhat_upper"),
-        lit(null).cast("string").as("date")): _*)
-    kept.unionByName(pads)
-      .withColumn("metric_date",
-        concat(date_format(col("target_date"), "yyyy-MM-dd"), lit("T00:00:00Z")))
-  }
+  def normalizeContract(forecast: DataFrame, keys: Seq[String] = Seq("source_id", "metric")): DataFrame =
+    perSeries(forecast, keys, "target_date", Seq("yhat", "yhat_lower", "yhat_upper"),
+        contractFields, Set("target_date")) { rows =>
+      normalizeSeries(rows.map { case (d, v) => Fc(d, v(0), v(1), v(2)) }.toSeq).map(contractRow)
+    }
 
-  /** M9 — strictly-future filter (`routers/forecast.py:193-201`): keep rows
-    * with target_date after the per-series last observed date, cap at 7.
+  /** GET /api/forecast/daily over metric_daily: every series through
+    * [[dailyContractSeries]] (fetchSeries -> holdLastForecast -> strictly
+    * future -> normalizeContract) in one pass; same columns as
+    * [[normalizeContract]].
     */
-  def strictlyFuture(forecast: DataFrame, metricDaily: DataFrame,
-                     keys: Seq[String] = Seq("source_id", "metric")): DataFrame = {
-    val lastObs = metricDaily.groupBy(keys.map(col): _*).agg(max(col("metric_date")).as("__last_obs"))
-    forecast.join(lastObs, keys, "left")
-      .filter(col("__last_obs").isNull || col("target_date") > col("__last_obs"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(keys.map(col): _*).orderBy(col("target_date").asc)))
-      .filter(col("__rn") <= 7)
-      .drop("__rn", "__last_obs")
-  }
+  def dailyContract(metricDaily: DataFrame, horizon: Int = 7,
+                    keys: Seq[String] = Seq("source_id", "metric")): DataFrame =
+    perMdSeries(metricDaily, keys, contractFields, Set("target_date")) { md =>
+      dailyContractSeries(md, horizon).map(contractRow)
+    }
 }

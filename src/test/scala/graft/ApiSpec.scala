@@ -47,6 +47,17 @@ class ApiSpec extends SparkSpec {
     assert(h.getAs[Double]("mape") >= 0.0)
   }
 
+  test("facade reliability and forecastDaily equal the DataFrame-level results for the series") {
+    val one = col("source_id") === 1L && col("metric") === "events_total"
+    assert(api.reliability("demo", "events_total").collect().toSeq ==
+      Forecast.reliability(md).filter(one).collect().toSeq)
+    val daily = api.forecastDaily("demo", "events_total")
+    val frame = Forecast.normalizeContract(Forecast.holdLastForecast(Forecast.fetchSeries(md), 7))
+      .filter(one).orderBy("metric_date")
+    assert(daily.columns.toSeq == frame.columns.toSeq)
+    assert(daily.collect().toSeq == frame.collect().toSeq)
+  }
+
   test("exportCsv has the fixed reference header order") {
     val cols = api.exportCsv("demo", "events_total").columns.toSeq
     assert(cols == Seq("metric_date", "source_id", "metric", "value", "value_count", "value_sum", "value_avg"))

@@ -102,6 +102,24 @@ class BenchPriorSpec extends AnyFunSuite {
     assert(Bench.adjudicatedMedian(3.0, None) == 3.0)
   }
 
+  test("a throwing query lands in failed, not in the totals") {
+    val t = new Bench.Timings
+    t.time("q01_ok")(Thread.sleep(5))
+    t.time("q02_bad") { Thread.sleep(5); throw new IllegalStateException("boom") }
+    t.time("q01_ok")(())
+    val results = t.results(Seq("q01_ok", "q02_bad"))
+    assert(results.map(_._1) == Seq("q01_ok"))
+    assert(results.head._2.length == 2, "both successful passes of q01 are samples")
+    assert(t.failed.toMap == Map("q02_bad" -> "java.lang.IllegalStateException: boom"))
+    val (mn, md, mx) = Bench.totals(results)
+    assert(mn == results.head._2.min && md == results.head._2.head && mx == results.head._2.max)
+    val line = Bench.driverLine(1, "/s", 2, Seq("queries"), Seq.empty,
+      results.map { case (k, ts) => k.takeWhile(_ != '_') -> ts.head }.toMap, "{}", Seq.empty,
+      (_, _) => 0.0, 0.0, 0L, mn, md, mx, 0.0, 1.0, 0.0, failed = Seq("q02"))
+    assert(line.contains("\"n_failed\":1,\"failed\":[\"q02\"]"))
+    assert(!line.contains("\"q02\":"), "a failed query has no timing in the line")
+  }
+
   // ---- r15: the incremental-emission protocol (the r14 driver artifact
   // was rc=124 with nothing parseable — these pin the fix) ----------------
 

@@ -139,6 +139,41 @@ class ForecastSpec extends SparkSpec {
     assert(got.getAs[Int]("score") == score)
   }
 
+  test("the per-series pass returns the pure rules' rows, per series, null value_sum included") {
+    import graft.forecast.Forecast.MdDay
+    val day0 = java.time.LocalDate.of(2025, 3, 1)
+    // two series; series 2 has gap days, a 0.0 sum that falls back to avg, and null sums
+    val rows = (0 until 40).flatMap { i =>
+      val d = java.sql.Date.valueOf(day0.plusDays(i))
+      Seq((1L, "a", d, Option(10.0 + (i % 6)), Option(2.0), 3L)) ++
+        (if (i % 9 == 4) Nil
+         else Seq((2L, "b", d, if (i % 11 == 3) None else Some(if (i % 5 == 0) 0.0 else 1.0 + i),
+           Option(7.0), 2L)))
+    }
+    val md = rows.toDF("source_id", "metric", "metric_date", "value_sum", "value_avg", "value_count")
+    def pure(sid: Long) = rows.filter(_._1 == sid).map { case (_, _, d, s, a, c) =>
+      MdDay(d.toLocalDate.toEpochDay.toInt, s, a, Some(c.toDouble)) }
+    val bt = Forecast.backtest(md).orderBy("source_id").collect()
+    val rel = Forecast.reliability(md).orderBy("source_id").collect()
+    for ((sid, i) <- Seq(1L, 2L).zipWithIndex) {
+      val b = Forecast.backtestSeries(pure(sid)).get
+      assert(bt(i).getAs[Long]("source_id") == sid)
+      assert(bt(i).toSeq.drop(2) == Seq(b.folds, b.avgMae, b.avgRmse, b.avgMape, b.avgSmape, b.score))
+      val r = Forecast.reliabilitySeries(pure(sid)).get
+      assert(rel(i).toSeq.drop(2) == Seq(r.folds, r.mapeAgg.get, r.rmseAgg.get, r.smapeAgg.get,
+        r.instability.get, r.score))
+      val fc = Forecast.dailyContract(md).filter(col("source_id") === sid).orderBy("target_date").collect()
+      assert(fc.map(_.getAs[String]("metric_date")).toSeq ==
+        Forecast.dailyContractSeries(pure(sid), 7).map(_.metricDate))
+      assert(fc.map(_.getAs[Double]("yhat")).toSeq == Forecast.dailyContractSeries(pure(sid), 7).map(_.yhat))
+    }
+    assert(Forecast.fetchSeries(md).filter(col("source_id") === 2L).count() == 40)
+    assert(bt.head.schema.map(_.dataType.simpleString) ==
+      Seq("bigint", "string", "bigint", "double", "double", "double", "double", "double"))
+    assert(rel.head.schema.map(_.dataType.simpleString) ==
+      Seq("bigint", "string", "bigint", "double", "double", "double", "double", "int"))
+  }
+
   test("ArimaLite: deterministic, trend-following, ordered bands") {
     val y = Array.tabulate(30)(i => 2.0 * i + 5.0)
     val f1 = ArimaLite.forecast(y, 7)
