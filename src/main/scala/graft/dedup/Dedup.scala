@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.store.BatchStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -442,8 +443,7 @@ object Dedup {
                          textCol: String = "text", idCol: String = "doc_id"): Unit = {
     val spark = benchDocs.sparkSession
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     // build semantics: a rebuild replaces the whole store, appends and all
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     val sh = wordShingles(benchDocs, n, textCol, idCol).select(col("shingle")).distinct()
@@ -453,9 +453,8 @@ object Dedup {
     Seq((n, k, m)).toDF("n", "k", "m")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/config")
     // format stamp — see [[decontamFormatMarker]]
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(path, decontamFormatMarker), true)
-    try out.write("shingles=complete-sets\n".getBytes("UTF-8")) finally out.close()
+    BatchStore.writeFile(fs, new org.apache.hadoop.fs.Path(path, decontamFormatMarker),
+      "shingles=complete-sets\n")
   }
 
   /** Store-format stamp for the decontamination store. Appends originally
@@ -501,11 +500,10 @@ object Dedup {
                           textCol: String = "text", idCol: String = "doc_id"): Boolean = {
     require(appendId != 0L, "appendId 0 is reserved for the initial build")
     val spark = benchDocs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "decontam-append") {
       Seq("shingles", "words", "config", "retired").foreach(h =>
-        graft.similarity.Similarity.recoverDir(fs, s"$path/$h"))
+        BatchStore.recover(fs, s"$path/$h"))
       if (graft.store.Ledger.landed(fs, s"$path/shingles", appendId)) false
       else {
         require(!readDecontamRetirements(spark, fs, path).contains(appendId),
@@ -513,21 +511,17 @@ object Dedup {
         val cfg = spark.read.parquet(s"$path/config").head()
         val (n, k, m) = (cfg.getAs[Int]("n"), cfg.getAs[Int]("k"), cfg.getAs[Int]("m"))
         // stage the delta once, then derive its bloom bits from the staged
-        // parquet (one computation, durable across the two publishes)
-        val staging = new org.apache.hadoop.fs.Path(s"$path/shingles/.staging-$appendId")
-        fs.delete(staging, true)
-        wordShingles(benchDocs, n, textCol, idCol).select(col("shingle")).distinct()
-          .write.mode("overwrite").parquet(staging.toString)
-        val mergedWords = graft.sketch.Sketches.bloomMergeWords(
-          spark.read.parquet(s"$path/words"),
-          graft.sketch.Sketches.bloomWords(
-            spark.read.parquet(staging.toString), "shingle", k, m))
-        val wordsStaging = new org.apache.hadoop.fs.Path(s"$path/.words-append")
-        fs.delete(wordsStaging, true)
-        mergedWords.write.mode("overwrite").parquet(wordsStaging.toString)
-        graft.similarity.Similarity.swapDir(fs, wordsStaging, s"$path/words")
-        val ledger = new org.apache.hadoop.fs.Path(s"$path/shingles/batch=$appendId")
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
+        // parquet (one computation, durable across the two publishes); the
+        // words swap lands before the shingles publish (the commit marker)
+        BatchStore.publish(fs, s"$path/shingles", appendId) { staging =>
+          wordShingles(benchDocs, n, textCol, idCol).select(col("shingle")).distinct()
+            .write.mode("overwrite").parquet(staging)
+          val mergedWords = graft.sketch.Sketches.bloomMergeWords(
+            spark.read.parquet(s"$path/words"),
+            graft.sketch.Sketches.bloomWords(spark.read.parquet(staging), "shingle", k, m))
+          BatchStore.replace(fs, s"$path/words", "append")(
+            mergedWords.write.mode("overwrite").parquet(_))
+        }
         true
       }
     }
@@ -555,17 +549,14 @@ object Dedup {
   def retireDecontamBench(spark: org.apache.spark.sql.SparkSession, path: String,
                           benchBatches: Seq[Long], retireId: Long): Boolean = {
     require(benchBatches.nonEmpty, "nothing to retire")
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "decontam-retire") {
       require(fs.exists(new org.apache.hadoop.fs.Path(path, decontamFormatMarker)),
         s"$path has no '$decontamFormatMarker' stamp: it was written under the " +
         "delta-append format (or predates the stamp), so its batches are not " +
         "complete per-suite shingle sets and batch-level retirement would " +
         "silently drop shingles shared with live suites — rebuild the store first")
-      Seq("shingles", "retired").foreach(h =>
-        graft.similarity.Similarity.recoverDir(fs, s"$path/$h"))
-      val ledger = new org.apache.hadoop.fs.Path(s"$path/retired/batch=$retireId")
+      Seq("shingles", "retired").foreach(h => BatchStore.recover(fs, s"$path/$h"))
       if (graft.store.Ledger.landed(fs, s"$path/retired", retireId)) false
       else {
         // landed-by-rule counts as published: a compaction-vacuumed
@@ -574,11 +565,8 @@ object Dedup {
           graft.store.Ledger.landed(fs, s"$path/shingles", b),
           s"cannot retire unpublished bench batch $b"))
         import spark.implicits._
-        val staging = new org.apache.hadoop.fs.Path(s"$path/retired/.staging-$retireId")
-        fs.delete(staging, true)
-        benchBatches.toDF("rbatch").coalesce(1)
-          .write.mode("overwrite").parquet(staging.toString)
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
+        BatchStore.publish(fs, s"$path/retired", retireId)(
+          benchBatches.toDF("rbatch").coalesce(1).write.mode("overwrite").parquet(_))
         true
       }
     }
@@ -590,49 +578,16 @@ object Dedup {
     */
   private[graft] def readDecontamRetirements(
       spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Set[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/retired")
-    if (!fs.exists(dir)) return Set.empty
-    // list PUBLISHED entries only: a crashed retire's `.staging-<rid>`
-    // leftover is invisible to Spark's reader but not to a recursive
-    // file listing, so an existence check alone would send the read at a
-    // dir with zero visible files (schema-inference failure on every
-    // PROBE); blanked tombstones are file-less and skipped the same way
-    val published = fs.listStatus(dir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => fs.listFiles(s.getPath, true).hasNext)
-    if (published.isEmpty) Set.empty
-    else spark.read.parquet(published.map(_.getPath.toString).toIndexedSeq: _*)
-      .select(col("rbatch")).collect().map(_.getLong(0)).toSet
-  }
-
-  /** True iff the dir holds at least one DATA file — underscore/dot
-    * markers (`_SUCCESS`, the relocated-base `_base`, staging leftovers)
-    * don't count. The raw has-any-file check is wrong for store dirs: a
-    * marker-only dir passes it, and `spark.read.parquet` then finds zero
-    * data files and throws on schema inference.
-    */
-  private def dataBearing(fs: org.apache.hadoop.fs.FileSystem,
-                          d: org.apache.hadoop.fs.Path): Boolean = {
-    val it = fs.listFiles(d, true)
-    while (it.hasNext) {
-      val nm = it.next().getPath.getName
-      if (!nm.startsWith("_") && !nm.startsWith(".")) return true
-    }
-    false
-  }
+      fs: org.apache.hadoop.fs.FileSystem, path: String): Set[Long] =
+    BatchStore.readRetirements(spark, fs, path)
+      .fold(Set.empty[Long])(_.select(col("rbatch")).collect().map(_.getLong(0)).toSet)
 
   /** The data-bearing `batch=` dirs of the live shingle half (tombstones,
     * marker-only dirs, and batches named by a pending retirement skipped).
     */
   private def liveDecontamBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
                                     dir: String, retired: Set[Long]): Seq[String] =
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => dataBearing(fs, s.getPath))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .filterNot(retired).sorted
-      .map(b => s"$dir/batch=$b").toIndexedSeq
+    BatchStore.dataIds(fs, dir).filterNot(retired).map(b => s"$dir/batch=$b")
 
   /** The LIVE shingle half: every published batch except those named by a
     * pending retirement ledger entry — pure partition pruning, the
@@ -645,9 +600,8 @@ object Dedup {
   def liveDecontamShingles(spark: org.apache.spark.sql.SparkSession,
                            path: String): DataFrame = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    val dir = graft.similarity.Similarity.activeDir(fs, s"$path/shingles")
+    val fs = BatchStore.fs(spark, path)
+    val dir = BatchStore.active(fs, s"$path/shingles")
     val retired = readDecontamRetirements(spark, fs, path)
     val live = liveDecontamBatchDirs(fs, dir, retired)
     if (live.isEmpty) Seq.empty[String].toDF("shingle")
@@ -656,7 +610,7 @@ object Dedup {
 
   /** Maintenance half: collapse the shingle store's accumulated `batch=`
     * dirs into one (rows preserved, ledger tombstoned — the
-    * [[graft.similarity.Similarity.compactBatchStore]] contract); the
+    * [[BatchStore.compact]] contract); the
     * words table is a fixed-size sketch rewritten whole on every append,
     * so only the shingle half accumulates files.
     *
@@ -677,13 +631,12 @@ object Dedup {
     * because the still-unblanked ledger forces the full sequence again.
     */
   def compactDecontamStore(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "decontam-compact") {
       val retired = readDecontamRetirements(spark, fs, path)
       // (1) apply: blank each rotated batch dir to a tombstone. mkdirs
       // runs UNCONDITIONALLY — a crash between delete and mkdirs leaves
-      // the dir missing, and compactBatchStore only re-tombstones ids it
+      // the dir missing, and BatchStore.compact only re-tombstones ids it
       // can see, so without the heal a rotated id would become reusable
       // after the ledger blanks
       retired.foreach { b =>
@@ -694,10 +647,8 @@ object Dedup {
       // (2) merge survivors; with a rotation pending, force the rewrite
       // and land at the max live id (rotated ids are tombstones now, so
       // dataIds can't name one)
-      val n = graft.similarity.Similarity.compactBatchStore(
-        spark, s"$path/shingles", Seq.empty,
-        baseAtMaxId = retired.nonEmpty, forceRewrite = retired.nonEmpty,
-        vacuumLedger = true)
+      val n = BatchStore.compact(spark, s"$path/shingles",
+        retiring = retired.nonEmpty, vacuumLedger = true)
       if (retired.nonEmpty) {
         // (3) Bloom rebuild from survivors. Survivors = the DATA-BEARING
         // batch dirs only (step 1 already tombstoned the rotated ids): a
@@ -715,20 +666,12 @@ object Dedup {
           if (liveDirs.nonEmpty)
             spark.read.parquet(liveDirs: _*).select(col("shingle"))
           else Seq.empty[String].toDF("shingle") // every suite rotated out
-        val wordsStaging = new org.apache.hadoop.fs.Path(s"$path/.words-rebuild")
-        fs.delete(wordsStaging, true)
-        graft.sketch.Sketches.bloomWords(survivors, "shingle", k, m)
-          .write.mode("overwrite").parquet(wordsStaging.toString)
-        graft.similarity.Similarity.swapDir(fs, wordsStaging, s"$path/words")
-        // (4) blank the applied ledger. A crash between a delete and its
-        // mkdirs here is BENIGN (unlike step 1's): the lost ledger
-        // tombstone at worst lets the same rid re-land naming
-        // already-blanked batches — readers exclude tombstones (empty
-        // either way) and the next compaction re-blanks.
-        val rdir = new org.apache.hadoop.fs.Path(s"$path/retired")
-        if (fs.exists(rdir)) fs.listStatus(rdir)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-          .foreach { s => fs.delete(s.getPath, true); fs.mkdirs(s.getPath) }
+        BatchStore.replace(fs, s"$path/words", "rebuild")(
+          graft.sketch.Sketches.bloomWords(survivors, "shingle", k, m)
+            .write.mode("overwrite").parquet(_))
+        // (4) blank the applied ledger; a crash midway leaves ledger rows
+        // naming already-blanked batches, which the next compaction re-blanks
+        BatchStore.blankRetirements(fs, path)
       }
       n
     }

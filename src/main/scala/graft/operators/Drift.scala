@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.store.BatchStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -170,8 +171,7 @@ object Drift {
   // ---------------------------------------------------------------------
 
   private def fsOf(df: DataFrame, path: String) =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      df.sparkSession.sparkContext.hadoopConfiguration)
+    BatchStore.fs(df.sparkSession, path)
 
   /** Build semantics (replaces the whole store): freeze `a`'s bucket
     * counts as the baseline AND as the live counts' initial batch — the
@@ -221,12 +221,12 @@ object Drift {
     val fs = fsOf(docs, path)
     graft.store.MaintenanceLock.withLock(fs, path,
       if (negate) "drift-retire" else "drift-append") {
-      graft.similarity.Similarity.recoverDir(fs, s"$path/cur")
+      BatchStore.recover(fs, s"$path/cur")
       if (graft.store.Ledger.landed(fs, s"$path/cur", appendId)) false
       else {
         val d = bucketCounts(docs, features)
         val delta = if (negate) d.withColumn("c", -col("c")) else d
-        delta.write.mode("overwrite").parquet(s"$path/cur/batch=$appendId")
+        BatchStore.publish(fs, s"$path/cur", appendId)(delta.write.mode("overwrite").parquet(_))
         true
       }
     }
@@ -240,32 +240,13 @@ object Drift {
     */
   def compactDriftStore(spark: org.apache.spark.sql.SparkSession,
                         path: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "drift-compact") {
-      val dir = s"$path/cur"
-      graft.similarity.Similarity.recoverDir(fs, dir)
-      val main = new org.apache.hadoop.fs.Path(dir)
-      if (!fs.exists(main)) false
-      else {
-        val batchDirs = fs.listStatus(main)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        if (batchDirs.count(s => fs.listFiles(s.getPath, true).hasNext) <= 1) false
-        else {
-          val merged = spark.read.parquet(dir)
-            .groupBy("feature", "bucket").agg(sum(col("c")).as("c"))
-            .filter(col("c") > 0L)
-          val staging = new org.apache.hadoop.fs.Path(s"$path/.cur-compact")
-          fs.delete(staging, true)
-          merged.write.mode("overwrite").parquet(s"$staging/batch=0")
-          // self-running vacuum: one watermark marker instead of a
-          // tombstone dir per merged id (carries any prior watermark)
-          graft.store.Ledger.stampCompactionWatermark(fs, dir, staging.toString,
-            batchDirs.map(_.getPath.getName.stripPrefix("batch=").toLong).toSeq)
-          graft.similarity.Similarity.swapDir(fs, staging, dir)
-          true
-        }
-      }
+      // self-running vacuum: one watermark marker instead of a tombstone
+      // dir per merged id (carries any prior watermark)
+      BatchStore.compact(spark, s"$path/cur",
+        _.groupBy("feature", "bucket").agg(sum(col("c")).as("c")).filter(col("c") > 0L),
+        vacuumLedger = true, layout = BatchStore.asMerged) > 0
     }
   }
 
@@ -279,31 +260,21 @@ object Drift {
     */
   def rebaseDriftBaseline(spark: org.apache.spark.sql.SparkSession,
                           path: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "drift-rebase") {
-      Seq("base", "cur").foreach(h =>
-        graft.similarity.Similarity.recoverDir(fs, s"$path/$h"))
+      Seq("base", "cur").foreach(h => BatchStore.recover(fs, s"$path/$h"))
       val live = spark.read.parquet(s"$path/cur")
         .groupBy("feature", "bucket").agg(sum(col("c")).as("c"))
         .filter(col("c") > 0L).localCheckpoint(true)
-      val curBatches = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/cur"))
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      for (half <- Seq("base", "cur")) {
-        val staging = new org.apache.hadoop.fs.Path(s"$path/.$half-rebase")
-        fs.delete(staging, true)
-        live.write.mode("overwrite").parquet(s"$staging/batch=0")
-        // the live half keeps its append ledger (tombstones) so a replay
-        // of a pre-rebase batch stays a no-op
-        if (half == "cur") {
-          // self-running vacuum: one watermark marker instead of a
-          // tombstone dir per replayed-refusable id
-          graft.store.Ledger.stampCompactionWatermark(fs, s"$path/cur",
-            staging.toString, curBatches.toSeq)
+      val curBatches = BatchStore.batchIds(fs, s"$path/cur")
+      for (half <- Seq("base", "cur"))
+        BatchStore.replace(fs, s"$path/$half", "rebase") { staging =>
+          live.write.mode("overwrite").parquet(s"$staging/batch=0")
+          // the live half keeps its append ledger (one watermark marker, the
+          // self-running vacuum) so a replay of a pre-rebase batch stays a no-op
+          if (half == "cur") graft.store.Ledger.stampCompactionWatermark(
+            fs, s"$path/cur", staging, curBatches)
         }
-        graft.similarity.Similarity.swapDir(fs, staging, s"$path/$half")
-      }
     }
   }
 
@@ -314,11 +285,10 @@ object Drift {
     */
   def psiFromStore(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    // activeDir serves through compaction's two-rename window (.prev)
+    val fs = BatchStore.fs(spark, path)
+    // BatchStore.active serves through compaction's two-rename window (.prev)
     def half(name: String) =
-      spark.read.parquet(graft.similarity.Similarity.activeDir(fs, s"$path/$name"))
+      spark.read.parquet(BatchStore.active(fs, s"$path/$name"))
         .groupBy("feature", "bucket").agg(sum(col("c")).as("c"))
         .filter(col("c") > 0L)
     psiFromCounts(half("base"), half("cur"))
@@ -363,7 +333,7 @@ object Drift {
                              path: String, epochDay: Long): Boolean = {
     val fs = fsOf(dayEvents, path)
     graft.store.MaintenanceLock.withLock(fs, path, "drift-daily-append") {
-      graft.similarity.Similarity.recoverDir(fs, s"$path/days")
+      BatchStore.recover(fs, s"$path/days")
       // maintenance entry: finish any truncation a crashed retire left
       // mid-children before consulting the ledger (the healed day's
       // tombstone then refuses the replay exactly as a completed retire
@@ -372,9 +342,10 @@ object Drift {
       if (graft.store.Ledger.landed(fs, s"$path/days", epochDay))
         false
       else {
-        dayEvents.select(bucket.as("bucket"))
-          .groupBy("bucket").agg(count(lit(1)).as("c"))
-          .write.mode("overwrite").parquet(s"$path/days/batch=$epochDay")
+        BatchStore.publish(fs, s"$path/days", epochDay)(
+          dayEvents.select(bucket.as("bucket"))
+            .groupBy("bucket").agg(count(lit(1)).as("c"))
+            .write.mode("overwrite").parquet(_))
         true
       }
     }
@@ -392,8 +363,7 @@ object Drift {
     // a fully-retired store (every day truncated to a tombstone) has no
     // parquet files left — schema inference would throw, but the correct
     // report is simply empty (r15 ADVICE 2)
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     val dir = new org.apache.hadoop.fs.Path(s"$path/days")
     // a day carrying a `_retiring=` marker is mid-truncation (a retire
     // crashed between its first and last child delete): its surviving
@@ -405,7 +375,7 @@ object Drift {
       st.isDirectory && st.getPath.getName.startsWith("batch=") && {
         val s = st.getPath.getName.drop(6)
         !(s.matches("-?\\d+") && retiring.contains(s.toLong))
-      } && fs.listFiles(st.getPath, true).hasNext)
+      } && BatchStore.hasData(fs, st.getPath))
     val counts =
       if (!hasLive)
         spark.range(0).select(to_date(lit("1970-01-01")).as("day"),
@@ -455,8 +425,7 @@ object Drift {
     */
   def retireDailyDriftDays(spark: org.apache.spark.sql.SparkSession,
                            path: String, beforeEpochDay: Long): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "drift-daily-retire") {
       val dir = new org.apache.hadoop.fs.Path(s"$path/days")
       if (!fs.exists(dir)) 0
@@ -482,7 +451,7 @@ object Drift {
             // to re-run retire (r16 verdict finding 2). With the marker,
             // serving excludes the day and every maintenance entry heals
             // it, so the partial state is never visible.
-            val had = fs.listFiles(st.getPath, true).hasNext
+            val had = BatchStore.hasData(fs, st.getPath)
             if (had) {
               val day = st.getPath.getName.drop(6).toLong
               val marker = new org.apache.hadoop.fs.Path(dir, RetiringMarker + day)

@@ -1441,8 +1441,7 @@ object CorpusQueries {
         .count(_.getPath.getName.startsWith("batch="))
       val wOk = graft.store.Ledger.watermark(fs, packHalf) >= 4L
       val slice = all.filter(bucket < 80)
-      val packRows = s.read.parquet(graft.similarity.Similarity.activeDir(
-          fs, packHalf))
+      val packRows = s.read.parquet(graft.store.BatchStore.active(fs, packHalf))
         .select("shard", "bin", "doc_id", "n_tokens", "bin_offset")
       val perDoc = packRows
         .withColumn("orig", expr("doc_id div 1000000"))

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.store.BatchStore
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -230,13 +231,12 @@ object Similarity {
                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     // lock + build marker: see [[buildPqIndex]] — a rebuild over a live
     // store must not interleave with appenders, and a crash mid-rebuild
     // must refuse maintenance loudly rather than mix geometry generations
     graft.store.MaintenanceLock.withLock(fs, path, "lsh-build") {
-      withBuildMarker(fs, path) {
+      BatchStore.withBuildMarker(fs, path) {
         val c = lshPrepped(vectors, dim, idCol, vecCol)
         // sigs/vectors nest a batch=<append id> level so [[lshAppendVectors]]
         // can land increments as whole directories (the [[ivfAppendCells]]
@@ -270,30 +270,27 @@ object Similarity {
                        idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
     require(appendId >= 1, "appendId 0 is the initial build")
     val spark = vectors.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "lsh-append") {
-      requireNoPendingBuild(fs, path)
-      recoverDir(fs, s"$path/sigs")
-      recoverDir(fs, s"$path/vectors")
-      recoverMinor(fs, s"$path/sigs")
-      recoverMinor(fs, s"$path/vectors")
-      val ledger = new org.apache.hadoop.fs.Path(s"$path/sigs/batch=$appendId")
+      BatchStore.requireNoPendingBuild(fs, path)
+      BatchStore.recover(fs, s"$path/sigs")
+      BatchStore.recover(fs, s"$path/vectors")
+      BatchStore.recoverMinor(fs, s"$path/sigs")
+      BatchStore.recoverMinor(fs, s"$path/vectors")
       if (graft.store.Ledger.landed(fs, s"$path/sigs", appendId)) false
       else {
         // .prev fallback covers reindexLsh's config swap window
-        val cfg = spark.read.parquet(activeDir(fs, s"$path/config")).head()
+        val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
         val (tables, bits, dim) = (cfg.getAs[Int]("tables"), cfg.getAs[Int]("bits"),
           cfg.getAs[Int]("dim"))
         val c = lshPrepped(vectors, dim, idCol, vecCol)
-        // payloads first (a crashed attempt's leftovers are simply overwritten)
-        c.write.mode("overwrite").parquet(s"$path/vectors/batch=$appendId")
-        val staging = new org.apache.hadoop.fs.Path(s"$path/sigs/.staging-$appendId")
-        fs.delete(staging, true)
-        lshSigs(c, lshPlanes(vectors, tables, bits, dim), idCol)
-          .sortWithinPartitions("t", "bucket")
-          .write.mode("overwrite").parquet(staging.toString)
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
+        // payloads first; the sigs publish is the commit marker
+        BatchStore.publish(fs, s"$path/vectors", appendId)(
+          c.write.mode("overwrite").parquet(_))
+        BatchStore.publish(fs, s"$path/sigs", appendId)(
+          lshSigs(c, lshPlanes(vectors, tables, bits, dim), idCol)
+            .sortWithinPartitions("t", "bucket")
+            .write.mode("overwrite").parquet(_))
         true
       }
     }
@@ -302,29 +299,26 @@ object Similarity {
   /** [[compactIvfIndex]] for the LSH index: collapse the accumulated
     * `batch=` directories of BOTH halves (signatures and payloads) into
     * single compacted trees, preserving rows, probe results, and the
-    * append ledger (tombstone dirs) — see [[compactBatchStore]] for the
+    * append ledger (tombstone dirs) — see [[BatchStore.compact]] for the
     * staging/swap/tombstone contract. Returns the number of data dirs
     * compacted across the two halves (0 = nothing to do).
     */
   def compactLshIndex(spark: SparkSession, path: String,
                       idCol: String = "vec_id"): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "lsh-compact") {
-      requireNoPendingBuild(fs, path)
+      BatchStore.requireNoPendingBuild(fs, path)
       // retirements apply physically to BOTH halves (compactIvfIndex note)
-      val retired = readStoreRetirements(spark, fs, path)
-      val alive: DataFrame => DataFrame = aliveStoreRows(_, retired, idCol)
+      val retired = BatchStore.readRetirements(spark, fs, path)
+      val alive: DataFrame => DataFrame = aliveVectors(_, retired, idCol)
       // the two halves are disjoint dirs rebuilding independently under
       // the one store lock this thread already holds — overlap them
       // (guide §2.6); each half keeps its staging/swap discipline
       val n = graft.core.Par.sumSections(
-        () => compactBatchStore(spark, s"$path/sigs", Seq.empty,
-          alive, baseAtMaxId = retired.nonEmpty, forceRewrite = retired.nonEmpty,
-          sortCols = Seq("t", "bucket")),
-        () => compactBatchStore(spark, s"$path/vectors", Seq.empty,
-          alive, baseAtMaxId = retired.nonEmpty, forceRewrite = retired.nonEmpty))
-      if (retired.nonEmpty) blankRetirementLedger(fs, path)
+        () => BatchStore.compact(spark, s"$path/sigs", alive, retired.nonEmpty,
+          layout = BatchStore.rebalanced("t", "bucket")),
+        () => BatchStore.compact(spark, s"$path/vectors", alive, retired.nonEmpty))
+      if (retired.nonEmpty) BatchStore.blankRetirements(fs, path)
       n
     }
   }
@@ -334,16 +328,15 @@ object Similarity {
     */
   def compactLshIndexMinor(spark: SparkSession, path: String,
                            idCol: String = "vec_id"): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "lsh-compact") {
-      requireNoPendingBuild(fs, path)
-      val retired = readStoreRetirements(spark, fs, path)
-      val alive: DataFrame => DataFrame = aliveStoreRows(_, retired, idCol)
+      BatchStore.requireNoPendingBuild(fs, path)
+      val retired = BatchStore.readRetirements(spark, fs, path)
+      val alive: DataFrame => DataFrame = aliveVectors(_, retired, idCol)
       graft.core.Par.sumSections(
-        () => compactBatchStoreMinor(spark, s"$path/sigs", Seq.empty, alive,
-          sortCols = Seq("t", "bucket")),
-        () => compactBatchStoreMinor(spark, s"$path/vectors", Seq.empty, alive))
+        () => BatchStore.compactMinor(spark, s"$path/sigs", alive,
+          BatchStore.rebalanced("t", "bucket")),
+        () => BatchStore.compactMinor(spark, s"$path/vectors", alive))
     }
   }
 
@@ -360,28 +353,27 @@ object Similarity {
     val spark = queries.sparkSession
     // read-only .prev fallbacks cover the compactLshIndex / reindexLsh
     // swap windows (config included — its swap publishes a re-tune)
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     // a crashed (re)build leaves a mixed-generation store that .prev
     // fallbacks cannot read around — refuse loudly instead of serving it
-    requireNoPendingBuild(fs, path)
-    requireNoMinorPending(fs, activeDir(fs, s"$path/sigs"))
-    requireNoMinorPending(fs, activeDir(fs, s"$path/vectors"))
-    val cfg = spark.read.parquet(activeDir(fs, s"$path/config")).head()
+    BatchStore.requireNoPendingBuild(fs, path)
+    BatchStore.requireNoMinorPending(fs, BatchStore.active(fs, s"$path/sigs"))
+    BatchStore.requireNoMinorPending(fs, BatchStore.active(fs, s"$path/vectors"))
+    val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
     val (tables, bits, dim) = (cfg.getAs[Int]("tables"), cfg.getAs[Int]("bits"),
       cfg.getAs[Int]("dim"))
     // partition columns come back as directory-inferred ints; restore the
     // build's longs so the join keys and output hash-match the in-memory
     // path. Pending retirements filter BOTH halves logically (candidates
     // and rescore payloads) until full compaction applies them physically.
-    val retired = readStoreRetirements(spark, fs, path)
+    val retired = BatchStore.readRetirements(spark, fs, path)
     val sigC = boundedBuckets(
-      aliveStoreRows(spark.read.parquet(activeDir(fs, s"$path/sigs")), retired, idCol)
+      aliveVectors(spark.read.parquet(BatchStore.active(fs, s"$path/sigs")), retired, idCol)
         .select(col(idCol), col("t").cast("long").as("t"),
           col("bucket").cast("long").as("bucket")),
       maxBucket)
-    val cVec = aliveStoreRows(
-        spark.read.parquet(activeDir(fs, s"$path/vectors")), retired, idCol)
+    val cVec = aliveVectors(
+        spark.read.parquet(BatchStore.active(fs, s"$path/vectors")), retired, idCol)
       .select(col(idCol), col("v"), col("n"))
     val q = lshPrepped(queries, dim, idCol, vecCol)
     val sigQ = lshSigs(q, lshPlanes(queries, tables, bits, dim), idCol)
@@ -440,9 +432,8 @@ object Similarity {
     * signature partitions without re-signing anything.
     */
   def lshIndexOverflow(spark: SparkSession, path: String, maxBucket: Int): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(activeDir(fs, s"$path/sigs"))
+    val fs = BatchStore.fs(spark, path)
+    spark.read.parquet(BatchStore.active(fs, s"$path/sigs"))
       .groupBy(col("t").cast("long").as("t"), col("bucket").cast("long").as("bucket"))
       .agg(count(lit(1)).as("bucket_size"))
       .filter(col("bucket_size") > maxBucket)
@@ -714,11 +705,10 @@ object Similarity {
   def buildIvfIndex(vectors: DataFrame, numCentroids: Int, iters: Int, path: String,
                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = vectors.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     // lock + build marker: see [[buildPqIndex]]
     graft.store.MaintenanceLock.withLock(fs, path, "ivf-build") {
-      withBuildMarker(fs, path) {
+      BatchStore.withBuildMarker(fs, path) {
         val cent = kmeansCentroids(vectors, numCentroids, iters, idCol, vecCol)
         cent.write.mode("overwrite").parquet(s"$path/centroids")
         // cells nest one more partition level (batch=<append id>/cell=<cell>)
@@ -749,360 +739,21 @@ object Similarity {
                      idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
     require(appendId >= 1, "appendId 0 is the initial build")
     val spark = vectors.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "ivf-append") {
-      requireNoPendingBuild(fs, path)
-      recoverDir(fs, s"$path/cells")
-      recoverMinor(fs, s"$path/cells")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/cells/batch=$appendId")
+      BatchStore.requireNoPendingBuild(fs, path)
+      BatchStore.recover(fs, s"$path/cells")
+      BatchStore.recoverMinor(fs, s"$path/cells")
       if (graft.store.Ledger.landed(fs, s"$path/cells", appendId)) false
       else {
         val cent = spark.read.parquet(s"$path/centroids")
-        val staging = new org.apache.hadoop.fs.Path(s"$path/cells/.staging-$appendId")
-        fs.delete(staging, true)
-        assignTo(prepped(vectors, idCol, vecCol), cent, idCol)
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(staging.toString)
-        require(fs.rename(staging, dst), s"could not land $staging at $dst")
+        BatchStore.publish(fs, s"$path/cells", appendId)(
+          assignTo(prepped(vectors, idCol, vecCol), cent, idCol)
+            .repartition(col("cell"))
+            .write.mode("overwrite").partitionBy("cell").parquet(_))
         true
       }
     }
-  }
-
-  /** Recover a compaction crash window: if only `<dir>.prev` survives (a
-    * crash between [[compactBatchStore]]'s two renames), move it back
-    * before mutating the store — otherwise an append would land into a
-    * fresh dir and orphan the corpus.
-    */
-  private[graft] def recoverDir(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val main = new org.apache.hadoop.fs.Path(dir)
-    val prev = new org.apache.hadoop.fs.Path(s"$dir.prev")
-    if (!fs.exists(main) && fs.exists(prev))
-      require(fs.rename(prev, main), s"could not recover $prev to $main")
-  }
-
-  /** Shared compaction core for the batch-dir index stores (IVF cells, LSH
-    * sigs/vectors): collapse every data-bearing `batch=<id>` directory
-    * under `dir` into one compacted `batch=0`, leave every previously
-    * present id behind as an EMPTY tombstone directory (the appenders'
-    * existence ledger must survive — parquet readers ignore file-less
-    * dirs), stage the complete new tree under a dot-prefixed sibling, and
-    * land it with the two-rename `.prev` swap the sketch stores use.
-    * Returns the number of data dirs compacted (0 = nothing to do).
-    */
-  /** `transform` sees the store rows WITH their `batch` partition column
-    * (applied before the column is dropped) — the retirement compactions
-    * filter through it. `baseId` is where the merged rows land: 0 when no
-    * retirement is pending, the MAX data id when one is (every family —
-    * index stores and minhash alike — passes `baseAtMaxId =
-    * retired.nonEmpty`) so the batch-vs-retirement ordering rule stays
-    * correct if blanking the applied retirement rows crashes midway
-    * (rows at maxId can never be re-killed by a retirement id <= maxId).
-    * A relocated (non-zero) base is recorded in a `_base` marker file at
-    * the half's root, staged WITH the tree so the two-rename swap keeps
-    * it crash-consistent — [[compactBatchStoreMinor]] reads it to keep
-    * excluding the base from the debris merge (absence means base 0; a
-    * full rebuild deletes the half, so no stale marker can survive).
-    */
-  /** `vacuumLedger`: land the rebuilt ledger as ONE `_vacuumed_below`
-    * watermark instead of a tombstone dir per published id — the
-    * self-running vacuum ([[graft.store.Ledger.stampCompactionWatermark]]).
-    * Off by default: store families whose probes still read tombstone
-    * ids (the ANN index lifecycles q117-q232 pin caller-driven vacuums)
-    * keep the dir-per-id layout; the streaming maintainers opt in.
-    */
-  private[graft] def compactBatchStore(spark: SparkSession, dir: String,
-                                partitionCols: Seq[String],
-                                transform: DataFrame => DataFrame = identity,
-                                baseAtMaxId: Boolean = false,
-                                forceRewrite: Boolean = false,
-                                vacuumLedger: Boolean = false,
-                                sortCols: Seq[String] = Seq.empty): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, dir)
-    recoverMinor(fs, dir) // a crashed minor compaction heals before the full rewrite
-    val main = new org.apache.hadoop.fs.Path(dir)
-    // a store half that has never published (e.g. compacting a minhash
-    // store before its first batch) is "nothing to do", not a crash
-    if (!fs.exists(main)) return 0
-    val batchDirs = fs.listStatus(main)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-    val dataIds = batchDirs.filter(s => fs.listFiles(s.getPath, true).hasNext)
-      .map(_.getPath.getName.stripPrefix("batch=").toLong).sorted
-    // forceRewrite: a caller with a row-dropping transform (retirement
-    // application) must rewrite even a single-dir half
-    if (dataIds.isEmpty || (dataIds.length <= 1 && !forceRewrite)) return 0
-    val allIds = batchDirs.map(_.getPath.getName.stripPrefix("batch=").toLong)
-    val data = transform(spark.read.parquet(dir))
-    val staging = new org.apache.hadoop.fs.Path(s"${main.getParent}/.${main.getName}-compact")
-    fs.delete(staging, true)
-    val rows = data.select(data.columns.filterNot(_ == "batch").map(col): _*)
-    // sortCols: cluster the rewritten base within each file (row-group
-    // min/max skipping for readers — the LSH sigs (t, bucket) treatment)
-    // without the per-value directory tree partitionBy would create.
-    // rebalance first (guide §6): the merged base otherwise inherits one
-    // tiny file per source-read task (31/base measured on the minhash
-    // halves at sf0.1); AQE sizes rebalanced files by advisoryPartitionSize
-    // so a 100 TB base still fans out. Rows unchanged, only file layout.
-    val w =
-      if (partitionCols.isEmpty) {
-        val reb = rows.hint("rebalance")
-        (if (sortCols.isEmpty) reb else reb.sortWithinPartitions(sortCols.map(col): _*))
-          .write
-      }
-      else rows.repartition(partitionCols.map(col): _*)
-        .write.partitionBy(partitionCols: _*)
-    val baseId = if (baseAtMaxId) dataIds.max else 0L
-    w.mode("overwrite").parquet(s"$staging/batch=$baseId")
-    if (vacuumLedger)
-      // one marker instead of N tombstone dirs; also carries any prior
-      // watermark (stamp takes the max)
-      graft.store.Ledger.stampCompactionWatermark(
-        fs, dir, staging.toString, allIds.toSeq)
-    else
-      allIds.filter(_ != baseId).foreach(id =>
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$staging/batch=$id")))
-    if (baseId != 0L) writeBaseMarker(fs, staging.toString, baseId)
-    // a vacuumed ledger's by-rule tombstones must survive the swap
-    if (!vacuumLedger) graft.store.Ledger.copyWatermark(fs, dir, staging.toString)
-    val prev = new org.apache.hadoop.fs.Path(s"$dir.prev")
-    fs.delete(prev, true)
-    require(fs.rename(main, prev), s"could not move $main aside to $prev")
-    require(fs.rename(staging, main), s"could not land $staging at $main")
-    fs.delete(prev, true)
-    dataIds.length
-  }
-
-  /** Record where a full rewrite landed the merged base: a `_base` marker
-    * (one line, the base's batch id) at the half's root, written INTO the
-    * staged tree so it publishes atomically with the swap. Underscore
-    * prefix keeps it invisible to parquet listings, like `_minor-pending`.
-    */
-  private[graft] def writeBaseMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                     root: String, baseId: Long): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(root, "_base"), true)
-    try out.write(baseId.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The half's current base batch id: the `_base` marker if a
-    * retirement-applying full rewrite relocated the base, else 0 (the
-    * builders' layout). [[compactBatchStoreMinor]] excludes this id from
-    * the debris merge — the 'cost ∝ debris, never store size' contract.
-    */
-  private[graft] def readBaseId(fs: org.apache.hadoop.fs.FileSystem,
-                                dir: String): Long = {
-    val marker = new org.apache.hadoop.fs.Path(dir, "_base")
-    if (!fs.exists(marker)) 0L
-    else {
-      val in = fs.open(marker)
-      val txt = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-      txt.trim.toLong
-    }
-  }
-
-  /** MINOR (debris-only) compaction — the LSM analogue of
-    * [[compactBatchStore]]'s full rewrite, and the append-heavy 100 TB
-    * answer: ONLY the appended debris dirs merge (into the greatest
-    * debris id), the base batch dir — `batch=0`, or the relocated base a
-    * `_base` marker records after a retirement-applying full rewrite —
-    * is never read or rewritten, so the cost is proportional to the DEBRIS,
-    * not the store size. Fold the merged debris into the base with an
-    * occasional full [[compactBatchStore]]; run this per maintenance
-    * cycle. The append ledger survives: every previously-published id
-    * stays behind as an empty tombstone dir, so replays stay refused.
-    *
-    * Crash discipline: the merged tree is fully staged at `.minor-staged`
-    * BEFORE the `_minor-pending` journal lands (journal publish itself is
-    * a temp-file + atomic rename), so the journal's existence implies the
-    * staged tree is complete and healing always ROLLS FORWARD —
-    * [[recoverMinor]] (run by the maintenance entry points) replays
-    * [[applyMinor]]'s idempotent rename sequence from any crash point.
-    * Unlike the full compaction's `.prev` window, the mid-sequence
-    * visible tree is missing debris rows, which a read-only prober cannot
-    * heal around — so probes REFUSE while the journal exists
-    * ([[requireNoMinorPending]], the [[withBuildMarker]] loud-refusal
-    * discipline).
-    *
-    * READER COORDINATION CONTRACT: the journal refusal is CRASH detection
-    * (the journal persists after a died compactor, so any later probe
-    * refuses loudly), not concurrent-reader isolation — a probe that
-    * passes the journal check in the instant before the journal lands can
-    * still read the mid-rename tree. Probes must be externally coordinated
-    * with maintenance cycles, i.e. the store-wide single-maintainer
-    * contract every mutation path already assumes EXTENDS TO READERS
-    * during minor compaction. (A read-consistent staging order would have
-    * to land the merged tree beside the un-tombstoned sources, and the
-    * transient row duplication would require every probe to dedup its
-    * candidate set — a permanent hot-path cost for a window the
-    * maintenance contract already excludes.)
-    */
-  /** `transform` (retirement liveness) runs over the debris rows WITH
-    * their `batch` column, BEFORE the merge lands them at the max debris
-    * id — without it, a debris row already dead under a pending
-    * retirement (published at k < r) would re-land above r and
-    * resurrect. The ledger itself is preserved (minor never blanks it);
-    * only the full compaction applies-and-blanks.
-    */
-  private[graft] def compactBatchStoreMinor(spark: SparkSession, dir: String,
-                                            partitionCols: Seq[String],
-                                            transform: DataFrame => DataFrame = identity,
-                                            sortCols: Seq[String] = Seq.empty): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
-    recoverDir(fs, dir)
-    recoverMinor(fs, dir)
-    val main = new org.apache.hadoop.fs.Path(dir)
-    if (!fs.exists(main)) return 0
-    val batchDirs = fs.listStatus(main)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-    // the base — 0, or wherever a retirement-applying full rewrite
-    // relocated it (the `_base` marker) — is never debris
-    val baseId = readBaseId(fs, dir)
-    val dataIds = batchDirs.filter(s => fs.listFiles(s.getPath, true).hasNext)
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .filter(_ != baseId).sorted
-    if (dataIds.length <= 1) return 0
-    val target = dataIds.max
-    val staged = new org.apache.hadoop.fs.Path(s"$dir/.minor-staged")
-    fs.delete(staged, true)
-    val rows = transform(spark.read.option("basePath", dir)
-      .parquet(dataIds.map(id => s"$dir/batch=$id").toIndexedSeq: _*))
-    val kept = rows.select(rows.columns.filterNot(_ == "batch").map(col): _*)
-    // same §6 rebalance as the full rewrite: debris merges otherwise spray
-    // one tiny file per source-read task
-    val w =
-      if (partitionCols.isEmpty) {
-        val reb = kept.hint("rebalance")
-        (if (sortCols.isEmpty) reb else reb.sortWithinPartitions(sortCols.map(col): _*))
-          .write
-      }
-      else kept.repartition(partitionCols.map(col): _*)
-        .write.partitionBy(partitionCols: _*)
-    w.mode("overwrite").parquet(staged.toString)
-    // journal AFTER staging, published atomically: existence == staged is
-    // complete and the merge must roll forward
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.minor-journal-tmp")
-    val out = fs.create(tmp, true)
-    try out.write((target +: dataIds).mkString(",").getBytes("UTF-8"))
-    finally out.close()
-    val journal = new org.apache.hadoop.fs.Path(dir, "_minor-pending")
-    fs.delete(journal, false)
-    require(fs.rename(tmp, journal), s"could not publish $journal")
-    applyMinor(fs, dir, target, dataIds.toSeq)
-    dataIds.length
-  }
-
-  /** The idempotent landing sequence of [[compactBatchStoreMinor]] —
-    * re-runnable from any crash point. While `.minor-staged` exists the
-    * landing has not happened: move every source dir (including the
-    * target id's original) aside to invisible `.gone-<id>`, then rename
-    * the staged tree in. Once staged is gone the landing is done:
-    * recreate tombstones for the merged ids and drop the journal.
-    */
-  private def applyMinor(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                         target: Long, ids: Seq[Long]): Unit = {
-    val staged = new org.apache.hadoop.fs.Path(s"$dir/.minor-staged")
-    if (fs.exists(staged)) {
-      ids.foreach { id =>
-        val d = new org.apache.hadoop.fs.Path(s"$dir/batch=$id")
-        if (fs.exists(d)) {
-          val gone = new org.apache.hadoop.fs.Path(s"$dir/.gone-$id")
-          fs.delete(gone, true)
-          require(fs.rename(d, gone), s"could not move $d aside")
-        }
-      }
-      require(fs.rename(staged, new org.apache.hadoop.fs.Path(s"$dir/batch=$target")),
-        s"could not land $staged")
-    }
-    ids.filterNot(_ == target).foreach(id =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/batch=$id")))
-    ids.foreach(id =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/.gone-$id"), true))
-    fs.delete(new org.apache.hadoop.fs.Path(dir, "_minor-pending"), false)
-  }
-
-  /** Heal a crashed [[compactBatchStoreMinor]]: journal present -> roll
-    * the landing forward; no journal -> an orphan staged tree (crash
-    * before the journal published) is dead weight to drop. Maintenance
-    * entry points run this; probes refuse instead
-    * ([[requireNoMinorPending]]).
-    */
-  private[graft] def recoverMinor(fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: String): Unit = {
-    val journal = new org.apache.hadoop.fs.Path(dir, "_minor-pending")
-    if (!fs.exists(journal)) {
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/.minor-staged"), true)
-      return
-    }
-    val in = fs.open(journal)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val nums = txt.trim.split(",").map(_.toLong)
-    applyMinor(fs, dir, nums.head, nums.tail.toIndexedSeq)
-  }
-
-  /** Probe-side refusal while a minor compaction is pending. This detects
-    * a CRASHED compactor (whose journal persists until maintenance heals
-    * it); it cannot close the check-then-read race against a compactor
-    * publishing concurrently — see [[compactBatchStoreMinor]]'s READER
-    * COORDINATION CONTRACT (probes are coordinated with maintenance
-    * cycles, the single-maintainer contract extended to readers).
-    */
-  private[graft] def requireNoMinorPending(fs: org.apache.hadoop.fs.FileSystem,
-                                           dir: String): Unit =
-    require(!fs.exists(new org.apache.hadoop.fs.Path(dir, "_minor-pending")),
-      s"$dir has an incomplete minor compaction — run append/compact " +
-        "maintenance to heal it before probing")
-
-  /** The active directory for read paths: `dir`, or its `.prev` survivor
-    * inside/after a [[compactBatchStore]] swap window — read-only, never
-    * mutates (contrast [[recoverDir]], which heals before writes).
-    */
-  private[graft] def activeDir(fs: org.apache.hadoop.fs.FileSystem, dir: String): String =
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir))) dir else s"$dir.prev"
-
-  /** Crash-window guard for the (re)build paths: a full build clears and
-    * rewrites multiple store halves with no joint atomicity, so a crash
-    * mid-build leaves a mixed-generation store. The builds run under the
-    * store's MaintenanceLock (no CONCURRENT appender can interleave — the
-    * lock is store-wide) and keep this marker for their duration; the
-    * append/compact/reindex entry points AND the store-reading probes
-    * (probeIvfIndex/probeLshIndex/probePqIndex/ivfPqProbeStores) refuse
-    * while it exists, so the crash window degrades to a loud "re-run the
-    * build" instead of silent mixed-generation results.
-    */
-  private[graft] def withBuildMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                     path: String)(body: => Unit): Unit = {
-    fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-    val pending = new org.apache.hadoop.fs.Path(path, "_build-pending")
-    val out = fs.create(pending, true)
-    try out.write(s"pid=${ProcessHandle.current().pid()}\n".getBytes("UTF-8"))
-    finally out.close()
-    body
-    fs.delete(pending, false)
-  }
-
-  private[graft] def requireNoPendingBuild(fs: org.apache.hadoop.fs.FileSystem,
-                                           path: String): Unit =
-    require(!fs.exists(new org.apache.hadoop.fs.Path(path, "_build-pending")),
-      s"$path has an incomplete (re)build — re-run the build before maintaining it")
-
-  /** Two-rename publish of a fully-staged replacement tree: `dir` moves
-    * aside to `dir.prev`, `staging` lands at `dir`, the survivor is
-    * dropped. A crash between the renames is healed by [[recoverDir]] /
-    * read around by [[activeDir]] — the contract every store here shares.
-    */
-  private[graft] def swapDir(fs: org.apache.hadoop.fs.FileSystem,
-                      staging: org.apache.hadoop.fs.Path, dir: String): Unit = {
-    val main = new org.apache.hadoop.fs.Path(dir)
-    val prev = new org.apache.hadoop.fs.Path(s"$dir.prev")
-    fs.delete(prev, true)
-    require(fs.rename(main, prev), s"could not move $main aside to $prev")
-    require(fs.rename(staging, main), s"could not land $staging at $main")
-    fs.delete(prev, true)
   }
 
   /** Retirement ledger of a row-store index family (IVF cells, LSH
@@ -1113,7 +764,7 @@ object Similarity {
     * per-vector (not additive counts), so retirement is a ledgered
     * tombstone batch: the departing ids land under
     * `retired/batch=<retireId>` as a single `rid` column, and every
-    * reader applies [[aliveStoreRows]]' ordering rule. Nothing in the
+    * reader applies [[aliveVectors]]' ordering rule. Nothing in the
     * store's data halves is touched — cost ∝ the retired slice.
     * `retireId` must exceed every published data batch id, and re-appends
     * of a changed vector must use a later id still (the delta cycle's
@@ -1129,18 +780,14 @@ object Similarity {
                              retiredIds: DataFrame, retireId: Long,
                              idCol: String, lockTag: String): Boolean = {
     require(retireId >= 1, "retireId 0 would predate the initial build")
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, lockTag) {
-      requireNoPendingBuild(fs, path)
-      val ledger = new org.apache.hadoop.fs.Path(s"$path/retired/batch=$retireId")
+      BatchStore.requireNoPendingBuild(fs, path)
       if (graft.store.Ledger.landed(fs, s"$path/retired", retireId)) false
       else {
-        val staging = new org.apache.hadoop.fs.Path(s"$path/retired/.staging-$retireId")
-        fs.delete(staging, true)
-        retiredIds.select(col(idCol).as("rid")).distinct()
-          .write.mode("overwrite").parquet(staging.toString)
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
+        BatchStore.publish(fs, s"$path/retired", retireId)(
+          retiredIds.select(col(idCol).as("rid")).distinct()
+            .write.mode("overwrite").parquet(_))
         true
       }
     }
@@ -1158,62 +805,12 @@ object Similarity {
                       retireId: Long, idCol: String = "vec_id"): Boolean =
     retireStoreIds(spark, path, retiredIds, retireId, idCol, "pq-retire")
 
-  /** The pending-retirement view: (`__rid`, `__rbatch`) for every
-    * data-bearing retirement batch, or None when the store has none.
-    * After a full compaction blanks the ledger the dirs survive as empty
-    * tombstones (retire replays stay refused) and this reads None.
+  /** The ANN families' liveness rule: [[BatchStore.alive]] with the
+    * vector id matched against the retirement ledger's `rid` column.
     */
-  private[graft] def readStoreRetirements(spark: SparkSession,
-                                          fs: org.apache.hadoop.fs.FileSystem,
-                                          path: String): Option[DataFrame] = {
-    val root = s"$path/retired"
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(p)) return None
-    val ids = fs.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => fs.listFiles(s.getPath, true).hasNext)
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-    if (ids.isEmpty) None
-    else Some(ids.map(id =>
-        spark.read.parquet(s"$root/batch=$id")
-          .select(col("rid").as("__rid"), lit(id).as("__rbatch")))
-      .reduce(_ unionByName _))
-  }
-
-  /** The liveness rule shared by every reader of a retire-capable index
-    * store (the [[graft.streaming.StreamingPipeline]] minhash rule): a row
-    * published at data batch k is dead iff some retirement batch r > k
-    * names its id. `df` must still carry its `batch` partition column.
-    * Strictly-greater is what lets a changed vector re-enter at a later
-    * append, and what makes rows landed at the max data id (full
-    * compaction, minor merge, reindex) immune to every pending retirement
-    * id: a pending r can only exceed the max data id when the ids it
-    * names have no re-append after it — i.e. when every row it could
-    * kill is already gone.
-    */
-  private[graft] def aliveStoreRows(df: DataFrame, retired: Option[DataFrame],
-                                    idCol: String): DataFrame =
-    retired.fold(df)(r => df.join(r,
-      df(idCol) === r("__rid") && r("__rbatch") > df("batch").cast("long"),
-      "left_anti"))
-
-  /** Blank the applied retirement batches to empty tombstone dirs (retire
-    * replays stay refused). Only the family's full compaction calls this,
-    * AFTER the rewritten tree landed at the max data id — a crash mid-blank
-    * leaves rows the max-id base makes harmless, and the next compaction
-    * finishes the job.
-    */
-  private def blankRetirementLedger(fs: org.apache.hadoop.fs.FileSystem,
-                                    path: String): Unit = {
-    val rp = new org.apache.hadoop.fs.Path(s"$path/retired")
-    if (fs.exists(rp)) {
-      fs.listStatus(rp)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .foreach { d =>
-          fs.listStatus(d.getPath).foreach(f => fs.delete(f.getPath, false))
-        }
-    }
-  }
+  private[graft] def aliveVectors(df: DataFrame, retired: Option[DataFrame],
+                                  idCol: String): DataFrame =
+    BatchStore.alive(df, retired, Seq(idCol -> "rid"))
 
   /** Batch re-index of a persisted IVF store — the documented drift answer
     * for [[ivfAppendCells]]' frozen-centroid appends: refit the k-means
@@ -1222,54 +819,46 @@ object Similarity {
     * would derive, so the refit is bit-identical to
     * [[buildIvfIndex]] over the same vectors with the same parameters),
     * stage complete replacement `centroids/` and `cells/` trees, and land
-    * each via the [[compactBatchStore]] two-rename `.prev` swap. The
+    * each via the [[BatchStore.swap]] two-rename `.prev` swap. The
     * append LEDGER survives: every previously-published batch id is left
     * behind as an empty tombstone, so replays of merged batches stay
     * refused. The two halves swap one after the other — not jointly
     * atomic; like compaction this is a single-maintainer maintenance job
-    * to run between probes, and [[recoverDir]]/the probes' `.prev`
+    * to run between probes, and [[BatchStore.recover]]/the probes' `.prev`
     * fallbacks heal a crash inside either window. Returns the number of
     * vectors re-indexed.
     */
   def reindexIvf(spark: SparkSession, path: String, numCentroids: Int,
                  iters: Int, idCol: String = "vec_id"): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "ivf-reindex") {
-      requireNoPendingBuild(fs, path)
-    recoverDir(fs, s"$path/cells")
-    recoverDir(fs, s"$path/centroids")
+      BatchStore.requireNoPendingBuild(fs, path)
+    BatchStore.recover(fs, s"$path/cells")
+    BatchStore.recover(fs, s"$path/centroids")
     // pending retirements: the refit reads LIVE rows only, and the
     // reassigned corpus lands at the max data id so the preserved ledger
     // (reindex never blanks it — that is full compaction's job) cannot
     // kill the re-landed rows. With none pending this is the batch=0 base.
-    val retired = readStoreRetirements(spark, fs, path)
-    val stored = aliveStoreRows(spark.read.parquet(s"$path/cells"), retired, idCol)
+    val retired = BatchStore.readRetirements(spark, fs, path)
+    val stored = aliveVectors(spark.read.parquet(s"$path/cells"), retired, idCol)
       .select(col(idCol), col("v"))
     val n = stored.count()
     val cent = kmeansCentroids(stored, numCentroids, iters, idCol, "v")
     val assigned = assignTo(prepped(stored, idCol, "v"), cent, idCol)
-    val allStatus = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/cells"))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-    val allIds = allStatus.map(_.getPath.getName.stripPrefix("batch=").toLong)
-    val dataIds = allStatus.filter(s => fs.listFiles(s.getPath, true).hasNext)
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
+    val allIds = BatchStore.batchIds(fs, s"$path/cells")
+    val dataIds = BatchStore.dataIds(fs, s"$path/cells")
     val baseId = if (retired.nonEmpty && dataIds.nonEmpty) dataIds.max else 0L
-    val stagingCells = new org.apache.hadoop.fs.Path(s"$path/.cells-reindex")
-    fs.delete(stagingCells, true)
-    assigned.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$stagingCells/batch=$baseId")
-    allIds.filter(_ != baseId).foreach(id =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stagingCells/batch=$id")))
-    if (baseId != 0L) writeBaseMarker(fs, stagingCells.toString, baseId)
-    graft.store.Ledger.copyWatermark(fs, s"$path/cells", stagingCells.toString)
-    val stagingCent = new org.apache.hadoop.fs.Path(s"$path/.centroids-reindex")
-    fs.delete(stagingCent, true)
-    cent.write.mode("overwrite").parquet(stagingCent.toString)
+    val stagingCells = BatchStore.stage(fs, s"$path/cells", "reindex") { st =>
+      assigned.repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$st/batch=$baseId")
+      BatchStore.stageLedger(fs, s"$path/cells", st, allIds, baseId, vacuumLedger = false)
+    }
+    val stagingCent = BatchStore.stage(fs, s"$path/centroids", "reindex")(
+      cent.write.mode("overwrite").parquet(_))
     // cells first, then the (broadcast-sized) centroids — both windows are
     // covered by the read-side fallbacks
-    swapDir(fs, stagingCells, s"$path/cells")
-    swapDir(fs, stagingCent, s"$path/centroids")
+    BatchStore.swap(fs, stagingCells, s"$path/cells")
+    BatchStore.swap(fs, stagingCent, s"$path/centroids")
     n
     }
   }
@@ -1295,13 +884,12 @@ object Similarity {
     */
   def reindexLsh(spark: SparkSession, path: String, tables: Int, bits: Int,
                  idCol: String = "vec_id"): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "lsh-reindex") {
-      requireNoPendingBuild(fs, path)
-    recoverDir(fs, s"$path/sigs")
-    recoverDir(fs, s"$path/vectors")
-    recoverDir(fs, s"$path/config")
+      BatchStore.requireNoPendingBuild(fs, path)
+    BatchStore.recover(fs, s"$path/sigs")
+    BatchStore.recover(fs, s"$path/vectors")
+    BatchStore.recover(fs, s"$path/config")
     val dim = spark.read.parquet(s"$path/config").head().getAs[Int]("dim")
     // the stored payloads ARE the prepped (idCol, v, n) rows a fresh build
     // would derive — re-sign them directly, no source-corpus re-read.
@@ -1309,33 +897,26 @@ object Similarity {
     // land at the max data id (reindexIvf's note — the vectors half keeps
     // its dead rows + the ledger, so probes keep filtering them until a
     // full compaction applies-and-blanks).
-    val retired = readStoreRetirements(spark, fs, path)
-    val c = aliveStoreRows(spark.read.parquet(s"$path/vectors"), retired, idCol)
+    val retired = BatchStore.readRetirements(spark, fs, path)
+    val c = aliveVectors(spark.read.parquet(s"$path/vectors"), retired, idCol)
       .select(col(idCol), col("v"), col("n"))
     val n = c.count()
-    val allStatus = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/sigs"))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-    val allIds = allStatus.map(_.getPath.getName.stripPrefix("batch=").toLong)
-    val dataIds = allStatus.filter(s => fs.listFiles(s.getPath, true).hasNext)
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
+    val allIds = BatchStore.batchIds(fs, s"$path/sigs")
+    val dataIds = BatchStore.dataIds(fs, s"$path/sigs")
     val baseId = if (retired.nonEmpty && dataIds.nonEmpty) dataIds.max else 0L
-    val stagingSigs = new org.apache.hadoop.fs.Path(s"$path/.sigs-reindex")
-    fs.delete(stagingSigs, true)
-    lshSigs(c, lshPlanes(c, tables, bits, dim), idCol)
-      .sortWithinPartitions("t", "bucket")
-      .write.mode("overwrite").parquet(s"$stagingSigs/batch=$baseId")
-    allIds.filter(_ != baseId).foreach(id =>
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$stagingSigs/batch=$id")))
-    if (baseId != 0L) writeBaseMarker(fs, stagingSigs.toString, baseId)
-    graft.store.Ledger.copyWatermark(fs, s"$path/sigs", stagingSigs.toString)
-    val stagingCfg = new org.apache.hadoop.fs.Path(s"$path/.config-reindex")
-    fs.delete(stagingCfg, true)
+    val stagingSigs = BatchStore.stage(fs, s"$path/sigs", "reindex") { st =>
+      lshSigs(c, lshPlanes(c, tables, bits, dim), idCol)
+        .sortWithinPartitions("t", "bucket")
+        .write.mode("overwrite").parquet(s"$st/batch=$baseId")
+      BatchStore.stageLedger(fs, s"$path/sigs", st, allIds, baseId, vacuumLedger = false)
+    }
     import spark.implicits._
-    Seq((tables, bits, dim)).toDF("tables", "bits", "dim")
-      .coalesce(1).write.mode("overwrite").parquet(stagingCfg.toString)
+    val stagingCfg = BatchStore.stage(fs, s"$path/config", "reindex")(
+      Seq((tables, bits, dim)).toDF("tables", "bits", "dim")
+        .coalesce(1).write.mode("overwrite").parquet(_))
     // sigs first, then the 1-row config that publishes the new geometry
-    swapDir(fs, stagingSigs, s"$path/sigs")
-    swapDir(fs, stagingCfg, s"$path/config")
+    BatchStore.swap(fs, stagingSigs, s"$path/sigs")
+    BatchStore.swap(fs, stagingCfg, s"$path/config")
     n
     }
   }
@@ -1355,7 +936,7 @@ object Similarity {
     * cost nothing at probe time). The rewritten tree stages complete under
     * a dot-prefixed dir, then lands via the same two-rename swap as the
     * sketch stores — [[probeIvfIndex]] falls back to `cells.prev` inside
-    * the window, and [[recoverDir]] heals a crash between the renames.
+    * the window, and [[BatchStore.recover]] heals a crash between the renames.
     * Single-maintainer contract as with all the stores — and since round 9
     * it is CHECKED, not assumed: every append/compact/reindex entry point
     * holds the store's [[graft.store.MaintenanceLock]], so a concurrent
@@ -1365,24 +946,22 @@ object Similarity {
     */
   def compactIvfIndex(spark: SparkSession, path: String,
                       idCol: String = "vec_id"): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "ivf-compact") {
-      requireNoPendingBuild(fs, path)
+      BatchStore.requireNoPendingBuild(fs, path)
       // pending retirements apply physically here (and only here): dead
       // rows drop, the merged base lands at the MAX data id so a crash
       // mid-blank leaves the leftover retirement ids harmless, and the
       // ledger blanks to tombstones — the compactMinhashStore contract
-      val retired = readStoreRetirements(spark, fs, path)
-      val n = compactBatchStore(spark, s"$path/cells", Seq("cell"),
-        aliveStoreRows(_, retired, idCol),
-        baseAtMaxId = retired.nonEmpty, forceRewrite = retired.nonEmpty)
-      if (retired.nonEmpty) blankRetirementLedger(fs, path)
+      val retired = BatchStore.readRetirements(spark, fs, path)
+      val n = BatchStore.compact(spark, s"$path/cells", aliveVectors(_, retired, idCol),
+        retired.nonEmpty, layout = BatchStore.partitioned("cell"))
+      if (retired.nonEmpty) BatchStore.blankRetirements(fs, path)
       n
     }
   }
 
-  /** [[compactBatchStoreMinor]] for the IVF store's cells half: merge the
+  /** [[BatchStore.compactMinor]] for the IVF store's cells half: merge the
     * append debris only, never touching the `batch=0` base — per-cycle
     * maintenance whose cost tracks the appends since the last cycle, with
     * [[compactIvfIndex]] as the occasional full fold. Probe results are
@@ -1391,13 +970,12 @@ object Similarity {
     */
   def compactIvfIndexMinor(spark: SparkSession, path: String,
                            idCol: String = "vec_id"): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "ivf-compact") {
-      requireNoPendingBuild(fs, path)
-      val retired = readStoreRetirements(spark, fs, path)
-      compactBatchStoreMinor(spark, s"$path/cells", Seq("cell"),
-        aliveStoreRows(_, retired, idCol))
+      BatchStore.requireNoPendingBuild(fs, path)
+      val retired = BatchStore.readRetirements(spark, fs, path)
+      BatchStore.compactMinor(spark, s"$path/cells", aliveVectors(_, retired, idCol),
+        BatchStore.partitioned("cell"))
     }
   }
 
@@ -1417,22 +995,21 @@ object Similarity {
     require(nprobe >= 1, "need nprobe >= 1")
     // read-only .prev fallbacks cover the windows between compactIvfIndex's
     // / reindexIvf's two renames (and a crash inside) without mutating
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     // a crashed (re)build leaves a mixed-generation store that .prev
     // fallbacks cannot read around — refuse loudly instead of serving it
-    requireNoPendingBuild(fs, path)
-    val cent = spark.read.parquet(activeDir(fs, s"$path/centroids"))
-    val cellsDir = activeDir(fs, s"$path/cells")
+    BatchStore.requireNoPendingBuild(fs, path)
+    val cent = spark.read.parquet(BatchStore.active(fs, s"$path/centroids"))
+    val cellsDir = BatchStore.active(fs, s"$path/cells")
     // a crashed MINOR compaction's mid-sequence tree is missing debris
     // rows and a read-only probe cannot heal it — refuse loudly
-    requireNoMinorPending(fs, cellsDir)
+    BatchStore.requireNoMinorPending(fs, cellsDir)
     // the partition column comes back as the inferred directory type (int);
     // restore the build's long so q112 hash-matches q107's cell column.
     // Pending retirements (delta-driven maintenance) filter logically here
     // until the next full compaction applies them physically.
-    val retired = readStoreRetirements(spark, fs, path)
-    val idx = aliveStoreRows(spark.read.parquet(cellsDir), retired, idCol)
+    val retired = BatchStore.readRetirements(spark, fs, path)
+    val idx = aliveVectors(spark.read.parquet(cellsDir), retired, idCol)
       .select(col(idCol), col("v"), col("n"), col("cell").cast("long").as("cell"))
     val q = prepped(queries, idCol, vecCol)
     val topCells = q.join(broadcast(cent))
@@ -1671,14 +1248,13 @@ object Similarity {
                    vecCol: String = "embedding"): Unit = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     // the store-wide lock serializes the long Lloyd fit against concurrent
     // appenders (an append encoded against the OLD codebooks landing after
     // the rebuild would silently mix codeword generations); the build
     // marker turns a crash mid-rebuild into a loud refusal downstream
     graft.store.MaintenanceLock.withLock(fs, path, "pq-build") {
-      withBuildMarker(fs, path) {
+      BatchStore.withBuildMarker(fs, path) {
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes"), true)
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors"), true)
         val cb = pqCodebooks(vectors, m, k, iters, dim, idCol, vecCol)
@@ -1703,27 +1279,22 @@ object Similarity {
                       idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
     require(appendId >= 1, "appendId 0 is the initial build")
     val spark = vectors.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "pq-append") {
-      requireNoPendingBuild(fs, path)
-      recoverDir(fs, s"$path/codes")
-      recoverDir(fs, s"$path/vectors")
-      recoverMinor(fs, s"$path/codes")
-      recoverMinor(fs, s"$path/vectors")
-      val ledger = new org.apache.hadoop.fs.Path(s"$path/codes/batch=$appendId")
+      BatchStore.requireNoPendingBuild(fs, path)
+      BatchStore.recover(fs, s"$path/codes")
+      BatchStore.recover(fs, s"$path/vectors")
+      BatchStore.recoverMinor(fs, s"$path/codes")
+      BatchStore.recoverMinor(fs, s"$path/vectors")
       if (graft.store.Ledger.landed(fs, s"$path/codes", appendId)) false
       else {
-        val cfg = spark.read.parquet(activeDir(fs, s"$path/config")).head()
+        val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
         val (m, dim) = (cfg.getAs[Int]("m"), cfg.getAs[Int]("dim"))
-        val cb = spark.read.parquet(activeDir(fs, s"$path/codebooks"))
-        prepped(vectors, idCol, vecCol)
-          .write.mode("overwrite").parquet(s"$path/vectors/batch=$appendId")
-        val staging = new org.apache.hadoop.fs.Path(s"$path/codes/.staging-$appendId")
-        fs.delete(staging, true)
-        pqEncode(vectors, cb, m, dim, idCol, vecCol)
-          .write.mode("overwrite").parquet(staging.toString)
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
+        val cb = spark.read.parquet(BatchStore.active(fs, s"$path/codebooks"))
+        BatchStore.publish(fs, s"$path/vectors", appendId)(
+          prepped(vectors, idCol, vecCol).write.mode("overwrite").parquet(_))
+        BatchStore.publish(fs, s"$path/codes", appendId)(
+          pqEncode(vectors, cb, m, dim, idCol, vecCol).write.mode("overwrite").parquet(_))
         true
       }
     }
@@ -1734,19 +1305,16 @@ object Similarity {
     */
   def compactPqIndex(spark: SparkSession, path: String,
                      idCol: String = "vec_id"): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "pq-compact") {
-      requireNoPendingBuild(fs, path)
+      BatchStore.requireNoPendingBuild(fs, path)
       // retirements apply physically to BOTH halves (compactIvfIndex note)
-      val retired = readStoreRetirements(spark, fs, path)
-      val alive: DataFrame => DataFrame = aliveStoreRows(_, retired, idCol)
+      val retired = BatchStore.readRetirements(spark, fs, path)
+      val alive: DataFrame => DataFrame = aliveVectors(_, retired, idCol)
       val n = graft.core.Par.sumSections(
-        () => compactBatchStore(spark, s"$path/codes", Seq.empty,
-          alive, baseAtMaxId = retired.nonEmpty, forceRewrite = retired.nonEmpty),
-        () => compactBatchStore(spark, s"$path/vectors", Seq.empty,
-          alive, baseAtMaxId = retired.nonEmpty, forceRewrite = retired.nonEmpty))
-      if (retired.nonEmpty) blankRetirementLedger(fs, path)
+        () => BatchStore.compact(spark, s"$path/codes", alive, retired.nonEmpty),
+        () => BatchStore.compact(spark, s"$path/vectors", alive, retired.nonEmpty))
+      if (retired.nonEmpty) BatchStore.blankRetirements(fs, path)
       n
     }
   }
@@ -1756,15 +1324,14 @@ object Similarity {
     */
   def compactPqIndexMinor(spark: SparkSession, path: String,
                           idCol: String = "vec_id"): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "pq-compact") {
-      requireNoPendingBuild(fs, path)
-      val retired = readStoreRetirements(spark, fs, path)
-      val alive: DataFrame => DataFrame = aliveStoreRows(_, retired, idCol)
+      BatchStore.requireNoPendingBuild(fs, path)
+      val retired = BatchStore.readRetirements(spark, fs, path)
+      val alive: DataFrame => DataFrame = aliveVectors(_, retired, idCol)
       graft.core.Par.sumSections(
-        () => compactBatchStoreMinor(spark, s"$path/codes", Seq.empty, alive),
-        () => compactBatchStoreMinor(spark, s"$path/vectors", Seq.empty, alive))
+        () => BatchStore.compactMinor(spark, s"$path/codes", alive),
+        () => BatchStore.compactMinor(spark, s"$path/vectors", alive))
     }
   }
 
@@ -1775,20 +1342,19 @@ object Similarity {
   def probePqIndex(queries: DataFrame, path: String, k: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     // refuse a crashed-build mixed-generation store (probeLshIndex's note)
-    requireNoPendingBuild(fs, path)
-    requireNoMinorPending(fs, activeDir(fs, s"$path/codes"))
-    requireNoMinorPending(fs, activeDir(fs, s"$path/vectors"))
-    val cfg = spark.read.parquet(activeDir(fs, s"$path/config")).head()
+    BatchStore.requireNoPendingBuild(fs, path)
+    BatchStore.requireNoMinorPending(fs, BatchStore.active(fs, s"$path/codes"))
+    BatchStore.requireNoMinorPending(fs, BatchStore.active(fs, s"$path/vectors"))
+    val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
     val (m, dim) = (cfg.getAs[Int]("m"), cfg.getAs[Int]("dim"))
-    val cb = spark.read.parquet(activeDir(fs, s"$path/codebooks"))
+    val cb = spark.read.parquet(BatchStore.active(fs, s"$path/codebooks"))
     // pending retirements filter the candidate codes logically until full
     // compaction applies them (the vectors half is not read by ADC probes)
-    val retired = readStoreRetirements(spark, fs, path)
-    val codes = aliveStoreRows(
-        spark.read.parquet(activeDir(fs, s"$path/codes")), retired, idCol)
+    val retired = BatchStore.readRetirements(spark, fs, path)
+    val codes = aliveVectors(
+        spark.read.parquet(BatchStore.active(fs, s"$path/codes")), retired, idCol)
       .select(col(idCol), col("s"), col("code"))
     pqAdcTopK(codes, cb, queries, k, m, dim, idCol, vecCol)
   }
@@ -1872,27 +1438,26 @@ object Similarity {
                        k: Int, nprobe: Int, idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fsI = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(ivfPath), conf)
-    val fsP = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(pqPath), conf)
+    val fsI = BatchStore.fs(spark, ivfPath)
+    val fsP = BatchStore.fs(spark, pqPath)
     // refuse a crashed-build mixed-generation store on EITHER side, and a
     // crashed minor compaction's debris-missing tree on any read half
-    requireNoPendingBuild(fsI, ivfPath)
-    requireNoPendingBuild(fsP, pqPath)
-    requireNoMinorPending(fsI, activeDir(fsI, s"$ivfPath/cells"))
-    requireNoMinorPending(fsP, activeDir(fsP, s"$pqPath/codes"))
-    val cent = spark.read.parquet(activeDir(fsI, s"$ivfPath/centroids"))
+    BatchStore.requireNoPendingBuild(fsI, ivfPath)
+    BatchStore.requireNoPendingBuild(fsP, pqPath)
+    BatchStore.requireNoMinorPending(fsI, BatchStore.active(fsI, s"$ivfPath/cells"))
+    BatchStore.requireNoMinorPending(fsP, BatchStore.active(fsP, s"$pqPath/codes"))
+    val cent = spark.read.parquet(BatchStore.active(fsI, s"$ivfPath/centroids"))
     // pending retirements on either store filter its rows logically
-    val retI = readStoreRetirements(spark, fsI, ivfPath)
-    val retP = readStoreRetirements(spark, fsP, pqPath)
-    val assigned = aliveStoreRows(
-        spark.read.parquet(activeDir(fsI, s"$ivfPath/cells")), retI, idCol)
+    val retI = BatchStore.readRetirements(spark, fsI, ivfPath)
+    val retP = BatchStore.readRetirements(spark, fsP, pqPath)
+    val assigned = aliveVectors(
+        spark.read.parquet(BatchStore.active(fsI, s"$ivfPath/cells")), retI, idCol)
       .select(col(idCol), col("cell"))
-    val cfg = spark.read.parquet(activeDir(fsP, s"$pqPath/config")).head()
+    val cfg = spark.read.parquet(BatchStore.active(fsP, s"$pqPath/config")).head()
     val (m, dim) = (cfg.getAs[Int]("m"), cfg.getAs[Int]("dim"))
-    val cb = spark.read.parquet(activeDir(fsP, s"$pqPath/codebooks"))
-    val codes = aliveStoreRows(
-        spark.read.parquet(activeDir(fsP, s"$pqPath/codes")), retP, idCol)
+    val cb = spark.read.parquet(BatchStore.active(fsP, s"$pqPath/codebooks"))
+    val codes = aliveVectors(
+        spark.read.parquet(BatchStore.active(fsP, s"$pqPath/codes")), retP, idCol)
       .select(col(idCol), col("s"), col("code"))
     ivfPqSearchCore(cent, assigned, cb, codes, queries, k, nprobe, m, dim,
       idCol, vecCol)

@@ -258,7 +258,7 @@ object Ledger {
     MaintenanceLock.withLock(fs, path, "vacuum") {
       halves.map { h =>
         val dir = if (h.isEmpty) path else s"$path/$h"
-        graft.similarity.Similarity.recoverDir(fs, dir)
+        BatchStore.recover(fs, dir)
         vacuum(fs, dir, upTo)
       }.sum
     }

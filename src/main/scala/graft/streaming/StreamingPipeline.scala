@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.store.BatchStore
 import graft.operators.DailyKpi
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -344,43 +345,6 @@ object StreamingPipeline {
       if (df.isEmpty) None else Some(df)
     } catch { case _: Throwable => None }
 
-  /** Strict sketch-store reader: absence (no dir yet, or only the previous
-    * swap's `.prev` survivor after a crash between the two renames) maps to
-    * the recoverable state; any OTHER failure — a transient FS error, a
-    * corrupt footer — PROPAGATES so the batch retries instead of silently
-    * resetting the sketch and then destroying the intact prior store.
-    * (Contrast [[existingClean]], whose catch-all is fine for the clean
-    * store because its caller only APPENDS.)
-    */
-  private def readSketchStore(spark: SparkSession, path: String): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), conf)
-    val main = new org.apache.hadoop.fs.Path(path)
-    val prev = new org.apache.hadoop.fs.Path(s"$path.prev")
-    if (fs.exists(main)) Some(spark.read.parquet(path))
-    else if (fs.exists(prev)) Some(spark.read.parquet(s"$path.prev"))
-    else None
-  }
-
-  /** Lands a staged store directory: move the current store aside to
-    * `.prev`, rename staging in, drop `.prev`. There is never a moment
-    * without a readable store ([[readSketchStore]] falls back to `.prev`
-    * during the window between the two renames), and rename results are
-    * CHECKED — a false return aborts the batch rather than losing state.
-    */
-  private def swapInStore(spark: SparkSession, staging: String, storePath: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath), conf)
-    val dst = new org.apache.hadoop.fs.Path(storePath)
-    val prev = new org.apache.hadoop.fs.Path(s"$storePath.prev")
-    fs.delete(prev, true)
-    if (fs.exists(dst))
-      require(fs.rename(dst, prev), s"could not move $dst aside to $prev")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), dst),
-      s"could not land $staging at $dst")
-    fs.delete(prev, true)
-  }
-
   /** Incremental HLL maintenance — the `foreachBatch` body for a streaming
     * distinct counter. Each micro-batch's registers merge into the parquet
     * register store with a per-register `max`; because max is commutative,
@@ -389,7 +353,7 @@ object StreamingPipeline {
     * ([[graft.sketch.Sketches]]' mergeable-state property — this is what
     * makes a sketch the right 100 TB distinct counter: fixed-size state,
     * no re-scan, no wobble with arrival order). The merged store lands via
-    * a staging write + [[swapInStore]], so a crash at any point leaves a
+    * a staging write + [[BatchStore.swap]], so a crash at any point leaves a
     * readable store (the previous one until the final rename) and a replay
     * re-merges idempotently.
     */
@@ -405,7 +369,7 @@ object StreamingPipeline {
     * at-least-once on failure recovery) MUST not double-count: a `_batches`
     * ledger file INSIDE the store directory records every merged id, and a
     * replayed id is a no-op — the transactional-foreachBatch pattern. The
-    * ledger lands in the same [[swapInStore]] as the sketch rows, so the
+    * ledger lands in the same [[BatchStore.swap]] as the sketch rows, so the
     * active store always carries the ledger that matches its contents —
     * there is no window where the store reflects a batch the ledger
     * doesn't, and a crash at any point leaves either the previous
@@ -413,52 +377,38 @@ object StreamingPipeline {
     * resolve. Parquet readers skip underscore-prefixed files, so the ledger
     * doesn't disturb `spark.read.parquet(storePath)`.
     */
-  /** Resolve the ACTIVE store dir ([[swapInStore]] semantics): main, else
-    * the `.prev` survivor of a crash between its two renames.
-    */
-  private def activeStoreDir(fs: org.apache.hadoop.fs.FileSystem,
-                             storePath: String): Option[String] =
-    if (fs.exists(new org.apache.hadoop.fs.Path(storePath))) Some(storePath)
-    else if (fs.exists(new org.apache.hadoop.fs.Path(s"$storePath.prev")))
-      Some(s"$storePath.prev")
-    else None
-
   /** Merged batch ids from a store dir's `_batches` ledger. */
-  private def readLedger(fs: org.apache.hadoop.fs.FileSystem, dir: String): Set[Long] = {
-    val ledger = new org.apache.hadoop.fs.Path(s"$dir/_batches")
-    if (fs.exists(ledger)) {
-      val in = fs.open(ledger)
-      try scala.io.Source.fromInputStream(in).getLines().map(_.trim.toLong).toSet
-      finally in.close()
-    } else Set.empty
-  }
+  private def readLedger(fs: org.apache.hadoop.fs.FileSystem, dir: String): Set[Long] =
+    BatchStore.readFile(fs, new org.apache.hadoop.fs.Path(dir, "_batches"))
+      .fold(Set.empty[Long])(_.linesIterator.map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet)
 
-  /** Write the updated ledger into a STAGING dir (it lands with the data in
-    * the same [[swapInStore]], so store and ledger can never diverge).
+  /** Stage `merged` with its `_batches` ledger and swap it in: the ledger
+    * lands in the same swap as the rows, so store and ledger never diverge.
     */
-  private def writeLedger(fs: org.apache.hadoop.fs.FileSystem, staging: String,
-                          ids: Set[Long]): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$staging/_batches"), true)
-    try out.write((ids.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
+  private def swapInLedgered(fs: org.apache.hadoop.fs.FileSystem, storePath: String,
+                             tag: String, merged: DataFrame, ids: Set[Long],
+                             preledger: Boolean = false): Unit =
+    BatchStore.replace(fs, storePath, tag) { staging =>
+      merged.write.mode("overwrite").parquet(staging)
+      BatchStore.writeFile(fs, new org.apache.hadoop.fs.Path(staging, "_batches"),
+        ids.toSeq.sorted.mkString("\n") + "\n")
+      if (preledger) BatchStore.writeFile(fs,
+        new org.apache.hadoop.fs.Path(staging, "_preledger"),
+        "history precedes slice recording\n")
+    }
 
   private def ledgeredSumMerge(spark: SparkSession, storePath: String, batchId: Long)
                               (sketch: => DataFrame,
                                merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath), conf)
-    val active = activeStoreDir(fs, storePath)
+    val fs = BatchStore.fs(spark, storePath)
+    val active = BatchStore.activeOpt(fs, storePath)
     val seen: Set[Long] = active.map(readLedger(fs, _)).getOrElse(Set.empty)
     if (seen.contains(batchId)) return
     val merged = active.map(spark.read.parquet(_)) match {
       case Some(prev) => merge(prev, sketch)
       case None       => sketch
     }
-    val staging = s"$storePath.staging-$batchId"
-    merged.write.mode("overwrite").parquet(staging)
-    writeLedger(fs, staging, seen + batchId)
-    swapInStore(spark, staging, storePath)
+    swapInLedgered(fs, storePath, s"merge-$batchId", merged, seen + batchId)
   }
 
   /** Shared core for the IDEMPOTENT-merge sketch stores (HLL register max,
@@ -481,9 +431,8 @@ object StreamingPipeline {
                                    batchId: Long)
                                   (sketch: => DataFrame,
                                    merge: (DataFrame, DataFrame) => DataFrame): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath), conf)
-    val active = activeStoreDir(fs, storePath)
+    val fs = BatchStore.fs(spark, storePath)
+    val active = BatchStore.activeOpt(fs, storePath)
     val seen: Set[Long] = active.map(readLedger(fs, _)).getOrElse(Set.empty)
     // a LEDGERED batch id is an exact no-op, even though the merge itself
     // is idempotent: re-writing the slice would clobber an epoch tombstone
@@ -499,36 +448,13 @@ object StreamingPipeline {
       case Some(prev) => merge(prev, slice)
       case None       => slice
     }
-    val staging = s"$storePath.staging-$batchId"
-    merged.write.mode("overwrite").parquet(staging)
-    writeLedger(fs, staging, seen + batchId)
     // appending to a pre-existing store that has NO ledger means history
-    // was merged before slice recording existed — stamp it, so retirement
-    // refuses instead of silently dropping the unrecorded contributions
-    if (active.nonEmpty && seen.isEmpty) {
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, "_preledger"), true)
-      try out.write("history precedes slice recording\n".getBytes("UTF-8"))
-      finally out.close()
-    } else if (active.exists(a => fs.exists(
-        new org.apache.hadoop.fs.Path(a, "_preledger")))) {
-      val out = fs.create(new org.apache.hadoop.fs.Path(staging, "_preledger"), true)
-      try out.write("history precedes slice recording\n".getBytes("UTF-8"))
-      finally out.close()
-    }
-    swapInStore(spark, staging, storePath)
-  }
-
-  /** True iff the dir holds at least one data file (underscore/dot markers
-    * don't count — `_SUCCESS` alone is a tombstone, not data).
-    */
-  private def sliceHasData(fs: org.apache.hadoop.fs.FileSystem,
-                           d: org.apache.hadoop.fs.Path): Boolean = {
-    val it = fs.listFiles(d, true)
-    while (it.hasNext) {
-      val nm = it.next().getPath.getName
-      if (!nm.startsWith("_") && !nm.startsWith(".")) return true
-    }
-    false
+    // was merged before slice recording existed — stamp it (and keep the
+    // stamp), so retirement refuses instead of silently dropping the
+    // unrecorded contributions
+    swapInLedgered(fs, storePath, s"merge-$batchId", merged, seen + batchId,
+      preledger = active.nonEmpty && (seen.isEmpty ||
+        active.exists(a => fs.exists(new org.apache.hadoop.fs.Path(a, "_preledger")))))
   }
 
   /** Roll a pending slice-epoch journal forward ([[compactSketchSlices]]'
@@ -545,31 +471,25 @@ object StreamingPipeline {
                                 storePath: String): Unit = {
     val root = s"$storePath.slices"
     val journal = new org.apache.hadoop.fs.Path(root, "_epoch-pending")
-    if (!fs.exists(journal)) return
-    val in = fs.open(journal)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    val ids = txt.trim.split(",").map(_.toLong)
+    val ids = BatchStore.readFile(fs, journal).getOrElse(return)
+      .trim.split(",").map(_.toLong)
     val target = ids.head
     ids.tail.filter(_ != target).foreach { id =>
       val d = new org.apache.hadoop.fs.Path(s"$root/batch=$id")
       fs.delete(d, true)
       fs.mkdirs(d)
-      val out = fs.create(
-        new org.apache.hadoop.fs.Path(d, s"_merged-into-$target"), true)
-      try out.write(target.toString.getBytes("UTF-8")) finally out.close()
+      BatchStore.writeFile(fs, new org.apache.hadoop.fs.Path(d, s"_merged-into-$target"),
+        target.toString)
     }
-    // the target swap has its own crash windows: between swapDir's two
+    // the target swap has its own crash windows: between the swap's two
     // renames the target dir is MISSING with its old content at
-    // `batch=<t>.prev` (recoverDir restores it so the swap can re-run —
-    // swapDir requires the target to exist), and after the staging rename
-    // the `.prev` leftover must go (a `batch=N.prev` dir would crash the
-    // slice listing's id parse)
+    // `batch=<t>.prev` (recover restores it so the swap can re-run), and
+    // after the staging rename the `.prev` leftover must go (a
+    // `batch=N.prev` dir would crash the slice listing's id parse)
     val targetDir = s"$root/batch=$target"
-    graft.similarity.Similarity.recoverDir(fs, targetDir)
+    BatchStore.recover(fs, targetDir)
     val staging = new org.apache.hadoop.fs.Path(root, ".epoch-staged")
-    if (fs.exists(staging))
-      graft.similarity.Similarity.swapDir(fs, staging, targetDir)
+    if (fs.exists(staging)) BatchStore.swap(fs, staging, targetDir)
     fs.delete(new org.apache.hadoop.fs.Path(s"$targetDir.prev"), true)
     fs.delete(journal, false)
   }
@@ -600,17 +520,11 @@ object StreamingPipeline {
   private def compactSketchSlices(spark: SparkSession, storePath: String,
                                   upTo: Long,
                                   rebuild: Seq[DataFrame] => DataFrame): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath), conf)
+    val fs = BatchStore.fs(spark, storePath)
     val root = new org.apache.hadoop.fs.Path(s"$storePath.slices")
     if (!fs.exists(root)) return 0
     recoverSliceEpoch(spark, fs, storePath)
-    val cands = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .filter(_ <= upTo).sorted
-      .filter(id => sliceHasData(fs,
-        new org.apache.hadoop.fs.Path(s"$root/batch=$id")))
+    val cands = BatchStore.dataIds(fs, root.toString).filter(_ <= upTo)
     if (cands.length <= 1) return 0
     val target = cands.max
     val epoch = rebuild(cands.map(id =>
@@ -619,14 +533,9 @@ object StreamingPipeline {
     fs.delete(staging, true)
     epoch.write.mode("overwrite").parquet(staging.toString)
     // journal AFTER staging (existence == staged epoch complete, heal
-    // rolls forward); published atomically via temp + rename
-    val tmp = new org.apache.hadoop.fs.Path(root, ".epoch-journal-tmp")
-    val out = fs.create(tmp, true)
-    try out.write((target +: cands.filter(_ != target))
-      .mkString(",").getBytes("UTF-8")) finally out.close()
-    val journal = new org.apache.hadoop.fs.Path(root, "_epoch-pending")
-    fs.delete(journal, false)
-    require(fs.rename(tmp, journal), s"could not publish $journal")
+    // rolls forward), published atomically
+    BatchStore.publishFile(fs, new org.apache.hadoop.fs.Path(root, "_epoch-pending"),
+      (target +: cands.filter(_ != target)).mkString(","))
     recoverSliceEpoch(spark, fs, storePath)
     cands.length
   }
@@ -687,10 +596,9 @@ object StreamingPipeline {
                                   batchIds: Seq[Long],
                                   rebuild: Seq[DataFrame] => DataFrame): Unit = {
     require(batchIds.nonEmpty, "nothing to retire")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath), conf)
+    val fs = BatchStore.fs(spark, storePath)
     recoverSliceEpoch(spark, fs, storePath) // heal a torn epoch compaction first
-    val active = activeStoreDir(fs, storePath).getOrElse(
+    val active = BatchStore.activeOpt(fs, storePath).getOrElse(
       throw new IllegalArgumentException(s"no sketch store at $storePath"))
     require(!fs.exists(new org.apache.hadoop.fs.Path(active, "_preledger")),
       s"$storePath history precedes slice recording — rebuild the store " +
@@ -727,16 +635,12 @@ object StreamingPipeline {
     // (2) rebuild from the data-bearing survivors, ascending id order
     val survivors = seen.toSeq.sorted
       .map(id => new org.apache.hadoop.fs.Path(s"$storePath.slices/batch=$id"))
-      .filter(sliceHasData(fs, _))
+      .filter(BatchStore.hasData(fs, _))
       .map(p => spark.read.parquet(p.toString))
     val merged =
       if (survivors.nonEmpty) rebuild(survivors)
       else spark.read.parquet(active).limit(0) // all slices retired
-    val staging = s"$storePath.staging-retire"
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    merged.write.mode("overwrite").parquet(staging)
-    writeLedger(fs, staging, seen)
-    swapInStore(spark, staging, storePath)
+    swapInLedgered(fs, storePath, "retire", merged, seen)
   }
 
   /** [[retireSketchBatches]] for the HLL register store: survivor slices
@@ -876,17 +780,15 @@ object StreamingPipeline {
                         bands: Int = 4, threshold: Double = 0.8)
                        (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath), conf)
+    val fs = BatchStore.fs(spark, storePath)
     // heal a compactMinhashStore crash window BEFORE the ledger check: if a
     // crash between the compaction's two renames left only `<half>.prev`,
     // proceeding would see an empty store (stored() returns None), re-mine
     // without history, and strand the compacted corpus in the .prev dirs —
-    // the same recoverDir treatment the IVF/LSH appenders apply
+    // the same BatchStore.recover treatment the IVF/LSH appenders apply
     graft.store.MaintenanceLock.withLock(fs, storePath, "minhash-append") {
     Seq("sets", "bands", "pairs", "retired").foreach(h =>
-      graft.similarity.Similarity.recoverDir(fs, s"$storePath/$h"))
-    val ledger = new org.apache.hadoop.fs.Path(s"$storePath/pairs/batch=$batchId")
+      BatchStore.recover(fs, s"$storePath/$h"))
     if (graft.store.Ledger.landed(fs, s"$storePath/pairs", batchId)) return
     // stored state = every published batch dir EXCEPT this id's partial
     // leftovers (a crashed attempt's sets/bands land before the pairs
@@ -895,10 +797,10 @@ object StreamingPipeline {
     // and are skipped. A retired-then-re-sent doc (the changed-doc delta
     // cycle) passes the already-stored filter and re-enters with its new
     // text, because its old rows are dead in this view.
-    val retired = minhashRetirements(spark, fs, storePath, exclude = None)
+    val retired = BatchStore.readRetirements(spark, fs, storePath)
     def stored(half: String): Option[DataFrame] =
-      readHalfWithBatch(spark, fs, s"$storePath/$half", exclude = Some(batchId))
-        .map(df => aliveRows(df, retired, Seq("doc_id")).drop("batch"))
+      BatchStore.readBatches(spark, fs, s"$storePath/$half", exclude = Some(batchId))
+        .map(df => aliveDocs(df, retired, "doc_id").drop("batch"))
     val storedSets = stored("sets")
     val storedBands = stored("bands")
     val (batchSets, batchBands) = graft.dedup.Dedup.minhashState(batch, n, numPerms, bands)
@@ -915,98 +817,35 @@ object StreamingPipeline {
     val dupPairs = graft.dedup.Dedup
       .minhashIncrementPairs(newBands, allBands, allSets, threshold)
     // deterministic halves land first (replays overwrite them identically);
-    // the pairs rename publishes the batch. Each half publishes by staged
-    // RENAME, not a direct dir write (r17 ADVICE): with committer v2 a
-    // crashed write job would leave its committed tasks' part files
-    // visible in batch=<id>, a compaction could merge that torn subset
-    // into the base, and the replay (pairs ledger never landed) would then
-    // re-land the full batch — duplicated set/band rows. The staged rename
-    // keeps a torn write invisible (dot-dirs are skipped by every reader
-    // and by compaction), restoring the kill-anywhere drill contract v1's
-    // _temporary dirs used to provide.
+    // the pairs publish is the commit marker.
     // rebalance before the write (guide §6): the halves otherwise land one
     // tiny part file per upstream task (31/dir measured at sf0.1) — paid
     // again by every later append's stored() read and every compaction
     // listing. AQE sizes the rebalanced files by advisoryPartitionSize, so
     // a 100 TB batch still fans out; rows are unchanged, only file layout.
-    def publishHalf(half: String, df: DataFrame): Unit = {
-      val staging = new org.apache.hadoop.fs.Path(s"$storePath/$half/.staging-$batchId")
-      fs.delete(staging, true)
-      df.hint("rebalance").write.mode("overwrite").parquet(staging.toString)
-      val dest = new org.apache.hadoop.fs.Path(s"$storePath/$half/batch=$batchId")
-      fs.delete(dest, true) // a crashed replay's complete-but-unledgered dir
-      require(fs.rename(staging, dest), s"could not land $staging at $dest")
-    }
+    def publishHalf(half: String, df: DataFrame): Unit =
+      BatchStore.publish(fs, s"$storePath/$half", batchId)(
+        df.hint("rebalance").write.mode("overwrite").parquet(_))
     publishHalf("sets", newSets)
     publishHalf("bands", newBands)
-    val staging = new org.apache.hadoop.fs.Path(s"$storePath/pairs/.staging-$batchId")
-    fs.delete(staging, true)
-    dupPairs.hint("rebalance").write.mode("overwrite").parquet(staging.toString)
-    require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
+    publishHalf("pairs", dupPairs)
     }
   }
 
-  /** Per-dir read of a store half that PRESERVES the batch id as a column
-    * (an explicit-dir-list read loses the partition column; the retirement
-    * ordering rule needs it). Tombstones and empty dirs are skipped; the
-    * dir count is bounded by appends since the last compaction.
+  /** The minhash liveness rule: [[BatchStore.alive]] with one doc-id column
+    * (for pairs, applied to EITHER endpoint in turn) matched against the
+    * retirement ledger's `doc_id`.
     */
-  private def readHalfWithBatch(spark: SparkSession,
-                                fs: org.apache.hadoop.fs.FileSystem,
-                                root: String,
-                                exclude: Option[Long]): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(p)) return None
-    // "has data" = a real part file, not just _SUCCESS — an all-retired
-    // compaction can leave a marker-only base dir
-    def hasData(d: org.apache.hadoop.fs.Path): Boolean = {
-      val it = fs.listFiles(d, true)
-      while (it.hasNext) {
-        val n = it.next().getPath.getName
-        if (!n.startsWith("_") && !n.startsWith(".")) return true
-      }
-      false
-    }
-    val ids = fs.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => hasData(s.getPath))
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .filter(id => !exclude.contains(id))
-    if (ids.isEmpty) None
-    else Some(ids.map(id =>
-      spark.read.parquet(s"$root/batch=$id").withColumn("batch", lit(id)))
-      .reduce(_ unionByName _))
-  }
-
-  /** The retirement ledger view: (doc_id, rbatch) for every published
-    * retirement batch, or None when the store has none pending.
-    */
-  private def minhashRetirements(spark: SparkSession,
-                                 fs: org.apache.hadoop.fs.FileSystem,
-                                 storePath: String,
-                                 exclude: Option[Long]): Option[DataFrame] =
-    readHalfWithBatch(spark, fs, s"$storePath/retired", exclude)
-      .map(_.select(col("doc_id").as("__rid"), col("batch").as("__rbatch")))
-
-  /** The liveness rule shared by every reader of a retire-capable store:
-    * a row published at batch k is dead iff some retirement batch r > k
-    * names its doc id (for pairs, EITHER endpoint). Strictly-greater is
-    * what lets a retired id re-enter at a later append (the changed-doc
-    * delta cycle) without the tombstone eating its new rows — and what
-    * keeps stale retirement rows harmless after compaction lands the
-    * merged base at the max data id.
-    */
-  private def aliveRows(df: DataFrame, retired: Option[DataFrame],
-                        idCols: Seq[String]): DataFrame =
-    retired.fold(df)(r => idCols.foldLeft(df)((d, c) =>
-      d.join(r, d(c) === r("__rid") && r("__rbatch") > d("batch"), "left_anti")))
+  private def aliveDocs(df: DataFrame, retired: Option[DataFrame],
+                        idCol: String): DataFrame =
+    BatchStore.alive(df, retired, Seq(idCol -> "doc_id"))
 
   /** Retirement half of the MinHash dedup store — [[graft.text.TextOps
     * .retireLm]]'s treatment for a ROW store (signatures are per-doc rows,
     * not additive counts, so retirement is a ledgered tombstone batch
     * rather than a negated delta): land the departing doc ids under
     * `retired/batch=<retireId>`; every reader and the appender's
-    * already-stored filter apply [[aliveRows]]' ordering rule, and
+    * already-stored filter apply [[aliveDocs]]' ordering rule, and
     * [[compactMinhashStore]] applies retirements physically. `retireId`
     * must exceed every published batch id, and re-appends of a changed doc
     * must use a later id still — the natural monotone batch numbering of
@@ -1016,18 +855,13 @@ object StreamingPipeline {
     */
   def retireMinhashStore(spark: SparkSession, storePath: String,
                          retiredIds: DataFrame, retireId: Long): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, storePath)
     graft.store.MaintenanceLock.withLock(fs, storePath, "minhash-retire") {
-      graft.similarity.Similarity.recoverDir(fs, s"$storePath/retired")
-      val ledger = new org.apache.hadoop.fs.Path(s"$storePath/retired/batch=$retireId")
+      BatchStore.recover(fs, s"$storePath/retired")
       if (graft.store.Ledger.landed(fs, s"$storePath/retired", retireId)) false
       else {
-        val staging = new org.apache.hadoop.fs.Path(s"$storePath/retired/.staging-$retireId")
-        fs.delete(staging, true)
-        retiredIds.select(col("doc_id")).distinct()
-          .write.mode("overwrite").parquet(staging.toString)
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
+        BatchStore.publish(fs, s"$storePath/retired", retireId)(
+          retiredIds.select(col("doc_id")).distinct().write.mode("overwrite").parquet(_))
         true
       }
     }
@@ -1041,15 +875,13 @@ object StreamingPipeline {
     * caller did.
     */
   def readDedupPairs(spark: SparkSession, storePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
-    val retired = minhashRetirements(spark, fs, storePath, exclude = None)
-    val pairs = readHalfWithBatch(spark, fs, s"$storePath/pairs", exclude = None)
+    val fs = BatchStore.fs(spark, storePath)
+    val retired = BatchStore.readRetirements(spark, fs, storePath)
+    val pairs = BatchStore.readBatches(spark, fs, s"$storePath/pairs")
       .getOrElse(return spark.emptyDataFrame
         .select(lit(0L).as("doc_a"), lit(0L).as("doc_b"), lit(0.0).as("jaccard"))
         .limit(0))
-    aliveRows(aliveRows(pairs, retired, Seq("doc_a")), retired, Seq("doc_b"))
-      .drop("batch")
+    aliveDocs(aliveDocs(pairs, retired, "doc_a"), retired, "doc_b").drop("batch")
   }
 
   /** [[graft.similarity.Similarity.compactIvfIndex]] for the MinHash dedup
@@ -1059,39 +891,30 @@ object StreamingPipeline {
     * retirements physically on the way through. The merged base lands at
     * the MAX data id (not 0) so that if blanking the applied retirement
     * rows crashes midway, the leftover retirement ids (all <= maxId) can
-    * never re-kill the compacted rows — the [[aliveRows]] strictly-greater
+    * never re-kill the compacted rows — the [[aliveDocs]] strictly-greater
     * rule makes the replay idempotent. Retirement ledger dirs survive as
     * empty tombstones, so retire replays stay refused. Run it between
     * triggers; the probe/append path needs no coordination beyond the
     * single-maintainer assumption all the stores share.
     */
   def compactMinhashStore(spark: SparkSession, storePath: String): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, storePath)
     graft.store.MaintenanceLock.withLock(fs, storePath, "minhash-compact") {
-      val retired = minhashRetirements(spark, fs, storePath, exclude = None)
+      val retired = BatchStore.readRetirements(spark, fs, storePath)
       def alive(idCols: Seq[String]): DataFrame => DataFrame =
-        df => idCols.foldLeft(df)((d, c) => aliveRows(d, retired, Seq(c)))
+        df => idCols.foldLeft(df)((d, c) => aliveDocs(d, retired, c))
       // three disjoint halves rebuilding independently under the one store
       // lock this thread already holds — overlap them (guide §2.6)
       val n = graft.core.Par.sumSections(
         Seq("sets" -> Seq("doc_id"), "bands" -> Seq("doc_id"),
           "pairs" -> Seq("doc_a", "doc_b")).map { case (h, idCols) => () =>
-          graft.similarity.Similarity.compactBatchStore(spark, s"$storePath/$h",
-            Seq.empty, alive(idCols), baseAtMaxId = retired.nonEmpty,
-            forceRewrite = retired.nonEmpty, vacuumLedger = true)
+          BatchStore.compact(spark, s"$storePath/$h", alive(idCols),
+            retired.nonEmpty, vacuumLedger = true)
         }: _*)
-      // retirements are now applied (or there were none): blank the ledger
-      // dirs to empty tombstones. A crash mid-blank leaves rows that the
-      // max-id base makes harmless; the next compaction finishes the job.
-      val rp = new org.apache.hadoop.fs.Path(s"$storePath/retired")
-      if (retired.nonEmpty && fs.exists(rp)) {
-        fs.listStatus(rp)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-          .foreach { d =>
-            fs.listStatus(d.getPath).foreach(f => fs.delete(f.getPath, false))
-          }
-      }
+      // retirements are now applied (or there were none): blank the ledger.
+      // A crash mid-blank leaves rows that the max-id base makes harmless;
+      // the next compaction finishes the job.
+      if (retired.nonEmpty) BatchStore.blankRetirements(fs, storePath)
       n
     }
   }
@@ -1215,15 +1038,10 @@ object StreamingPipeline {
     */
   def frameAppendBatch(storePath: String, transform: DataFrame => DataFrame)
                       (batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(s"$storePath/batch=$batchId")
+    val fs = BatchStore.fs(batch.sparkSession, storePath)
     if (graft.store.Ledger.landed(fs, storePath, batchId)) return
-    val staging = new org.apache.hadoop.fs.Path(s"$storePath/.staging-$batchId")
-    fs.delete(staging, true)
-    transform(batch).write.mode("overwrite").parquet(staging.toString)
-    require(fs.rename(staging, dst), s"could not land $staging at $dst")
+    BatchStore.publish(fs, storePath, batchId)(
+      transform(batch).write.mode("overwrite").parquet(_))
   }
 
   /** Streaming frame-store maintenance: doc stream -> per-micro-batch
@@ -1272,37 +1090,24 @@ object StreamingPipeline {
                               chunkSize: Int = 64, chunkStride: Int = 48)(
       batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, storePath)
     graft.store.MaintenanceLock.withLock(fs, storePath, "pack-append") {
-      def hp(p: String) = new org.apache.hadoop.fs.Path(p)
       val packDir = s"$storePath/pack"; val tailsDir = s"$storePath/tails"
       // heal a compaction that died inside its swap window first
-      Seq(packDir, tailsDir).foreach(d =>
-        graft.similarity.Similarity.recoverDir(fs, d))
-      def batchIds(dir: String): Seq[Long] =
-        if (!fs.exists(hp(dir))) Seq.empty
-        else fs.listStatus(hp(dir)).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("batch=")).map(_.drop(6).toLong).sorted
+      Seq(packDir, tailsDir).foreach(BatchStore.recover(fs, _))
       // compaction leaves published ids as EMPTY tombstone dirs (the
       // replay ledger must survive it) — reads must target live dirs only
-      def liveIds(dir: String): Seq[Long] = batchIds(dir)
-        .filter(id => fs.listFiles(hp(s"$dir/batch=$id"), true).hasNext)
+      def liveIds(dir: String): Seq[Long] = BatchStore.dataIds(fs, dir)
       def tailsOf(df: DataFrame) = df.groupBy("shard")
         .agg(max("doc_id").as("max_id"), sum("n_tokens").as("tok_total"))
       def mergeTails(a: DataFrame, b: DataFrame) = a.unionByName(b)
         .groupBy("shard")
         .agg(max("max_id").as("max_id"), sum("tok_total").as("tok_total"))
-      def land(df: DataFrame, dir: String, id: Long): Unit = {
-        val staging = s"$dir/.staging-$id"
-        fs.delete(hp(staging), true)
-        df.write.mode("overwrite").parquet(staging)
-        require(fs.rename(hp(staging), hp(s"$dir/batch=$id")),
-          s"could not land $staging")
-      }
+      def land(df: DataFrame, dir: String, id: Long): Unit =
+        BatchStore.publish(fs, dir, id)(df.write.mode("overwrite").parquet(_))
       // HEAL: any LIVE pack batch missing its tails snapshot (the crash
       // window) gets it re-derived before anything else reads the tails
-      val haveTails = batchIds(tailsDir).toSet
+      val haveTails = BatchStore.batchIds(fs, tailsDir).toSet
       liveIds(packDir).filterNot(haveTails).foreach { id =>
         val prev = liveIds(tailsDir).filter(_ < id)
         val prevTails =
@@ -1366,64 +1171,48 @@ object StreamingPipeline {
     * correctly with either. Returns true when anything merged.
     */
   def compactPackedExport(spark: SparkSession, storePath: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, storePath)
     graft.store.MaintenanceLock.withLock(fs, storePath, "pack-compact") {
-      def hp(p: String) = new org.apache.hadoop.fs.Path(p)
       val packDir = s"$storePath/pack"; val tailsDir = s"$storePath/tails"
-      Seq(packDir, tailsDir).foreach(d =>
-        graft.similarity.Similarity.recoverDir(fs, d))
-      if (!fs.exists(hp(packDir))) false
+      Seq(packDir, tailsDir).foreach(BatchStore.recover(fs, _))
+      def ids(dir: String) = BatchStore.batchIds(fs, dir)
+      if (BatchStore.dataIds(fs, packDir).size <= 1) false
       else {
-        def ids(dir: String) =
-          if (!fs.exists(hp(dir))) Seq.empty[Long]
-          else fs.listStatus(hp(dir)).toSeq
-            .map(_.getPath.getName).filter(_.startsWith("batch="))
-            .map(_.drop(6).toLong)
-        def live(dir: String) =
-          ids(dir).filter(id => fs.listFiles(hp(s"$dir/batch=$id"), true).hasNext)
-        if (live(packDir).size <= 1) false
-        else {
-          val merged = spark.read.parquet(packDir)
-            .select("shard", "bin", "doc_id", "n_tokens", "bin_offset")
-            .localCheckpoint(true)
-          // Collapse the tails FROM the merged pack rows, not from the
-          // latest tails snapshot (r15 ADVICE 1): if the newest pack
-          // batch landed without its tails (the torn-append window),
-          // the latest snapshot is STALE — collapsing it to batch=0
-          // would seed every later append's cum_excl from a too-small
-          // tok_total, and post-compaction the heal could never detect
-          // it (pack batch=0 has a matching tails batch=0). The pack
-          // rows carry every chunk's folded id and token count, so
-          // groupBy(shard).agg(max, sum) IS the exact cumulative state
-          // by construction — and it also covers the no-tails-at-all
-          // case that made live(tailsDir).max throw on empty.
-          val latestTails = merged.groupBy("shard")
-            .agg(max("doc_id").as("max_id"), sum("n_tokens").as("tok_total"))
-            .localCheckpoint(true)
-          val packStaging = s"$storePath/.pack-compact"
-          fs.delete(hp(packStaging), true)
-          merged.write.mode("overwrite").parquet(s"$packStaging/batch=0")
-          val tailsStaging = s"$storePath/.tails-compact"
-          fs.delete(hp(tailsStaging), true)
-          latestTails.write.mode("overwrite").parquet(s"$tailsStaging/batch=0")
-          // self-running vacuum: ONE watermark marker per half instead of
-          // a tombstone dir per published id. The tails watermark covers
-          // the pack ledger too — a tails id can trail its pack id
-          // through the torn-append window, and the union keeps the two
-          // halves' replay rules aligned after the swap
-          graft.store.Ledger.stampCompactionWatermark(fs, packDir, packStaging,
-            ids(packDir))
-          graft.store.Ledger.stampCompactionWatermark(fs, tailsDir, tailsStaging,
-            (ids(packDir) ++ ids(tailsDir)).distinct)
-          graft.similarity.Similarity.swapDir(fs, hp(packStaging), packDir)
-          // a store whose every tails snapshot was lost to crashes has no
-          // tails dir to move aside — seed one so the swap's ledger
-          // contract (main always exists around the window) holds
-          if (!fs.exists(hp(tailsDir))) fs.mkdirs(hp(tailsDir))
-          graft.similarity.Similarity.swapDir(fs, hp(tailsStaging), tailsDir)
-          true
-        }
+        val merged = spark.read.parquet(packDir)
+          .select("shard", "bin", "doc_id", "n_tokens", "bin_offset")
+          .localCheckpoint(true)
+        // Collapse the tails FROM the merged pack rows, not from the
+        // latest tails snapshot (r15 ADVICE 1): if the newest pack
+        // batch landed without its tails (the torn-append window),
+        // the latest snapshot is STALE — collapsing it to batch=0
+        // would seed every later append's cum_excl from a too-small
+        // tok_total, and post-compaction the heal could never detect
+        // it (pack batch=0 has a matching tails batch=0). The pack
+        // rows carry every chunk's folded id and token count, so
+        // groupBy(shard).agg(max, sum) IS the exact cumulative state
+        // by construction — and it also covers the no-tails-at-all
+        // case that made live(tailsDir).max throw on empty.
+        val latestTails = merged.groupBy("shard")
+          .agg(max("doc_id").as("max_id"), sum("n_tokens").as("tok_total"))
+          .localCheckpoint(true)
+        // self-running vacuum: ONE watermark marker per half instead of
+        // a tombstone dir per published id. The tails watermark covers
+        // the pack ledger too — a tails id can trail its pack id
+        // through the torn-append window, and the union keeps the two
+        // halves' replay rules aligned after the swap
+        def stageHalf(dir: String, df: DataFrame, ledgerIds: Seq[Long]) =
+          BatchStore.stage(fs, dir, "compact") { st =>
+            df.write.mode("overwrite").parquet(s"$st/batch=0")
+            BatchStore.stageLedger(fs, dir, st, ledgerIds, 0L, vacuumLedger = true)
+          }
+        val packStaging = stageHalf(packDir, merged, ids(packDir))
+        val tailsStaging = stageHalf(tailsDir, latestTails,
+          (ids(packDir) ++ ids(tailsDir)).distinct)
+        // a store whose every tails snapshot was lost to crashes has no
+        // tails dir to move aside; the swap then just lands the staging
+        BatchStore.swap(fs, packStaging, packDir)
+        BatchStore.swap(fs, tailsStaging, tailsDir)
+        true
       }
     }
   }
@@ -1465,19 +1254,12 @@ object StreamingPipeline {
                          nShards: Int, newDocs: DataFrame,
                          affectedUnitIds: DataFrame,
                          chunkSize: Int = 64, chunkStride: Int = 48): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, storePath)
     graft.store.MaintenanceLock.withLock(fs, storePath, "pack-repack") {
-      def hp(p: String) = new org.apache.hadoop.fs.Path(p)
       val packDir = s"$storePath/pack"; val tailsDir = s"$storePath/tails"
-      Seq(packDir, tailsDir).foreach(d =>
-        graft.similarity.Similarity.recoverDir(fs, d))
-      def ids(dir: String): Seq[Long] =
-        if (!fs.exists(hp(dir))) Seq.empty
-        else fs.listStatus(hp(dir)).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("batch=")).map(_.drop(6).toLong)
-      require(ids(packDir).exists(id =>
-        fs.listFiles(hp(s"$packDir/batch=$id"), true).hasNext),
+      Seq(packDir, tailsDir).foreach(BatchStore.recover(fs, _))
+      def ids(dir: String): Seq[Long] = BatchStore.batchIds(fs, dir)
+      require(BatchStore.dataIds(fs, packDir).nonEmpty,
         s"repackPackedExport: $packDir holds no packed data to repair")
       val unitsB = graft.text.TextOps
         .chunkDocs(newDocs, size = chunkSize, stride = chunkStride)
@@ -1499,15 +1281,11 @@ object StreamingPipeline {
         (ids(packDir) ++ ids(tailsDir)).foldLeft(0L)(math.max) + 1L,
         math.max(graft.store.Ledger.watermark(fs, packDir),
           graft.store.Ledger.watermark(fs, tailsDir)))
-      for ((dir, df, tag) <- Seq((packDir, packB, "pack"),
-                                 (tailsDir, tailsB, "tails"))) {
-        val staging = s"$storePath/.$tag-repack"
-        fs.delete(hp(staging), true)
-        df.write.mode("overwrite").parquet(s"$staging/batch=0")
-        graft.store.Ledger.vacuum(fs, staging, w) // stamps the watermark
-        if (!fs.exists(hp(dir))) fs.mkdirs(hp(dir))
-        graft.similarity.Similarity.swapDir(fs, hp(staging), dir)
-      }
+      for ((dir, df) <- Seq(packDir -> packB, tailsDir -> tailsB))
+        BatchStore.replace(fs, dir, "repack") { staging =>
+          df.write.mode("overwrite").parquet(s"$staging/batch=0")
+          graft.store.Ledger.vacuum(fs, staging, w) // stamps the watermark
+        }
     }
   }
 
@@ -1519,9 +1297,8 @@ object StreamingPipeline {
     */
   def packedExportLedger(spark: SparkSession, storePath: String): DataFrame =
     graft.operators.Shards.packedLedger(
-      spark.read.parquet(graft.similarity.Similarity.activeDir(
-        org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-          spark.sparkContext.hadoopConfiguration), s"$storePath/pack")))
+      spark.read.parquet(BatchStore.active(BatchStore.fs(spark, storePath),
+        s"$storePath/pack")))
 
   /** Streaming packed-export maintenance: doc stream -> per-micro-batch
     * tail appends via [[packedExportAppendBatch]].
@@ -1665,7 +1442,7 @@ object StreamingPipeline {
     * `_batches` ledger is needed: a replayed batch re-ORs the same bits and
     * the store after ANY prefix of batches is bit-identical to
     * [[graft.sketch.Sketches.bloomWords]] over the same rows. Lands via the
-    * same staged [[swapInStore]] crash contract as the other maintainers.
+    * same staged [[BatchStore.swap]] crash contract as the other maintainers.
     */
   def bloomMergeBatch(storePath: String, itemCol: String,
                       k: Int = 4, m: Int = 1 << 21)
@@ -1706,16 +1483,12 @@ object StreamingPipeline {
   def decontamRouteBatch(storePath: String, outPath: String)
                         (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(outPath),
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(s"$outPath/batch=$batchId")
+    val fs = BatchStore.fs(spark, outPath)
     if (graft.store.Ledger.landed(fs, outPath, batchId)) return
     // read-only .prev fallbacks cover appendDecontamBench's words swap and
     // compactDecontamStore's shingle swap windows
-    val storeFs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
-    def active(h: String): String =
-      graft.similarity.Similarity.activeDir(storeFs, s"$storePath/$h")
+    val storeFs = BatchStore.fs(spark, storePath)
+    def active(h: String): String = BatchStore.active(storeFs, s"$storePath/$h")
     val cfg = spark.read.parquet(active("config")).head()
     val (n, k, m) = (cfg.getAs[Int]("n"), cfg.getAs[Int]("k"), cfg.getAs[Int]("m"))
     // the exact half reads LIVE shingles only, so a rotated benchmark
@@ -1725,10 +1498,7 @@ object StreamingPipeline {
       graft.dedup.Dedup.wordShingles(batch, n),
       graft.dedup.Dedup.liveDecontamShingles(spark, storePath),
       spark.read.parquet(active("words")), k, m)
-    val staging = new org.apache.hadoop.fs.Path(s"$outPath/.staging-$batchId")
-    fs.delete(staging, true)
-    verdicts.write.mode("overwrite").parquet(staging.toString)
-    require(fs.rename(staging, dst), s"could not land $staging at $dst")
+    BatchStore.publish(fs, outPath, batchId)(verdicts.write.mode("overwrite").parquet(_))
   }
 
   /** Incremental decontam-store maintenance — the BENCH side's
@@ -1747,7 +1517,7 @@ object StreamingPipeline {
 
   /** Streaming decontam-store maintenance: benchmark-doc stream ->
     * per-micro-batch OR-merge appends via [[decontamAppendBatch]]. Routing
-    * continues through [[decontamRouteBatch]] unchanged (its activeDir
+    * continues through [[decontamRouteBatch]] unchanged (its BatchStore.active
     * reads cover the words swap).
     */
   def decontamAppendStream(benchDocs: DataFrame, storePath: String,
@@ -1913,13 +1683,11 @@ object StreamingPipeline {
                      attrCols: Seq[String], buckets: Int = 32)
                     (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, storePath)
     val bucketExpr = pmod(hash(keyCols.map(col): _*), lit(buckets))
     graft.store.MaintenanceLock.withLock(fs, storePath, "scd-append") {
-      graft.similarity.Similarity.recoverDir(fs, s"$storePath/changes")
+      BatchStore.recover(fs, s"$storePath/changes")
       healScdPending(spark, fs, storePath, keyCols, tsCol, attrCols, buckets)
-      val ledger = new org.apache.hadoop.fs.Path(s"$storePath/changes/batch=$batchId")
       if (graft.store.Ledger.landed(fs, s"$storePath/changes", batchId)) return
       val stored = storedScdChanges(spark, fs, storePath, keyCols, batchId)
       val cols = keyCols ++ Seq(tsCol) ++ attrCols
@@ -1946,31 +1714,24 @@ object StreamingPipeline {
       // still ledger (below, for replay refusal), they just never serve
       val freshAlive = aliveScdChanges(
           fresh.withColumn("batch", lit(batchId)),
-          readScdRetirements(spark, fs, storePath), keyCols)
+          BatchStore.readRetirements(spark, fs, storePath), keyCols)
         .drop("batch")
       val touched = freshAlive.select(bucketExpr.as("bucket")).distinct()
         .collect().map(_.getInt(0)).sorted // bounded: <= `buckets` values
+      val pending = new org.apache.hadoop.fs.Path(s"$storePath/dim/_pending-$batchId")
       if (touched.nonEmpty) {
-        val pending = new org.apache.hadoop.fs.Path(s"$storePath/dim/_pending-$batchId")
-        writeLines(fs, pending, touched.map(_.toString))
+        BatchStore.writeFile(fs, pending, touched.mkString("", "\n", "\n"))
         val all = stored.map(_.unionByName(freshAlive)).getOrElse(freshAlive)
           .withColumn("bucket", bucketExpr)
           .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
         rewriteScdBuckets(spark, all, storePath, keyCols, tsCol, attrCols,
           touched.length, buckets)
-        val staging = new org.apache.hadoop.fs.Path(s"$storePath/changes/.staging-$batchId")
-        fs.delete(staging, true)
-        fresh.write.mode("overwrite").parquet(staging.toString)
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
-        fs.delete(pending, false)
-      } else {
-        // a fully-duplicate batch still lands its (empty) ledger so the
-        // replay check stays monotone
-        val staging = new org.apache.hadoop.fs.Path(s"$storePath/changes/.staging-$batchId")
-        fs.delete(staging, true)
-        fresh.write.mode("overwrite").parquet(staging.toString)
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
       }
+      // a fully-duplicate batch still lands its (empty) ledger so the
+      // replay check stays monotone
+      BatchStore.publish(fs, s"$storePath/changes", batchId)(
+        fresh.write.mode("overwrite").parquet(_))
+      if (touched.nonEmpty) fs.delete(pending, false)
     }
   }
 
@@ -1983,24 +1744,20 @@ object StreamingPipeline {
     * With `keyCols` given and retirements pending, this is also the
     * PHYSICAL erasure point ([[retireScdEntities]]' contract): the rewrite
     * drops every dead row (the r > k rule, applied through the `batch`
-    * partition column compactBatchStore hands the transform), lands the
+    * partition column BatchStore.compact hands the transform), lands the
     * merged survivors at the MAX data id — so a crash mid-blank leaves
     * ledger rows the strictly-greater rule makes harmless — and then
     * blanks the retirement ledger to empty tombstone dirs.
     */
   def compactScdChanges(spark: SparkSession, storePath: String,
                         keyCols: Seq[String] = Seq.empty): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, storePath)
     graft.store.MaintenanceLock.withLock(fs, storePath, "scd-compact") {
       val retired =
-        if (keyCols.isEmpty) None else readScdRetirements(spark, fs, storePath)
-      val n = graft.similarity.Similarity.compactBatchStore(
-        spark, s"$storePath/changes", Seq.empty,
-        transform = df => aliveScdChanges(df, retired, keyCols),
-        baseAtMaxId = retired.nonEmpty, forceRewrite = retired.nonEmpty,
-        vacuumLedger = true)
-      if (retired.nonEmpty) blankScdRetirements(fs, storePath)
+        if (keyCols.isEmpty) None else BatchStore.readRetirements(spark, fs, storePath)
+      val n = BatchStore.compact(spark, s"$storePath/changes",
+        aliveScdChanges(_, retired, keyCols), retired.nonEmpty, vacuumLedger = true)
+      if (retired.nonEmpty) BatchStore.blankRetirements(fs, storePath)
       n
     }
   }
@@ -2035,10 +1792,9 @@ object StreamingPipeline {
                         keyCols: Seq[String], tsCol: String,
                         attrCols: Seq[String], buckets: Int = 32): Boolean = {
     require(retireId >= 1, "retireId 0 would predate the initial build")
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(storePath),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, storePath)
     graft.store.MaintenanceLock.withLock(fs, storePath, "scd-retire") {
-      graft.similarity.Similarity.recoverDir(fs, s"$storePath/changes")
+      BatchStore.recover(fs, s"$storePath/changes")
       healScdPending(spark, fs, storePath, keyCols, tsCol, attrCols, buckets)
       val changesRoot = new org.apache.hadoop.fs.Path(s"$storePath/changes")
       if (fs.exists(changesRoot)) {
@@ -2048,7 +1804,6 @@ object StreamingPipeline {
         require(retireId > maxData,
           s"retireId $retireId must exceed every published changes batch id (max $maxData)")
       }
-      val ledger = new org.apache.hadoop.fs.Path(s"$storePath/retired/batch=$retireId")
       if (graft.store.Ledger.landed(fs, s"$storePath/retired", retireId)) false
       else {
         val keys = retiredKeys.select(keyCols.map(col): _*).distinct()
@@ -2058,34 +1813,14 @@ object StreamingPipeline {
           .distinct().collect().map(_.getInt(0)).sorted // bounded: <= `buckets`
         val pending = new org.apache.hadoop.fs.Path(
           s"$storePath/dim/_pending-retire-$retireId")
-        writeLines(fs, pending, touched.map(_.toString))
-        val staging = new org.apache.hadoop.fs.Path(
-          s"$storePath/retired/.staging-$retireId")
-        fs.delete(staging, true)
-        keys.write.mode("overwrite").parquet(staging.toString)
-        require(fs.rename(staging, ledger), s"could not land $staging at $ledger")
+        BatchStore.writeFile(fs, pending, touched.mkString("", "\n", "\n"))
+        BatchStore.publish(fs, s"$storePath/retired", retireId)(
+          keys.write.mode("overwrite").parquet(_))
         recomputeScdBuckets(spark, fs, storePath, keyCols, tsCol, attrCols,
           buckets, touched)
         fs.delete(pending, false)
         true
       }
-    }
-  }
-
-  /** Blank the applied retirement batches to empty tombstone dirs after
-    * [[compactScdChanges]] rewrote the survivors (replays stay refused) —
-    * the erased keys themselves leave the store here, completing the
-    * hard delete.
-    */
-  private def blankScdRetirements(fs: org.apache.hadoop.fs.FileSystem,
-                                  storePath: String): Unit = {
-    val rp = new org.apache.hadoop.fs.Path(s"$storePath/retired")
-    if (fs.exists(rp)) {
-      fs.listStatus(rp)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        .foreach { d =>
-          fs.listStatus(d.getPath).foreach(f => fs.delete(f.getPath, false))
-        }
     }
   }
 
@@ -2103,8 +1838,7 @@ object StreamingPipeline {
     * `batch=<k>` dir reads with its id as a partition column (basePath
     * discovery), and rows dead under a pending retirement — some
     * `retired/batch=<r>` with r > k naming their key — are anti-joined
-    * away ([[graft.similarity.Similarity.aliveStoreRows]]' strictly-
-    * greater rule, composite-key variant). Callers see the bare change
+    * away ([[BatchStore.alive]]' strictly-greater rule, composite-key form). Callers see the bare change
     * schema; the batch id is internal.
     */
   private def storedScdChanges(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
@@ -2116,55 +1850,24 @@ object StreamingPipeline {
     val dirs = fs.listStatus(p)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
       .filterNot(_.getPath.getName == s"batch=$excludeId")
-      .filter(s => fs.listFiles(s.getPath, true).hasNext)
+      .filter(s => BatchStore.hasData(fs, s.getPath))
       .map(_.getPath.toString)
     if (dirs.isEmpty) None
     else {
       val df = spark.read.option("basePath", root).parquet(dirs.toIndexedSeq: _*)
-      Some(aliveScdChanges(df, readScdRetirements(spark, fs, storePath), keyCols)
+      Some(aliveScdChanges(df, BatchStore.readRetirements(spark, fs, storePath), keyCols)
         .drop("batch"))
     }
   }
 
-  /** Pending (un-applied) entity retirements: the key columns of every
-    * data-bearing `retired/batch=<r>` dir plus `__rbatch` = r, or None.
-    * After [[compactScdChanges]] applies and blanks the ledger the dirs
-    * survive as empty tombstones (retire replays stay refused) and this
-    * reads None — [[graft.similarity.Similarity.readStoreRetirements]]'
-    * treatment with composite keys.
-    */
-  private def readScdRetirements(spark: SparkSession,
-                                 fs: org.apache.hadoop.fs.FileSystem,
-                                 storePath: String): Option[DataFrame] = {
-    val root = s"$storePath/retired"
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(p)) return None
-    val ids = fs.listStatus(p)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .filter(s => fs.listFiles(s.getPath, true).hasNext)
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-    if (ids.isEmpty) None
-    else Some(ids.map(id =>
-        spark.read.parquet(s"$root/batch=$id").withColumn("__rbatch", lit(id)))
-      .reduce(_ unionByName _))
-  }
-
-  /** The liveness rule ([[graft.similarity.Similarity.aliveStoreRows]],
-    * composite-key form): a change row published at data batch k is dead
-    * iff some retirement batch r > k names its key. Strictly-greater is
-    * what lets a retired entity RE-ONBOARD — changes appended at a batch
-    * id above the retirement resurrect the key with only its new history.
-    * `df` must still carry its `batch` partition column; the retirement
-    * frame is broadcast (a GDPR erasure set is tiny next to the log).
+  /** The SCD liveness rule: [[BatchStore.alive]] over the composite key. A
+    * change row published at data batch k is dead iff some retirement
+    * batch r > k names its key; strictly-greater lets a retired entity
+    * RE-ONBOARD with only the history appended after the retirement.
     */
   private def aliveScdChanges(df: DataFrame, retired: Option[DataFrame],
                               keyCols: Seq[String]): DataFrame =
-    retired.fold(df) { r =>
-      val rr = r.select(keyCols.map(c => col(c).as(s"__r_$c")) :+ col("__rbatch"): _*)
-      val cond = keyCols.map(c => df(c) === rr(s"__r_$c")).reduce(_ && _) &&
-        rr("__rbatch") > df("batch").cast("long")
-      df.join(broadcast(rr), cond, "left_anti")
-    }
+    BatchStore.alive(df, retired, keyCols.map(c => c -> c))
 
   /** Recompute + dynamically overwrite the named buckets' dim partitions
     * from the given change set (already bucket-filtered, `bucket` column
@@ -2218,7 +1921,8 @@ object StreamingPipeline {
         // hole, r16 verdict finding 3)
         if (isRetire ||
             !graft.store.Ledger.landed(fs, s"$storePath/changes", id.toLong)) {
-          val touched = readLines(fs, m.getPath).map(_.trim.toInt).sorted
+          val touched = BatchStore.readFile(fs, m.getPath).toSeq
+            .flatMap(_.linesIterator.filter(_.nonEmpty)).map(_.trim.toInt).sorted
           recomputeScdBuckets(spark, fs, storePath, keyCols, tsCol, attrCols,
             buckets, touched)
         }
@@ -2258,20 +1962,5 @@ object StreamingPipeline {
         touched.foreach(b => fs.delete(
           new org.apache.hadoop.fs.Path(s"$storePath/dim/bucket=$b"), true))
     }
-  }
-
-  private def writeLines(fs: org.apache.hadoop.fs.FileSystem,
-                         p: org.apache.hadoop.fs.Path, lines: Seq[String]): Unit = {
-    val out = fs.create(p, true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def readLines(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path): Seq[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
-    finally in.close()
   }
 }

@@ -229,9 +229,7 @@ object Subword {
     * the main dir is mid-rename.
     */
   private[text] def activeVocabDir(spark: SparkSession, path: String): String =
-    graft.similarity.Similarity.activeDir(
-      org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-        spark.sparkContext.hadoopConfiguration), path)
+    graft.store.BatchStore.active(graft.store.BatchStore.fs(spark, path), path)
 
   /** q113 gate: the store round-trip must be invisible to tokenization.
     * Saves nothing itself — callers [[savePieces]] first — it loads the

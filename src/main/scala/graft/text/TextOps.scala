@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.store.BatchStore
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -511,8 +512,7 @@ object TextOps {
     */
   def saveLm(docs: DataFrame, path: String,
              textCol: String = "text", idCol: String = "doc_id"): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      docs.sparkSession.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(docs.sparkSession, path)
     // build semantics: a rebuild replaces the whole store, appends and all
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     writeLmTables(docs, path, batchId = 0L, negate = false, textCol, idCol)
@@ -539,28 +539,13 @@ object TextOps {
         if (negate) df.withColumn(c, -col(c)) else df
       val (uni, bi, tri, nTrain) =
         (sgn(uni0, "c"), sgn(bi0, "c"), sgn(tri0, "c"), sgn(nTrain0, "n_train"))
-      // Each table publishes by staged RENAME, not a direct dir write
-      // (r17 ADVICE): with committer v2 a crashed write job would leave
-      // its committed tasks' part files visible in batch=<id>; a compactLm
-      // before the replay would merge that torn subset into the base and
-      // the replay (uni commit marker never landed) would re-land the full
-      // delta — double-counted grams. Staged dot-dirs are invisible to
-      // readers and compaction, restoring v1's torn-write invisibility —
-      // and the uni RENAME is now an atomic commit marker rather than a
-      // multi-file write.
-      def land(half: String, df: DataFrame): Unit = {
-        val staging = new org.apache.hadoop.fs.Path(s"$path/$half/.staging-$batchId")
-        val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-          df.sparkSession.sparkContext.hadoopConfiguration)
-        fs.delete(staging, true)
-        // rebalance before the write (guide §6): tri otherwise lands one
-        // tiny file per task (16/dir measured); AQE sizes rebalanced files
-        // by advisoryPartitionSize so a 100 TB gram table still fans out
-        df.hint("rebalance").write.mode("overwrite").parquet(staging.toString)
-        val dest = new org.apache.hadoop.fs.Path(s"$path/$half/batch=$batchId")
-        fs.delete(dest, true) // a crashed replay's complete-but-unledgered dir
-        require(fs.rename(staging, dest), s"could not land $staging at $dest")
-      }
+      // rebalance before the write (guide §6): tri otherwise lands one
+      // tiny file per task (16/dir measured); AQE sizes rebalanced files
+      // by advisoryPartitionSize so a 100 TB gram table still fans out
+      val fs = BatchStore.fs(docs.sparkSession, path)
+      def land(half: String, df: DataFrame): Unit =
+        BatchStore.publish(fs, s"$path/$half", batchId)(
+          df.hint("rebalance").write.mode("overwrite").parquet(_))
       // first write materializes the cache; the next two read it warm
       land("tri", tri)
       graft.core.Par.sections(
@@ -613,12 +598,10 @@ object TextOps {
                           negate: Boolean, textCol: String, idCol: String): Boolean = {
     require(appendId != 0L, "appendId 0 is reserved for the initial build")
     val spark = docs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path,
       if (negate) "lm-retire" else "lm-append") {
-      Seq("uni", "bi", "tri", "meta").foreach(h =>
-        graft.similarity.Similarity.recoverDir(fs, s"$path/$h"))
+      Seq("uni", "bi", "tri", "meta").foreach(h => BatchStore.recover(fs, s"$path/$h"))
       if (graft.store.Ledger.landed(fs, s"$path/uni", appendId)) false
       else {
         writeLmTables(docs, path, appendId, negate, textCol, idCol)
@@ -629,7 +612,7 @@ object TextOps {
 
   /** Maintenance half: MERGE the accumulated per-batch count deltas into
     * one `batch=0` per table — unlike the index stores' row-preserving
-    * [[graft.similarity.Similarity.compactBatchStore]], LM compaction sums
+    * merge, [[BatchStore.compact]] here sums
     * counts per gram (exact long adds), so the store shrinks back to one
     * row per distinct n-gram no matter how many appends landed. Every
     * previously-published id stays behind as an empty tombstone dir so the
@@ -638,44 +621,21 @@ object TextOps {
     * Returns the number of tables that had anything to merge.
     */
   def compactLm(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "lm-compact") {
     // the four tables are disjoint dirs merging independently — overlap
-    // them (guide §2.6); each merge is internally the same job as before
-    val compacted = new java.util.concurrent.atomic.AtomicInteger(0)
-    graft.core.Par.sections(Seq("uni", "bi", "tri", "meta").map { h => () => {
-      val dir = s"$path/$h"
-      graft.similarity.Similarity.recoverDir(fs, dir)
-      val main = new org.apache.hadoop.fs.Path(dir)
-      if (fs.exists(main)) {
-        val batchDirs = fs.listStatus(main)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-        val dataIds = batchDirs.filter(s => fs.listFiles(s.getPath, true).hasNext)
-        if (dataIds.length > 1) {
-          val merged =
-            if (h == "meta")
-              spark.read.parquet(dir).agg(sum(col("n_train")).as("n_train")).coalesce(1)
-            else
-              // c > 0 drops grams fully retired by [[retireLm]] deltas, so
-              // a compacted retire+append store is row-identical to a
-              // fresh build over the surviving corpus
-              spark.read.parquet(dir).groupBy(col("g")).agg(sum(col("c")).as("c"))
-                .filter(col("c") > 0L)
-          val staging = new org.apache.hadoop.fs.Path(s"$path/.$h-compact")
-          fs.delete(staging, true)
-          merged.write.mode("overwrite").parquet(s"$staging/batch=0")
-          // self-running vacuum: one watermark marker instead of a
-          // tombstone dir per merged id (carries any prior watermark)
-          graft.store.Ledger.stampCompactionWatermark(fs, dir, staging.toString,
-            batchDirs.map(_.getPath.getName.stripPrefix("batch=").toLong).toSeq)
-          graft.similarity.Similarity.swapDir(fs, staging, dir)
-          compacted.incrementAndGet()
-        }
-      }
-      ()
-    }}: _*)
-    compacted.get()
+    // them (guide §2.6). Self-running vacuum: one watermark marker instead
+    // of a tombstone dir per merged id (carries any prior watermark)
+    graft.core.Par.sumSections(Seq("uni", "bi", "tri", "meta").map { h => () =>
+      val merge: DataFrame => DataFrame =
+        if (h == "meta") _.agg(sum(col("n_train")).as("n_train")).coalesce(1)
+        // c > 0 drops grams fully retired by [[retireLm]] deltas, so a
+        // compacted retire+append store is row-identical to a fresh build
+        // over the surviving corpus
+        else _.groupBy(col("g")).agg(sum(col("c")).as("c")).filter(col("c") > 0L)
+      math.min(1, BatchStore.compact(spark, s"$path/$h", merge,
+        vacuumLedger = true, layout = BatchStore.asMerged))
+    }: _*)
     }
   }
 
@@ -690,17 +650,16 @@ object TextOps {
   def scoreWithLm(docs: DataFrame, path: String,
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     // read-only .prev fallback covers the compactLm swap window; c > 0
     // drops grams fully retired by [[retireLm]] deltas (no-op otherwise:
     // a fresh fit has no non-positive counts)
     def counts(h: String): DataFrame =
-      spark.read.parquet(graft.similarity.Similarity.activeDir(fs, s"$path/$h"))
+      spark.read.parquet(BatchStore.active(fs, s"$path/$h"))
         .groupBy(col("g")).agg(sum(col("c")).as("c"))
         .filter(col("c") > 0L)
     val nTrain = spark.read
-      .parquet(graft.similarity.Similarity.activeDir(fs, s"$path/meta"))
+      .parquet(BatchStore.active(fs, s"$path/meta"))
       .agg(sum(col("n_train")).as("n_train"))
     scoreTrigramLm(docs, counts("uni"), counts("bi"), counts("tri"), nTrain,
       textCol, idCol)
@@ -1335,8 +1294,7 @@ object TextOps {
   def saveDsir(docs: DataFrame, isTarget: Column, m: Int, path: String,
                textCol: String = "text", idCol: String = "doc_id"): Unit = {
     val spark = docs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
     dsirPairCountsFlagged(docs, isTarget, m, textCol, idCol)
       .write.mode("overwrite").parquet(s"$path/buckets/batch=0")
@@ -1374,11 +1332,10 @@ object TextOps {
                             textCol: String, idCol: String): Boolean = {
     require(appendId != 0L, "appendId 0 is reserved for the initial build")
     val spark = docs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path,
       if (negate) "dsir-retire" else "dsir-append") {
-      graft.similarity.Similarity.recoverDir(fs, s"$path/buckets")
+      BatchStore.recover(fs, s"$path/buckets")
       if (graft.store.Ledger.landed(fs, s"$path/buckets", appendId)) false
       else {
         val m = readDsirM(spark, path)
@@ -1386,15 +1343,8 @@ object TextOps {
         val d = if (negate)
           d0.select(col("bucket"), (-col("ct")).as("ct"), (-col("cr")).as("cr"))
         else d0
-        // staged rename publish (r18): this dir's EXISTENCE is the ledger,
-        // so a direct write would mark a torn batch as landed — the same
-        // class as the r17-ADVICE minhash/LM finding, and here it would
-        // silently half-land counts rather than double them
-        val staging = new org.apache.hadoop.fs.Path(s"$path/buckets/.staging-$appendId")
-        fs.delete(staging, true)
-        d.write.mode("overwrite").parquet(staging.toString)
-        val dest = new org.apache.hadoop.fs.Path(s"$path/buckets/batch=$appendId")
-        require(fs.rename(staging, dest), s"could not land $staging at $dest")
+        BatchStore.publish(fs, s"$path/buckets", appendId)(
+          d.write.mode("overwrite").parquet(_))
         true
       }
     }
@@ -1412,29 +1362,14 @@ object TextOps {
     * the two-rename `.prev` swap [[scoreWithDsir]] reads around.
     */
   def compactDsir(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     graft.store.MaintenanceLock.withLock(fs, path, "dsir-compact") {
-      val dir = s"$path/buckets"
-      graft.similarity.Similarity.recoverDir(fs, dir)
-      val batchDirs = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      val dataIds = batchDirs.filter(s => fs.listFiles(s.getPath, true).hasNext)
-      if (dataIds.length <= 1) 0
-      else {
-        val merged = spark.read.parquet(dir).groupBy(col("bucket"))
-          .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-          .filter(col("ct") > 0L || col("cr") > 0L)
-        val staging = new org.apache.hadoop.fs.Path(s"$path/.buckets-compact")
-        fs.delete(staging, true)
-        merged.write.mode("overwrite").parquet(s"$staging/batch=0")
-        // self-running vacuum: one watermark marker instead of a
-        // tombstone dir per merged id (carries any prior watermark)
-        graft.store.Ledger.stampCompactionWatermark(fs, dir, staging.toString,
-          batchDirs.map(_.getPath.getName.stripPrefix("batch=").toLong).toSeq)
-        graft.similarity.Similarity.swapDir(fs, staging, dir)
-        1
-      }
+      // self-running vacuum: one watermark marker instead of a tombstone
+      // dir per merged id (carries any prior watermark)
+      math.min(1, BatchStore.compact(spark, s"$path/buckets",
+        _.groupBy(col("bucket")).agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
+          .filter(col("ct") > 0L || col("cr") > 0L),
+        vacuumLedger = true, layout = BatchStore.asMerged))
     }
   }
 
@@ -1448,11 +1383,10 @@ object TextOps {
   def scoreWithDsir(docs: DataFrame, path: String,
                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
+    val fs = BatchStore.fs(spark, path)
     val m = readDsirM(spark, path)
     val cnts = spark.read
-      .parquet(graft.similarity.Similarity.activeDir(fs, s"$path/buckets"))
+      .parquet(BatchStore.active(fs, s"$path/buckets"))
       .groupBy(col("bucket"))
       .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
     dsirSample(dsirScore(docs, dsirLlrOf(cnts, m), m, textCol, idCol))

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.store.BatchStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,8 +25,8 @@ import org.apache.spark.sql.functions._
   *    sibling, the stamp (fingerprint + train params) lands INSIDE the
   *    staged table dir (underscore file, invisible to parquet readers),
   *    and the publish is the two-rename `.prev` swap every store here
-  *    shares — loads fall back through `activeDir` during the window,
-  *    and `recoverDir` heals a torn swap at the next refresh.
+  *    shares — loads fall back through `BatchStore.active` during the window,
+  *    and `BatchStore.recover` heals a torn swap at the next refresh.
   *  - Changed train params also retrain (the stamp carries them), so a
   *    store fitted under old parameters can never keep serving just
   *    because the corpus happens to match.
@@ -63,22 +64,18 @@ object VocabStore {
               textCol: String = "text", idCol: String = "doc_id")
              (train: (DataFrame, String) => Unit): Boolean = {
     val spark = docs.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      spark.sparkContext.hadoopConfiguration)
-    graft.similarity.Similarity.recoverDir(fs, path)
+    val fs = BatchStore.fs(spark, path)
+    BatchStore.recover(fs, path)
     val (n, h) = corpusFingerprint(docs, textCol, idCol)
     val stamp = s"n=$n\nh=$h\nparams=$params\n"
-    val main = new org.apache.hadoop.fs.Path(path)
     // a legacy store without a stamp retrains unconditionally — absence
     // means "provenance unknown", never "current"
-    if (fs.exists(main) && readStamp(fs, path).contains(stamp)) return false
-    val staging = new org.apache.hadoop.fs.Path(s"$path.refresh-staging")
-    fs.delete(staging, true)
-    train(docs, staging.toString)
-    writeStamp(fs, staging.toString, stamp)
-    if (!fs.exists(main))
-      require(fs.rename(staging, main), s"could not land $staging at $main")
-    else graft.similarity.Similarity.swapDir(fs, staging, path)
+    if (BatchStore.readFile(fs, new org.apache.hadoop.fs.Path(path, StampName))
+        .contains(stamp)) return false
+    BatchStore.replace(fs, path, "refresh") { staging =>
+      train(docs, staging)
+      BatchStore.writeFile(fs, new org.apache.hadoop.fs.Path(staging, StampName), stamp)
+    }
     true
   }
 
@@ -101,22 +98,4 @@ object VocabStore {
     refresh(docs, path, s"unigram size=$size maxPieceLen=$maxPieceLen",
       textCol, idCol)((d, p) => Unigram.saveVocab(d.sparkSession,
       Unigram.fitVocab(d, size, maxPieceLen, textCol = textCol), p))
-
-  private def readStamp(fs: org.apache.hadoop.fs.FileSystem,
-                        dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir, StampName)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
-      finally in.close()
-    }
-  }
-
-  private def writeStamp(fs: org.apache.hadoop.fs.FileSystem,
-                         dir: String, stamp: String): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(dir, StampName), true)
-    try out.write(stamp.getBytes("UTF-8")) finally out.close()
-  }
 }

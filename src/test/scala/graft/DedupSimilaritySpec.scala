@@ -428,7 +428,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // the retirement-applying full compaction re-lands the merged base at
     // the MAX data id (1) and records the relocation in the _base marker
     assert(Similarity.compactIvfIndex(spark, p) == 2)
-    assert(Similarity.readBaseId(fs, s"$p/cells") == 1L,
+    assert(graft.store.BatchStore.readBaseId(fs, s"$p/cells") == 1L,
       "_base marker must record the relocated base id")
     assert(!fs.listFiles(hp(s"$p/cells/batch=0"), true).hasNext,
       "batch=0 must be a file-less tombstone after relocation")
@@ -457,7 +457,7 @@ class DedupSimilaritySpec extends SparkSpec {
     // a later full compaction (no retirement pending) folds everything
     // back to batch=0; the marker disappears with the swapped tree
     assert(Similarity.compactIvfIndex(spark, p) == 2)
-    assert(Similarity.readBaseId(fs, s"$p/cells") == 0L,
+    assert(graft.store.BatchStore.readBaseId(fs, s"$p/cells") == 0L,
       "marker must not survive a base-at-0 full rewrite")
     assert(fs.listFiles(hp(s"$p/cells/batch=0"), true).hasNext)
     assert(canon() == before)
@@ -685,7 +685,7 @@ class DedupSimilaritySpec extends SparkSpec {
       assert(retire(p, 2L))
       assert(full(p) >= 1, s"$name: retirement-applying full compaction ran")
       halves.foreach { h =>
-        assert(Similarity.readBaseId(fs, s"$p/$h") == 1L,
+        assert(graft.store.BatchStore.readBaseId(fs, s"$p/$h") == 1L,
           s"$name/$h: _base marker must record the relocated base")
         assert(!fs.listFiles(new org.apache.hadoop.fs.Path(s"$p/$h/batch=0"), true).hasNext,
           s"$name/$h: batch=0 must be a tombstone after relocation")

@@ -138,8 +138,8 @@ class StoreFaultDrillSpec extends SparkSpec {
         Seq("shingles", "words"),
         p => Dedup.bloomContaminationAgainst(
           Dedup.wordShingles(docsAll, 3),
-          spark.read.parquet(Similarity.activeDir(fs, s"$p/shingles")),
-          spark.read.parquet(Similarity.activeDir(fs, s"$p/words")),
+          spark.read.parquet(graft.store.BatchStore.active(fs, s"$p/shingles")),
+          spark.read.parquet(graft.store.BatchStore.active(fs, s"$p/words")),
           k = 4, m = 1 << 16),
         w1ServesBase = false))
   }
@@ -259,7 +259,7 @@ class StoreFaultDrillSpec extends SparkSpec {
     Dedup.buildDecontamStore(docsA, want, n = 3, k = 4, m = 1 << 16)
     def probeAgainst(store: String, bench: DataFrame) = Dedup
       .bloomContaminationAgainst(Dedup.wordShingles(docsAll, 3), bench,
-        spark.read.parquet(Similarity.activeDir(fs, s"$store/words")),
+        spark.read.parquet(graft.store.BatchStore.active(fs, s"$store/words")),
         k = 4, m = 1 << 16)
     def verdicts(store: String): Seq[String] = rows(
       probeAgainst(store, Dedup.liveDecontamShingles(spark, store))
@@ -288,8 +288,7 @@ class StoreFaultDrillSpec extends SparkSpec {
     // the words rebuild: replay steps (1)+(2) manually and stop
     val b1 = hpath(s"$p/shingles/batch=1")
     fs.delete(b1, true); fs.mkdirs(b1)
-    Similarity.compactBatchStore(spark, s"$p/shingles", Seq.empty,
-      baseAtMaxId = true, forceRewrite = true)
+    graft.store.BatchStore.compact(spark, s"$p/shingles", retiring = true)
     assert(verdicts(p) == wantV, "superset-filter crash window broke verdicts")
     assert(bloomPos(p) > wantPos, "crash window should still carry the superset tax")
     // the re-run completes the sequence: filter == from-scratch bit-for-bit
@@ -344,7 +343,7 @@ class StoreFaultDrillSpec extends SparkSpec {
     // survivor merge lands at batch=2 and writes the `_base` marker
     assert(Dedup.retireDecontamBench(spark, p, Seq(1L), retireId = 3))
     Dedup.compactDecontamStore(spark, p)
-    assert(Similarity.readBaseId(fs, s"$p/shingles") == 2L,
+    assert(graft.store.BatchStore.readBaseId(fs, s"$p/shingles") == 2L,
       "precondition: the base must have been relocated (marker present)")
     // now rotate EVERYTHING that remains (the merged base batch). The
     // rebuild's survivor read must skip the marker-only root: a raw
@@ -357,7 +356,7 @@ class StoreFaultDrillSpec extends SparkSpec {
       "an all-rotated store must serve an empty live shingle set")
     val probe = Dedup.bloomContaminationAgainst(
       Dedup.wordShingles(docsAll, 3), Dedup.liveDecontamShingles(spark, p),
-      spark.read.parquet(Similarity.activeDir(fs, s"$p/words")),
+      spark.read.parquet(graft.store.BatchStore.active(fs, s"$p/words")),
       k = 4, m = 1 << 16)
     assert(probe.agg(sum(col("n_bloom_pos"))).head().getLong(0) == 0L,
       "the rebuilt filter must be all-zero bits")
@@ -372,7 +371,7 @@ class StoreFaultDrillSpec extends SparkSpec {
     Dedup.buildDecontamStore(docsB, fresh, n = 3, k = 4, m = 1 << 16)
     def v(store: String): Seq[String] = rows(Dedup.bloomContaminationAgainst(
       Dedup.wordShingles(docsAll, 3), Dedup.liveDecontamShingles(spark, store),
-      spark.read.parquet(Similarity.activeDir(fs, s"$store/words")),
+      spark.read.parquet(graft.store.BatchStore.active(fs, s"$store/words")),
       k = 4, m = 1 << 16)
       .select(col("doc_id"), col("n_present"), col("contaminated")))
     assert(v(p) == v(fresh),

@@ -343,7 +343,7 @@ class StreamingFlagshipSpec extends SparkSpec {
   private def packRowsOf(base: String): Seq[String] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(base),
       spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(graft.similarity.Similarity.activeDir(fs, s"$base/pack/pack"))
+    spark.read.parquet(graft.store.BatchStore.active(fs, s"$base/pack/pack"))
       .select("shard", "bin", "doc_id", "n_tokens", "bin_offset")
       .collect().map(_.toString).sorted.toSeq
   }
