@@ -446,10 +446,15 @@ object Dedup {
     val fs = BatchStore.fs(spark, path)
     // build semantics: a rebuild replaces the whole store, appends and all
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    val sh = wordShingles(benchDocs, n, textCol, idCol).select(col("shingle")).distinct()
-    sh.write.mode("overwrite").parquet(s"$path/shingles/batch=0")
-    graft.sketch.Sketches.bloomWords(sh, "shingle", k, m)
-      .write.mode("overwrite").parquet(s"$path/words")
+    // as in an append: the words land from the staged shingles, before
+    // the shingles publish (the commit marker)
+    BatchStore.publish(fs, s"$path/shingles", 0L) { staging =>
+      wordShingles(benchDocs, n, textCol, idCol).select(col("shingle")).distinct()
+        .write.mode("overwrite").parquet(staging)
+      BatchStore.replace(fs, s"$path/words", "build")(
+        graft.sketch.Sketches.bloomWords(spark.read.parquet(staging), "shingle", k, m)
+          .write.mode("overwrite").parquet(_))
+    }
     Seq((n, k, m)).toDF("n", "k", "m")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/config")
     // format stamp — see [[decontamFormatMarker]]

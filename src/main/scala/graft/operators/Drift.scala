@@ -184,8 +184,9 @@ object Drift {
     // materialize once so both halves are written from identical rows,
     // not two independent corpus passes
     val counts = bucketCounts(a, features).localCheckpoint(true)
-    counts.write.mode("overwrite").parquet(s"$path/cur/batch=0")
-    counts.write.mode("overwrite").parquet(s"$path/base/batch=0")
+    // staged publishes, the live half (the append ledger) last
+    for (half <- Seq("base", "cur"))
+      BatchStore.publish(fs, s"$path/$half", 0L)(counts.write.mode("overwrite").parquet(_))
   }
 
   /** Ledgered live-count advance for documents ENTERING the live snapshot
@@ -316,11 +317,13 @@ object Drift {
                            path: String): Unit = {
     val fs = fsOf(events, path)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    events.select(day.as("__day"), bucket.as("bucket"))
-      .groupBy("__day", "bucket").agg(count(lit(1)).as("c"))
-      .select(datediff(col("__day"), to_date(lit("1970-01-01"))).cast("long")
-          .as("batch"), col("bucket"), col("c"))
-      .write.partitionBy("batch").mode("overwrite").parquet(s"$path/days")
+    // one write job lands every day batch, so the whole half is staged
+    BatchStore.replace(fs, s"$path/days", "build")(
+      events.select(day.as("__day"), bucket.as("bucket"))
+        .groupBy("__day", "bucket").agg(count(lit(1)).as("c"))
+        .select(datediff(col("__day"), to_date(lit("1970-01-01"))).cast("long")
+            .as("batch"), col("bucket"), col("c"))
+        .write.partitionBy("batch").mode("overwrite").parquet(_))
   }
 
   /** The daily job's append: ONE day's bucket counts, ledgered by the

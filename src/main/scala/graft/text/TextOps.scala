@@ -1296,8 +1296,8 @@ object TextOps {
     val spark = docs.sparkSession
     val fs = BatchStore.fs(spark, path)
     fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    dsirPairCountsFlagged(docs, isTarget, m, textCol, idCol)
-      .write.mode("overwrite").parquet(s"$path/buckets/batch=0")
+    BatchStore.publish(fs, s"$path/buckets", 0L)(
+      dsirPairCountsFlagged(docs, isTarget, m, textCol, idCol).write.mode("overwrite").parquet(_))
     spark.range(1).select(lit(m).as("m"))
       .coalesce(1).write.mode("overwrite").parquet(s"$path/config")
   }

@@ -149,4 +149,38 @@ class BatchStoreSpec extends SparkSpec {
     assert(Drift.appendDriftCounts(events, feats, cleanLive, 1L))
     assert(rows(Drift.psiFromStore(spark, tornLive)) == rows(Drift.psiFromStore(spark, cleanLive)))
   }
+
+  test("torn builds never publish: drift, daily drift, DSIR and decontamination stores") {
+    import graft.dedup.Dedup
+    import graft.operators.Drift
+    import graft.text.TextOps
+    val docs = (0 until 400).map(i => (i.toLong, s"w${i % 37} w${i % 11} w${i % 5} w${i % 3}",
+      s"m${i % 23}", i % 5)).toDF("doc_id", "text", "metric", "d")
+    val feats = Seq("metric" -> $"metric")
+    // builder, the halves whose batches it lands, a read of the built store
+    val builds: Seq[(String => Unit, Seq[String], String => DataFrame)] = Seq(
+      (Drift.buildDriftStore(docs, feats, _), Seq("base", "cur"), Drift.psiFromStore(spark, _)),
+      (Drift.buildDailyDriftStore(docs, date_add(lit("2024-01-01").cast("date"), $"d"),
+        $"metric", _), Seq("days"), p => spark.read.parquet(s"$p/days")),
+      (TextOps.saveDsir(docs, $"d" === 0, 1 << 10, _), Seq("buckets"),
+        p => spark.read.parquet(s"$p/buckets")),
+      (Dedup.buildDecontamStore(docs, _, m = 1 << 12), Seq("shingles", "words"),
+        p => spark.read.parquet(s"$p/shingles").crossJoin(spark.read.parquet(s"$p/words")
+          .agg(count(lit(1)).as("n_words"), sum($"word").as("bits")))))
+    for ((build, halves, read) <- builds) {
+      val (torn, clean) = (tmp("torn_build"), tmp("clean_build"))
+      tornWrite(build(torn))
+      assert(TornWriteCommitter.commits.get() >= 2, "the write job must fail after a task commit")
+      // readers skip dot-prefixed entries: only the others are published
+      for (h <- halves) {
+        val published = (try fs.listStatus(new Path(s"$torn/$h")).toSeq
+          catch { case _: java.io.FileNotFoundException => Seq.empty })
+          .map(_.getPath.getName).filterNot(_.startsWith("."))
+        assert(published.isEmpty, s"a torn build published $published under $torn/$h")
+      }
+      build(torn)
+      build(clean)
+      assert(rows(read(torn)) == rows(read(clean)) && rows(read(clean)).nonEmpty)
+    }
+  }
 }

@@ -2,10 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Keeps the on-disk batch layout in one module: outside `graft/store/`,
-  * no main source may rename a path or spell a `.staging-` dir in code
-  * (comments excluded) — a store family publishes and swaps through
-  * [[graft.store.BatchStore]].
+/** Keeps the on-disk batch layout and the choice of local file system in
+  * one module: outside `graft/store/`, no main source may rename a path,
+  * spell a `.staging-` dir or build a local file system in code (comments
+  * excluded) — a store family publishes and swaps through
+  * [[graft.store.BatchStore]], and every session's `file:` scheme is
+  * [[graft.store.LocalFs]].
   */
 class StoreLayoutGuardSpec extends AnyFunSuite {
 
@@ -18,7 +20,10 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
       .map(l => l.indexOf("//") match { case -1 => l; case i => l.take(i) })
       .mkString("\n")
 
-  test("no .rename( call or .staging- literal outside graft/store") {
+  /** Every code line outside `graft/store/` that `hit` flags, as
+    * `file:line: code`.
+    */
+  private def hitsOutsideStore(hit: String => Boolean): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root ($root)")
     val files = java.nio.file.Files.walk(root).toArray.toSeq
@@ -26,12 +31,23 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
       .filter(_.toString.endsWith(".scala"))
       .filterNot(_.toString.replace('\\', '/').contains("/graft/store/"))
     assert(files.size > 10)
-    val hits = files.flatMap { f =>
+    files.flatMap { f =>
       val code = codeOf(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
       code.linesIterator.zipWithIndex.collect {
-        case (l, i) if l.contains(".rename(") || l.contains(".staging-") => s"$f:${i + 1}: ${l.trim}"
+        case (l, i) if hit(l) => s"$f:${i + 1}: ${l.trim}"
       }
     }
+  }
+
+  test("no .rename( call or .staging- literal outside graft/store") {
+    val hits = hitsOutsideStore(l => l.contains(".rename(") || l.contains(".staging-"))
     assert(hits.isEmpty, hits.mkString("layout code outside graft/store:\n", "\n", ""))
+  }
+
+  test("no local file system chosen outside graft/store") {
+    val hits = hitsOutsideStore(l => Seq("new RawLocalFileSystem", "new LocalFileSystem",
+      "FileSystem.getLocal(").exists(l.contains))
+    assert(hits.isEmpty, hits.mkString(
+      "local file system chosen outside graft/store (sessions use graft.store.LocalFs):\n", "\n", ""))
   }
 }
