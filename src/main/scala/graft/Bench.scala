@@ -470,22 +470,7 @@ object Bench {
     // on an idle host but much more robust when a co-tenant steals cycles
     // (more runnable threads absorb stolen cores instead of stalling)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Graft.perfConfs.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // 64 KB floor (not the 1 MB default): byte-based coalescing otherwise
-      // collapses the small-but-CPU-heavy per-series model-fit shuffles onto
-      // 2-3 cores (see Graft.localSession for the measurement)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the adjudicated bounded windows WARN once per execution — the flood
-    // that buried the r14 driver tail (see Graft.quietNoisyLogs)
-    graft.core.Graft.quietNoisyLogs()
+    val spark = graft.core.Graft.localSession("graft-bench", cpus.toInt)
     // TIME BUDGET (the r14 verdict's top item): the driver's r14 session was
     // killed at rc=124 with no parseable output because the full matrix
     // (223 queries x 3 passes + every evidence block) outgrew the driver's

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json for the DuckDB compare (`scripts/check.py`) and
@@ -12,16 +11,7 @@ object Verify {
     // the driver always calls with exactly two args = full dump)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Graft.perfConfs.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep per-series model stages parallel (see Graft.localSession)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.quietNoisyLogs()
+    val spark = graft.core.Graft.localSession("graft-verify", cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // query -> "ExceptionClass: message" for every query that failed to
     // dump, so an oracle miss has its cause on record beside the dump

@@ -625,9 +625,9 @@ object CorpusQueries {
       val dd = docs(s, d)
       dd.select(col("doc_id"), col("text"))
         .repartition(32).write.mode("overwrite").parquet(s"$base/in")
-      StreamingPipeline.lmAppendStream(
-          StreamingPipeline.readDocStream(s, s"$base/in"),
-          s"$base/lm", s"$base/ck")
+      StreamingPipeline.maintain(
+          StreamingPipeline.readDocStream(s, s"$base/in"), s"$base/ck")(
+          StreamingPipeline.lmAppendBatch(s"$base/lm"))
         .start().awaitTermination()
       TextOps.compactLm(s, s"$base/lm")
       TextOps.scoreWithLm(dd, s"$base/lm").orderBy("doc_id")
@@ -1353,10 +1353,10 @@ object CorpusQueries {
         .repartition(8).write.mode("overwrite").parquet(s"$base/in_rest")
       val running = startFlagshipMaintainers(
           s, s"$base/in_all", s"$base/in_bench", base) :+
-        StreamingPipeline.dsirAppendStream(
+        StreamingPipeline.maintain(
           StreamingPipeline.readColumnsStream(s, s"$base/in_rest",
-            "doc_id LONG, text STRING, lang STRING"),
-          isT, s"$base/dsir", s"$base/ck_dsir").start()
+            "doc_id LONG, text STRING, lang STRING"), s"$base/ck_dsir")(
+          StreamingPipeline.dsirAppendBatch(s"$base/dsir", isT)).start()
       running.foreach(_.awaitTermination())
       // disjoint stores, independent compactions — overlap (guide §2.6)
       graft.core.Par.sections(
@@ -1418,13 +1418,15 @@ object CorpusQueries {
       def session(): Unit = {
         val running = startFlagshipMaintainers(
             s, s"$base/in_all", s"$base/in_bench", base) ++ Seq(
-          StreamingPipeline.dsirAppendStream(
+          StreamingPipeline.maintain(
             StreamingPipeline.readColumnsStream(s, s"$base/in_rest",
-              "doc_id LONG, text STRING, lang STRING"),
-            isT, s"$base/dsir", s"$base/ck_dsir").start(),
-          StreamingPipeline.packedExportStream(
-            StreamingPipeline.readDocStream(s, s"$base/in_pack"),
-            s"$base/pack", s"$base/ck_pack", budget = 512, nShards = 32).start())
+              "doc_id LONG, text STRING, lang STRING"), s"$base/ck_dsir")(
+            StreamingPipeline.dsirAppendBatch(s"$base/dsir", isT)).start(),
+          StreamingPipeline.maintain(
+            StreamingPipeline.readDocStream(s, s"$base/in_pack"), s"$base/ck_pack") {
+            (b, id) => StreamingPipeline.packedExportAppendBatch(
+              s"$base/pack", budget = 512, nShards = 32)(b, id + 1)
+          }.start())
         running.foreach(_.awaitTermination())
       }
       deliverPack(dd.filter(col("doc_id") <= c1)); session()
@@ -1480,20 +1482,20 @@ object CorpusQueries {
       inBench: String, base: String): Seq[org.apache.spark.sql.streaming.StreamingQuery] = {
     import graft.streaming.StreamingPipeline
     Seq(
-      StreamingPipeline.lmAppendStream(
-        StreamingPipeline.readDocStream(s, inAll),
-        s"$base/lm", s"$base/ck_lm").start(),
-      StreamingPipeline.minhashDedupStream(
-        StreamingPipeline.readDocStream(s, inAll),
-        s"$base/mh", s"$base/ck_mh").start(),
-      StreamingPipeline.histogramStream(
+      StreamingPipeline.maintain(
+        StreamingPipeline.readDocStream(s, inAll), s"$base/ck_lm")(
+        StreamingPipeline.lmAppendBatch(s"$base/lm")).start(),
+      StreamingPipeline.maintain(
+        StreamingPipeline.readDocStream(s, inAll), s"$base/ck_mh")(
+        StreamingPipeline.minhashDedupBatch(s"$base/mh")).start(),
+      StreamingPipeline.maintain(
         StreamingPipeline.readColumnsStream(s, inAll,
-          "doc_id BIGINT, lang STRING, n_chars BIGINT"),
-        s"$base/hist", s"$base/ck_hist",
-        keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20).start(),
-      StreamingPipeline.decontamAppendStream(
-        StreamingPipeline.readDocStream(s, inBench),
-        s"$base/dc", s"$base/ck_dc").start())
+          "doc_id BIGINT, lang STRING, n_chars BIGINT"), s"$base/ck_hist")(
+        StreamingPipeline.histMergeBatch(s"$base/hist",
+          keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20)).start(),
+      StreamingPipeline.maintain(
+        StreamingPipeline.readDocStream(s, inBench), s"$base/ck_dc")(
+        StreamingPipeline.decontamAppendBatch(s"$base/dc")).start())
   }
 
   /** Between-sessions maintenance over the flagship's grown stores. */

@@ -599,9 +599,10 @@ object DataQueries {
       // the rest of the corpus arrives as a stream of raw documents
       all.filter(col("doc_id") % 3 =!= 0).select(col("doc_id"), col("text"))
         .repartition(8).write.mode("overwrite").parquet(s"$base/in")
-      StreamingPipeline.frameAppendStream(
-        StreamingPipeline.readDocStream(s, s"$base/in"),
-        store, s"$base/ck", logitFeaturesOf).start().awaitTermination()
+      StreamingPipeline.maintain(
+        StreamingPipeline.readDocStream(s, s"$base/in"), s"$base/ck") {
+        (b, id) => StreamingPipeline.frameAppendBatch(store, logitFeaturesOf)(b, id + 1)
+      }.start().awaitTermination()
       // refit from the grown store == the monolithic corpus fit
       val grown = s.read.parquet(store).select(col("doc_id"), col("n_words"),
         col("avg_word_len"), col("stopword_ratio"), col("y"))
@@ -1464,10 +1465,10 @@ object DataQueries {
       all.filter(col("doc_id") % 3 =!= 0)
         .select(col("doc_id"), col("text"), col("lang"))
         .repartition(8).write.mode("overwrite").parquet(s"$base/in")
-      StreamingPipeline.dsirAppendStream(
+      StreamingPipeline.maintain(
           StreamingPipeline.readColumnsStream(s, s"$base/in",
-            "doc_id LONG, text STRING, lang STRING"),
-          isT, s"$base/dsir", s"$base/ck")
+            "doc_id LONG, text STRING, lang STRING"), s"$base/ck")(
+          StreamingPipeline.dsirAppendBatch(s"$base/dsir", isT))
         .start().awaitTermination()
       TextOps.compactDsir(s, s"$base/dsir")
       TextOps.scoreWithDsir(all, s"$base/dsir").orderBy("doc_id")
@@ -1750,13 +1751,13 @@ object DataQueries {
       Tables.cleanEvents(s, d)
         .select(to_date(col("ts")).as("day"), col("metric"))
         .repartition(24).write.mode("overwrite").parquet(s"$base/in")
-      StreamingPipeline.frameAppendStream(
+      StreamingPipeline.maintain(
           s.readStream.schema("day DATE, metric STRING")
-            .option("maxFilesPerTrigger", "4").parquet(s"$base/in"),
-          s"$base/store", s"$base/ck",
-          b => b.groupBy(col("day"), col("metric").as("bucket"))
-            .agg(count(lit(1)).as("c")))
-        .start().awaitTermination()
+            .option("maxFilesPerTrigger", "4").parquet(s"$base/in"), s"$base/ck") {
+          (b, id) => StreamingPipeline.frameAppendBatch(s"$base/store",
+            _.groupBy(col("day"), col("metric").as("bucket"))
+              .agg(count(lit(1)).as("c")))(b, id + 1)
+        }.start().awaitTermination()
       Drift.dailyDriftFromCountDeltas(s, s"$base/store").orderBy("day")
     }),
 
@@ -1875,10 +1876,11 @@ object DataQueries {
       val (c1, c2) = (maxId / 3, 2 * maxId / 3)
       def deliver(df: DataFrame): Unit =
         df.coalesce(1).write.mode("append").parquet(s"$base/in")
-      def drain(): Unit = StreamingPipeline.packedExportStream(
-          StreamingPipeline.readDocStream(s, s"$base/in"),
-          s"$base/store", s"$base/ck", budget = 512, nShards = 32)
-        .start().awaitTermination()
+      def drain(): Unit = StreamingPipeline.maintain(
+          StreamingPipeline.readDocStream(s, s"$base/in"), s"$base/ck") {
+          (b, id) => StreamingPipeline.packedExportAppendBatch(
+            s"$base/store", budget = 512, nShards = 32)(b, id + 1)
+        }.start().awaitTermination()
       deliver(dd.filter(col("doc_id") <= c1)); drain()
       deliver(dd.filter(col("doc_id") > c1 && col("doc_id") <= c2)); drain()
       deliver(dd.filter(col("doc_id") > c2)); drain()
@@ -1943,10 +1945,11 @@ object DataQueries {
       val t1 = dd.filter(col("doc_id") <= cut)
       def deliver(df: DataFrame): Unit =
         df.coalesce(1).write.mode("append").parquet(s"$base/in")
-      def drain(): Unit = StreamingPipeline.packedExportStream(
-          StreamingPipeline.readDocStream(s, s"$base/in"),
-          s"$base/store", s"$base/ck", budget = 512, nShards = 32)
-        .start().awaitTermination()
+      def drain(): Unit = StreamingPipeline.maintain(
+          StreamingPipeline.readDocStream(s, s"$base/in"), s"$base/ck") {
+          (b, id) => StreamingPipeline.packedExportAppendBatch(
+            s"$base/store", budget = 512, nShards = 32)(b, id + 1)
+        }.start().awaitTermination()
       deliver(t1); drain()
       // the re-crawl of the stored range: revise %7==2, remove %13==3
       // (the snapshot-B moduli, additions excluded — new ids arrive

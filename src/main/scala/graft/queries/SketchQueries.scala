@@ -86,9 +86,9 @@ object SketchQueries {
       // fresh run each call: the routed output is the artifact under test
       fs.delete(new org.apache.hadoop.fs.Path(s"$base/out"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$base/ck"), true)
-      StreamingPipeline.decontamRouteStream(
-          StreamingPipeline.readDocStream(s, s"$base/in"),
-          s"$base/store", s"$base/out", s"$base/ck")
+      StreamingPipeline.maintain(
+          StreamingPipeline.readDocStream(s, s"$base/in"), s"$base/ck")(
+          StreamingPipeline.decontamRouteBatch(s"$base/store", s"$base/out"))
         .start().awaitTermination()
       s.read.parquet(s"$base/out")
         .select(col("doc_id"), col("n_shingles"), col("n_bloom_pos"),
@@ -198,11 +198,11 @@ object SketchQueries {
       val ev = Tables(s, d, "events")
       ev.select(col("event_type"), col("user_id"))
         .repartition(32).write.mode("overwrite").parquet(s"$base/in")
-      StreamingPipeline.hllStream(
+      StreamingPipeline.maintain(
           StreamingPipeline.readColumnsStream(s, s"$base/in",
-            "event_type STRING, user_id BIGINT"),
-          s"$base/store", s"$base/ck",
-          keys = Seq("event_type"), itemCol = "user_id", b = 8)
+            "event_type STRING, user_id BIGINT"), s"$base/ck")(
+          StreamingPipeline.hllMergeBatch(s"$base/store",
+            keys = Seq("event_type"), itemCol = "user_id", b = 8))
         .start().awaitTermination()
       val hll = Sketches.hllEstimate(
         s.read.parquet(s"$base/store"), Seq("event_type"), b = 8)
@@ -223,9 +223,9 @@ object SketchQueries {
       val terms = Tables(s, d, "documents")
         .select(explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
       terms.repartition(32).write.mode("overwrite").parquet(s"$base/in")
-      StreamingPipeline.cmsStream(
-          StreamingPipeline.readColumnsStream(s, s"$base/in", "term STRING"),
-          s"$base/store", s"$base/ck", termCol = "term", d = 3, w = 1024)
+      StreamingPipeline.maintain(
+          StreamingPipeline.readColumnsStream(s, s"$base/in", "term STRING"), s"$base/ck")(
+          StreamingPipeline.cmsMergeBatch(s"$base/store", termCol = "term", d = 3, w = 1024))
         .start().awaitTermination()
       // q89's countMinTopK tail (the SHARED cmsTopKFromCells, so the two
       // paths can never copy-drift), with the cells read FROM THE STORE —
@@ -245,12 +245,12 @@ object SketchQueries {
       val ev = Tables(s, d, "events")
       ev.select(col("event_type"), col("value"))
         .repartition(32).write.mode("overwrite").parquet(s"$base/in")
-      StreamingPipeline.histogramStream(
+      StreamingPipeline.maintain(
           StreamingPipeline.readColumnsStream(s, s"$base/in",
-            "event_type STRING, value DOUBLE"),
-          s"$base/store", s"$base/ck",
-          keys = Seq("event_type"), valueCol = "value",
-          binWidth = 50.0, numBins = 20)
+            "event_type STRING, value DOUBLE"), s"$base/ck")(
+          StreamingPipeline.histMergeBatch(s"$base/store",
+            keys = Seq("event_type"), valueCol = "value",
+            binWidth = 50.0, numBins = 20))
         .start().awaitTermination()
       val approx = Sketches.histogramQuantiles(
         s.read.parquet(s"$base/store"), Seq("event_type"), binWidth = 50.0)

@@ -25,10 +25,28 @@ object StreamingPipeline {
     * `Tables.cleanEvents`): source_id, ts, metric, value.
     */
   def readEventStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema("source_id BIGINT, ts TIMESTAMP, metric STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "16")
-      .parquet(path)
+    readColumnsStream(spark, path, "source_id BIGINT, ts TIMESTAMP, metric STRING, value DOUBLE")
+
+  /** The one stream driver every store maintainer runs on: `rows` drain
+    * through `body` as `foreachBatch` micro-batches (`Update` mode, an
+    * `AvailableNow` trigger, progress kept in `checkpoint`). A restart on
+    * the same checkpoint resumes after the last committed batch; a batch
+    * that failed before its commit reaches `body` again under the same
+    * id, and each body's own ledger makes that replay a no-op.
+    *
+    * `body` receives Spark's batch id unchanged. A store with a built
+    * `batch=0` lands stream batch i at i+1: the ANN, LM, drift, DSIR and
+    * decontam-append bodies add the 1 themselves, and frame and
+    * packed-export callers pass `(b, id) => ...(b, id + 1)`, because
+    * those bodies also build `batch=0` from direct calls.
+    */
+  def maintain(rows: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    rows.writeStream
+      .outputMode(OutputMode.Update())
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(body)
 
   /** Watermarked tumbling-window KPI aggregation: the streaming twin of
     * [[DailyKpi.aggregate]] at hourly granularity; late data beyond the
@@ -53,25 +71,20 @@ object StreamingPipeline {
     */
   def ingestAndRefresh(events: DataFrame, cleanStorePath: String, kpiStorePath: String,
                        checkpoint: String): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val deduped = graft.ingest.Ingest.dedupInsert(
-          batch, existingClean(spark, cleanStorePath), Seq("source_id", "ts", "metric"), "ts")
-        graft.store.Store.writeCleanEvents(deduped, cleanStorePath)
-        val touched = deduped.select(to_date(col("ts")).as("metric_date")).distinct()
-        val refreshed = graft.ingest.Ingest.recomputeOverwrite(
-          graft.store.Store.readCleanEvents(spark, cleanStorePath)
-            .select("source_id", "ts", "metric", "value"),
-          touched)
-        // dynamic partition overwrite: ONLY the touched dates are replaced —
-        // a full-mode overwrite here would drop every untouched date's rows
-        graft.store.Store.overwriteMetricDaily(refreshed, kpiStorePath)
-        ()
-      }
+    maintain(events, checkpoint) { (batch, _) =>
+      val spark = batch.sparkSession
+      val deduped = graft.ingest.Ingest.dedupInsert(
+        batch, existingClean(spark, cleanStorePath), Seq("source_id", "ts", "metric"), "ts")
+      graft.store.Store.writeCleanEvents(deduped, cleanStorePath)
+      val touched = deduped.select(to_date(col("ts")).as("metric_date")).distinct()
+      val refreshed = graft.ingest.Ingest.recomputeOverwrite(
+        graft.store.Store.readCleanEvents(spark, cleanStorePath)
+          .select("source_id", "ts", "metric", "value"),
+        touched)
+      // dynamic partition overwrite: ONLY the touched dates are replaced —
+      // a full-mode overwrite here would drop every untouched date's rows
+      graft.store.Store.overwriteMetricDaily(refreshed, kpiStorePath)
+    }
 
   /** Streaming first-write-wins dedup on the clean-event key: duplicates
     * arriving within the watermark horizon are dropped with bounded state
@@ -339,11 +352,17 @@ object StreamingPipeline {
       })
   }
 
-  private def existingClean(spark: SparkSession, path: String): Option[DataFrame] =
-    try {
-      val df = spark.read.parquet(path)
-      if (df.isEmpty) None else Some(df)
-    } catch { case _: Throwable => None }
+  /** The clean store, or None while it holds no data file. A store that
+    * has data but cannot be read fails the micro-batch: treating it as
+    * empty would re-append every key it already holds.
+    */
+  private def existingClean(spark: SparkSession, path: String): Option[DataFrame] = {
+    val fs = BatchStore.fs(spark, path)
+    val p = new org.apache.hadoop.fs.Path(path)
+    if (fs.exists(p) && BatchStore.hasData(fs, p))
+      Some(graft.store.Store.readCleanEvents(spark, path))
+    else None
+  }
 
   /** Incremental HLL maintenance — the `foreachBatch` body for a streaming
     * distinct counter. Each micro-batch's registers merge into the parquet
@@ -555,19 +574,8 @@ object StreamingPipeline {
     * rebuild's prefix fold, so order-sensitivity is preserved exactly.
     */
   def compactMgSlices(spark: SparkSession, storePath: String, k: Int,
-                      upTo: Long): Int = {
-    import spark.implicits._
-    compactSketchSlices(spark, storePath, upTo, slices => {
-      val folded = slices
-        .map(df => df.collect()
-          .map(r => r.getAs[String]("item") -> r.getAs[Long]("cnt")).toMap)
-        .foldLeft(Map.empty[String, Long])(
-          (acc, p) => graft.sketch.Sketches.mgMerge(acc, p, k))
-      val rows = folded.toSeq.sortBy(_._1)
-      if (rows.isEmpty) Seq.empty[(String, Long)].toDF("item", "cnt")
-      else rows.toDF("item", "cnt")
-    })
-  }
+                      upTo: Long): Int =
+    compactSketchSlices(spark, storePath, upTo, mgFold(k))
 
   /** Batch-level retirement for the OR/max-merged sketch stores — the
     * q194 decontamination treatment applied to the last store family
@@ -672,19 +680,25 @@ object StreamingPipeline {
     * (every survivor-side heavy hitter present, undercount ≤ n/k).
     */
   def retireMgBatches(spark: SparkSession, storePath: String, k: Int,
-                      batchIds: Seq[Long]): Unit = {
+                      batchIds: Seq[Long]): Unit =
+    retireSketchBatches(spark, storePath, batchIds, mgFold(k))
+
+  /** An MG summary as the store's `(item, cnt)` frame, sorted by item. */
+  private def mgFrame(spark: SparkSession, m: Map[String, Long]): DataFrame = {
     import spark.implicits._
-    retireSketchBatches(spark, storePath, batchIds, slices => {
-      val folded = slices
-        .map(df => df.collect()
-          .map(r => r.getAs[String]("item") -> r.getAs[Long]("cnt")).toMap)
-        .foldLeft(Map.empty[String, Long])(
-          (acc, p) => graft.sketch.Sketches.mgMerge(acc, p, k))
-      val rows = folded.toSeq.sortBy(_._1)
-      if (rows.isEmpty) Seq.empty[(String, Long)].toDF("item", "cnt")
-      else rows.toDF("item", "cnt")
-    })
+    val rows = m.toSeq.sortBy(_._1)
+    if (rows.isEmpty) Seq.empty[(String, Long)].toDF("item", "cnt")
+    else rows.toDF("item", "cnt")
   }
+
+  /** The MG store's one fold: `(item, cnt)` frames merged left to right
+    * through [[graft.sketch.Sketches.mgMerge]]'s cut, starting from the
+    * empty summary (a no-op: every stored summary holds at most k items).
+    */
+  private def mgFold(k: Int)(summaries: Seq[DataFrame]): DataFrame =
+    mgFrame(summaries.head.sparkSession, summaries
+      .map(_.collect().map(r => r.getAs[String]("item") -> r.getAs[Long]("cnt")).toMap)
+      .foldLeft(Map.empty[String, Long])(graft.sketch.Sketches.mgMerge(_, _, k)))
 
   /** Signed-delta retirement for the SUM-merged sketch stores — count-min
     * cells here ([[retireHistSlice]] is the histogram twin): counters
@@ -937,21 +951,7 @@ object StreamingPipeline {
 
   /** File-source stream of embeddings (vec_id, embedding). */
   def readEmbeddingStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "16")
-      .parquet(path)
-
-  /** Streaming IVF index maintenance: embedding stream -> per-micro-batch
-    * cell appends against the fixed centroids via [[ivfAppendBatch]].
-    */
-  def ivfAppendStream(embeddings: DataFrame, storePath: String,
-                      checkpoint: String): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(ivfAppendBatch(storePath) _)
+    readColumnsStream(spark, path, "vec_id BIGINT, embedding ARRAY<FLOAT>")
 
   /** Incremental LSH index maintenance — [[ivfAppendBatch]] for the
     * multi-table hyperplane index: each micro-batch hashes its vectors with
@@ -979,50 +979,9 @@ object StreamingPipeline {
     ()
   }
 
-  /** Streaming PQ index maintenance: embedding stream -> per-micro-batch
-    * frozen-codebook code appends via [[pqAppendBatch]].
-    */
-  def pqAppendStream(embeddings: DataFrame, storePath: String,
-                     checkpoint: String): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(pqAppendBatch(storePath) _)
-
-  /** Streaming LSH index maintenance: embedding stream -> per-micro-batch
-    * signature/payload appends against the stored geometry via
-    * [[lshAppendBatch]]. Search continues through
-    * [[graft.similarity.Similarity.probeLshIndex]] unchanged.
-    */
-  def lshAppendStream(embeddings: DataFrame, storePath: String,
-                      checkpoint: String): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(lshAppendBatch(storePath) _)
-
   /** File-source stream of documents (doc_id, text). */
   def readDocStream(spark: SparkSession, path: String): DataFrame =
-    spark.readStream
-      .schema("doc_id BIGINT, text STRING")
-      .option("maxFilesPerTrigger", "16")
-      .parquet(path)
-
-  /** Streaming near-dup detection: document stream -> incremental MinHash
-    * dedup store via [[minhashDedupBatch]]. Read the verified pairs at any
-    * time from `storePath/pairs` — equal to the uncapped batch miner over
-    * every document delivered so far.
-    */
-  def minhashDedupStream(docs: DataFrame, storePath: String, checkpoint: String,
-                         n: Int = 3, numPerms: Int = 16, bands: Int = 4,
-                         threshold: Double = 0.8): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(minhashDedupBatch(storePath, n, numPerms, bands, threshold) _)
+    readColumnsStream(spark, path, "doc_id BIGINT, text STRING")
 
   /** Exactly-once append-only FRAME store — the minimal member of the
     * `batch=<id>` appender family: each micro-batch's transformed rows
@@ -1043,21 +1002,6 @@ object StreamingPipeline {
     BatchStore.publish(fs, storePath, batchId)(
       transform(batch).write.mode("overwrite").parquet(_))
   }
-
-  /** Streaming frame-store maintenance: doc stream -> per-micro-batch
-    * transformed appends via [[frameAppendBatch]] (stream batch ids land
-    * as `batch=<id+1>`, leaving `batch=0` for a caller-built prefix
-    * generation — the q119 build-prefix-then-append convention).
-    */
-  def frameAppendStream(docs: DataFrame, storePath: String, checkpoint: String,
-                        transform: DataFrame => DataFrame): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        frameAppendBatch(storePath, transform)(batch, batchId + 1)
-      }
 
   /** Streaming PACKED-EXPORT maintenance — the training-file tail-grower:
     * documents stream in (crawl order: every batch's doc ids exceed all
@@ -1300,19 +1244,6 @@ object StreamingPipeline {
       spark.read.parquet(BatchStore.active(BatchStore.fs(spark, storePath),
         s"$storePath/pack")))
 
-  /** Streaming packed-export maintenance: doc stream -> per-micro-batch
-    * tail appends via [[packedExportAppendBatch]].
-    */
-  def packedExportStream(docs: DataFrame, storePath: String, checkpoint: String,
-                         budget: Int, nShards: Int): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packedExportAppendBatch(storePath, budget, nShards)(batch, batchId + 1)
-      }
-
   /** Incremental LM maintenance — the `foreachBatch` body for a trigram
     * Stupid-Backoff model that keeps learning as the corpus arrives: each
     * micro-batch trains count DELTAS on its own documents only and appends
@@ -1334,17 +1265,6 @@ object StreamingPipeline {
     ()
   }
 
-  /** Streaming LM maintenance: document stream -> per-micro-batch count
-    * deltas via [[lmAppendBatch]].
-    */
-  def lmAppendStream(docs: DataFrame, storePath: String,
-                     checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(lmAppendBatch(storePath) _)
-
   /** Streaming drift-monitor maintenance — [[lmAppendBatch]]'s contract
     * for the bucket-count store: each micro-batch lands its own (feature,
     * bucket, c) deltas via [[graft.operators.Drift.appendDriftCounts]]
@@ -1360,16 +1280,6 @@ object StreamingPipeline {
     graft.operators.Drift.appendDriftCounts(batch, features, storePath, batchId + 1)
     ()
   }
-
-  def driftAppendStream(docs: DataFrame,
-                        features: Seq[(String, org.apache.spark.sql.Column)],
-                        storePath: String,
-                        checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(driftAppendBatch(storePath, features) _)
 
   /** Incremental DSIR-model maintenance — [[lmAppendBatch]]'s contract for
     * the importance-resampling count store: each micro-batch lands its own
@@ -1387,52 +1297,16 @@ object StreamingPipeline {
     ()
   }
 
-  /** Streaming DSIR maintenance: document stream -> per-micro-batch count
-    * deltas via [[dsirAppendBatch]].
-    */
-  def dsirAppendStream(docs: DataFrame, isTarget: org.apache.spark.sql.Column,
-                       storePath: String,
-                       checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(dsirAppendBatch(storePath, isTarget) _)
-
-  /** Generic file-source stream with a caller-provided schema — the reader
-    * the sketch maintainers use for arbitrary column subsets (HLL
-    * key/item, CMS terms, histogram values) without a per-shape reader.
+  /** File-source stream with a caller-provided schema, at most 16 files
+    * per micro-batch — the one reader behind the event, document and
+    * embedding streams, and the one the sketch maintainers use for
+    * arbitrary column subsets (HLL key/item, CMS terms, histogram values).
     */
   def readColumnsStream(spark: SparkSession, path: String, schema: String): DataFrame =
     spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", "16")
       .parquet(path)
-
-  /** Streaming frequency sketch: term stream -> incremental count-min cell
-    * store via [[cmsMergeBatch]] (ledgered SUM-merge). Estimate at any time
-    * with `Sketches.cmsEstimate(terms, spark.read.parquet(storePath))`.
-    */
-  def cmsStream(terms: DataFrame, storePath: String, checkpoint: String,
-                termCol: String = "term", d: Int = 3, w: Int = 1024): DataStreamWriter[Row] =
-    terms.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(cmsMergeBatch(storePath, termCol, d, w) _)
-
-  /** Streaming distinct-count query: file-source events -> incremental HLL
-    * register store via [[hllMergeBatch]]. Read the estimate at any time
-    * with `Sketches.hllEstimate(spark.read.parquet(storePath), keys)`.
-    */
-  def hllStream(events: DataFrame, storePath: String, checkpoint: String,
-                keys: Seq[String] = Seq("metric"), itemCol: String = "source_id",
-                b: Int = 8): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(hllMergeBatch(storePath, keys, itemCol, b) _)
 
   /** Incremental Bloom-filter maintenance — the `foreachBatch` body for a
     * streaming membership prefilter (e.g. the benchmark / historical-corpus
@@ -1450,23 +1324,6 @@ object StreamingPipeline {
     idempotentSliceMerge(batch.sparkSession, storePath, batchId)(
       graft.sketch.Sketches.bloomWords(batch, itemCol, k, m),
       graft.sketch.Sketches.bloomMergeWords)
-
-  /** Streaming membership filter: document stream -> trigram shingles ->
-    * incremental Bloom word store via [[bloomMergeBatch]]. Probe at any time
-    * with `Sketches.bloomMightContain(items, spark.read.parquet(storePath),
-    * itemCol, k, m)` — bit-identical to the batch filter over every document
-    * delivered so far.
-    */
-  def bloomShingleStream(docs: DataFrame, storePath: String, checkpoint: String,
-                         n: Int = 3, k: Int = 4, m: Int = 1 << 21): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        bloomMergeBatch(storePath, "shingle", k, m)(
-          graft.dedup.Dedup.wordShingles(batch, n), batchId)
-      }
 
   /** Streaming decontamination router — the probe-side consumer of a
     * [[graft.dedup.Dedup.buildDecontamStore]] artifact: each micro-batch of
@@ -1515,46 +1372,6 @@ object StreamingPipeline {
     ()
   }
 
-  /** Streaming decontam-store maintenance: benchmark-doc stream ->
-    * per-micro-batch OR-merge appends via [[decontamAppendBatch]]. Routing
-    * continues through [[decontamRouteBatch]] unchanged (its BatchStore.active
-    * reads cover the words swap).
-    */
-  def decontamAppendStream(benchDocs: DataFrame, storePath: String,
-                           checkpoint: String): DataStreamWriter[Row] =
-    benchDocs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(decontamAppendBatch(storePath) _)
-
-  /** Streaming decontamination: document stream -> per-micro-batch routed
-    * verdicts via [[decontamRouteBatch]]. Read the accumulated verdicts at
-    * any time with `spark.read.parquet(outPath)`.
-    */
-  def decontamRouteStream(docs: DataFrame, storePath: String, outPath: String,
-                          checkpoint: String): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(decontamRouteBatch(storePath, outPath) _)
-
-  /** Streaming quantile sketch: file-source events -> incremental histogram
-    * bucket store via [[histMergeBatch]]. Read quantiles at any time with
-    * `Sketches.histogramQuantiles(spark.read.parquet(storePath), keys,
-    * binWidth)` — bit-identical to the batch sketch over the rows delivered
-    * so far.
-    */
-  def histogramStream(events: DataFrame, storePath: String, checkpoint: String,
-                      keys: Seq[String] = Seq("metric"), valueCol: String = "value",
-                      binWidth: Double = 50.0, numBins: Int = 20): DataStreamWriter[Row] =
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(histMergeBatch(storePath, keys, valueCol, binWidth, numBins) _)
-
   /** Incremental Misra-Gries heavy-hitters maintenance — the `foreachBatch`
     * body for a streaming frequent-items summary. MG summaries merge
     * through [[graft.sketch.Sketches.mgMerge]]'s deterministic cut
@@ -1571,38 +1388,18 @@ object StreamingPipeline {
   def mgMergeBatch(storePath: String, itemCol: String, k: Int)
                   (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    import spark.implicits._
-    def summaryDf(m: Map[String, Long]): DataFrame = {
-      val rows = m.toSeq.sortBy(_._1)
-      if (rows.isEmpty) Seq.empty[(String, Long)].toDF("item", "cnt")
-      else rows.toDF("item", "cnt")
-    }
-    def toMap(df: DataFrame): Map[String, Long] =
-      df.collect().map(r => r.getAs[String]("item") -> r.getAs[Long]("cnt")).toMap
     ledgeredSumMerge(spark, storePath, batchId)({
       // the batch's OWN summary lands durably as the slice record FIRST
       // (then reads back — one computation), giving the cut-merged family
       // the same rebuild-from-survivors un-learn path as HLL/Bloom
       // ([[retireMgBatches]]); evaluated lazily, so a ledgered replay
       // never rewrites a slice
-      val slice = summaryDf(graft.sketch.Sketches.mgSummary(batch, itemCol, k))
+      val slice = mgFrame(spark, graft.sketch.Sketches.mgSummary(batch, itemCol, k))
       slice.write.mode("overwrite").parquet(s"$storePath.slices/batch=$batchId")
       spark.read.parquet(s"$storePath.slices/batch=$batchId")
     },
-      (prev, next) => summaryDf(
-        graft.sketch.Sketches.mgMerge(toMap(prev), toMap(next), k)))
+      (prev, next) => mgFold(k)(Seq(prev, next)))
   }
-
-  /** Streaming heavy hitters: item stream -> incremental MG summary store.
-    * Read candidates at any time with `spark.read.parquet(storePath)`.
-    */
-  def mgStream(items: DataFrame, storePath: String, checkpoint: String,
-               itemCol: String, k: Int): DataStreamWriter[Row] =
-    items.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(mgMergeBatch(storePath, itemCol, k) _)
 
   /** Incremental PCA-moments maintenance — the `foreachBatch` body for a
     * live embedding feed: [[graft.similarity.Pca.momentSums]]' count/first/
@@ -1635,15 +1432,6 @@ object StreamingPipeline {
       graft.similarity.Pca.momentSums(departing, dim)
         .withColumn("q", -col("q")),
       graft.similarity.Pca.mergeMoments)
-
-  /** Streaming wrapper: embedding feed -> incremental moments store. */
-  def pcaMomentsStream(embeddings: DataFrame, storePath: String,
-                       checkpoint: String, dim: Int = 64): DataStreamWriter[Row] =
-    embeddings.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(pcaMomentsBatch(storePath, dim) _)
 
   // ---- streaming SCD Type-2 dimension maintenance ------------------------
 
@@ -1823,16 +1611,6 @@ object StreamingPipeline {
       }
     }
   }
-
-  /** Streaming wrapper: change feed -> incremental Type-2 dimension. */
-  def scdUpsertStream(changes: DataFrame, storePath: String, checkpoint: String,
-                      keyCols: Seq[String], tsCol: String,
-                      attrCols: Seq[String]): DataStreamWriter[Row] =
-    changes.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(scdUpsertBatch(storePath, keyCols, tsCol, attrCols) _)
 
   /** The ledgered change history, ALIVE rows only: each data-bearing
     * `batch=<k>` dir reads with its id as a partition column (basePath

@@ -1,14 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: prints scan/filter details of key plans (pushdown audit). */
 object ExplainCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.session.timeZone","UTC")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.core.Graft.localSession("graft-explain", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     for (q <- Seq("q01_pricing_summary", "q06_revenue_delta", "q03_shipping_priority")) {

@@ -391,10 +391,10 @@ class DriftShardSpec extends SparkSpec {
     def deliver(df: org.apache.spark.sql.DataFrame): Unit =
       df.repartition(2).write.mode("append").parquet(s"$base/in")
     def drain(): Unit =
-      StreamingPipeline.driftAppendStream(
+      StreamingPipeline.maintain(
         spark.readStream.schema("doc_id LONG, text STRING, cat STRING")
-          .option("maxFilesPerTrigger", "1").parquet(s"$base/in"),
-        feats, s"$base/store", s"$base/ck").start().awaitTermination()
+          .option("maxFilesPerTrigger", "1").parquet(s"$base/in"), s"$base/ck")(
+        StreamingPipeline.driftAppendBatch(s"$base/store", feats)).start().awaitTermination()
 
     deliver(d2); drain() // session 1 dies after the mid tranche
     deliver(d3); drain() // restart on the same checkpoint

@@ -104,6 +104,28 @@ class IngestStreamingSpec extends SparkSpec {
     assert(got2(1).getAs[Double]("value_sum") == 10.0, "touched date recomputed with the new event")
   }
 
+  test("ingestAndRefresh fails on an unreadable clean store instead of re-ingesting its keys") {
+    val base = Files.createTempDirectory("graft_stream_bad").toString
+    val in = s"$base/in"; val cleanStore = s"$base/clean"
+    val event = Seq((1L, java.sql.Timestamp.valueOf("2025-09-20 01:00:00"), "events_total", 4.0))
+      .toDF("source_id", "ts", "metric", "value")
+    def run() = StreamingPipeline.ingestAndRefresh(
+      StreamingPipeline.readEventStream(spark, in), cleanStore, s"$base/kpi", s"$base/ckpt")
+      .start().awaitTermination(60000)
+    event.write.parquet(in)
+    run()
+    // a part file that is not parquet, larger than the real one, so even a
+    // one-row probe of the store (Spark reads the largest file first) hits it
+    val bad = java.nio.file.Paths.get(cleanStore, "event_date=2025-09-20",
+      "part-99999-unreadable.snappy.parquet")
+    Files.writeString(bad, "not parquet " * 8192)
+    event.write.mode("append").parquet(in) // the stored key again
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    Files.delete(bad)
+    assert(spark.read.parquet(cleanStore).count() == 1L,
+      "a store that cannot be read must fail the batch, not be taken as empty")
+  }
+
   test("streaming dedup drops within-watermark duplicates with bounded state") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.timestamp_micros
@@ -147,14 +169,16 @@ class IngestStreamingSpec extends SparkSpec {
       df.select(col("doc_a"), col("doc_b"), col("jaccard"))
         .collect().map(_.toString).sorted.toSeq
     b1.write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.minhashDedupStream(
-      StreamingPipeline.readDocStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.minhashDedupBatch(store)).start()
     q1.awaitTermination(60000)
     // restart from the same checkpoint with a second delivery: cross-batch
     // dups (5 of 1/2, 6 of 3) must surface against the HISTORICAL buckets
     b2.write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.minhashDedupStream(
-      StreamingPipeline.readDocStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.minhashDedupBatch(store)).start()
     q2.awaitTermination(60000)
     val batchPairs = canon(Dedup.minhashLshPairs(
       Dedup.wordShingles(b1.unionByName(b2), 3), numPerms = 16, bands = 4,
@@ -207,10 +231,10 @@ class IngestStreamingSpec extends SparkSpec {
     val b2 = df(Seq((4L, "beta gamma gamma", "en"), (5L, "five noise six", "zh")))
     val isT = col("lang") === "en"
     TextOps.saveDsir(prefix, isT, m = 256, store)
-    def drain(): Unit = StreamingPipeline.dsirAppendStream(
+    def drain(): Unit = StreamingPipeline.maintain(
         StreamingPipeline.readColumnsStream(spark, in,
-          "doc_id LONG, text STRING, lang STRING"),
-        isT, store, s"$base/ck")
+          "doc_id LONG, text STRING, lang STRING"), s"$base/ck")(
+        StreamingPipeline.dsirAppendBatch(store, isT))
       .start().awaitTermination(60000)
     b1.write.mode("overwrite").parquet(in)
     drain()
@@ -307,9 +331,9 @@ class IngestStreamingSpec extends SparkSpec {
         (col("x1") * 2 - col("x2") > 10).cast("double").as("y"))
     def mk(lo: Int, hi: Int) = (lo until hi).map { i =>
       (i.toLong, (i % 19).toDouble, ((i * 5) % 13).toDouble) }.toDF("id", "x1", "x2")
-    def stream() = StreamingPipeline.frameAppendStream(
+    def stream() = StreamingPipeline.maintain(
       StreamingPipeline.readColumnsStream(spark, in, "id BIGINT, x1 DOUBLE, x2 DOUBLE"),
-      store, s"$base/ck", t).start()
+      s"$base/ck") { (b, id) => StreamingPipeline.frameAppendBatch(store, t)(b, id + 1) }.start()
     // prefix generation lands as batch=0; two streamed deliveries across a
     // restart land as batch=1, batch=2
     StreamingPipeline.frameAppendBatch(store, t)(mk(0, 100), 0L)
@@ -355,15 +379,17 @@ class IngestStreamingSpec extends SparkSpec {
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.orderBy("doc_id").collect().map(_.toString).toSeq
     b1.write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.lmAppendStream(
-      StreamingPipeline.readDocStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.lmAppendBatch(store)).start()
     q1.awaitTermination(60000)
     assert(canon(TextOps.scoreWithLm(b1, store)) == canon(TextOps.trigramBackoffNll(b1)),
       "after the first delivery the store must score like a fit on it")
     // restart from the same checkpoint with a second delivery
     b2.write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.lmAppendStream(
-      StreamingPipeline.readDocStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.lmAppendBatch(store)).start()
     q2.awaitTermination(60000)
     val mono = canon(TextOps.trigramBackoffNll(all))
     assert(canon(TextOps.scoreWithLm(all, store)) == mono,
@@ -399,12 +425,14 @@ class IngestStreamingSpec extends SparkSpec {
       (4L, "another fully disjoint document body text")
     ).toDF("doc_id", "text")
     b1.write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.decontamRouteStream(
-      StreamingPipeline.readDocStream(spark, in), store, out, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.decontamRouteBatch(store, out)).start()
     q1.awaitTermination(60000)
     b2.write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.decontamRouteStream(
-      StreamingPipeline.readDocStream(spark, in), store, out, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.decontamRouteBatch(store, out)).start()
     q2.awaitTermination(60000)
     def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select(col("doc_id"), col("n_shingles"), col("n_bloom_pos"),
@@ -443,12 +471,14 @@ class IngestStreamingSpec extends SparkSpec {
     // two deliveries across a restart: each new suite OR-merges into the
     // stored filter and appends its shingles exactly once
     suite2.write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.decontamAppendStream(
-      StreamingPipeline.readDocStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.decontamAppendBatch(store)).start()
     q1.awaitTermination(60000)
     suite3.write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.decontamAppendStream(
-      StreamingPipeline.readDocStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.decontamAppendBatch(store)).start()
     q2.awaitTermination(60000)
     // probing the grown store must equal a one-shot audit against ALL suites
     val corpus = Seq(
@@ -492,12 +522,14 @@ class IngestStreamingSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     Similarity.buildIvfIndex(mk(0 to 9), numCentroids = 2, iters = 2, store)
     mk(10 to 14).write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.ivfAppendStream(
-      StreamingPipeline.readEmbeddingStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readEmbeddingStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.ivfAppendBatch(store)).start()
     q1.awaitTermination(60000)
     mk(15 to 19).write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.ivfAppendStream(
-      StreamingPipeline.readEmbeddingStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readEmbeddingStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.ivfAppendBatch(store)).start()
     q2.awaitTermination(60000)
     val cells = spark.read.parquet(s"$store/cells")
     assert(cells.count() == 20L, "every delivered vector lands exactly once")
@@ -517,12 +549,14 @@ class IngestStreamingSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     Similarity.buildLshIndex(mk(0 to 9), bits = 4, tables = 4, dim = 8, store)
     mk(10 to 14).write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.lshAppendStream(
-      StreamingPipeline.readEmbeddingStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readEmbeddingStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.lshAppendBatch(store)).start()
     q1.awaitTermination(60000)
     mk(15 to 19).write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.lshAppendStream(
-      StreamingPipeline.readEmbeddingStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readEmbeddingStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.lshAppendBatch(store)).start()
     q2.awaitTermination(60000)
     val vecs = spark.read.parquet(s"$store/vectors")
     assert(vecs.count() == 20L, "every delivered vector lands exactly once")
@@ -547,12 +581,14 @@ class IngestStreamingSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     Similarity.buildPqIndex(mk(0 to 9), m = 2, k = 4, iters = 2, store, dim = 8)
     mk(10 to 14).write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.pqAppendStream(
-      StreamingPipeline.readEmbeddingStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readEmbeddingStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.pqAppendBatch(store)).start()
     q1.awaitTermination(60000)
     mk(15 to 19).write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.pqAppendStream(
-      StreamingPipeline.readEmbeddingStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readEmbeddingStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.pqAppendBatch(store)).start()
     q2.awaitTermination(60000)
     val codes = spark.read.parquet(s"$store/codes")
     assert(codes.select("vec_id").distinct().count() == 20L,
@@ -919,10 +955,10 @@ class IngestStreamingSpec extends SparkSpec {
       df.select("k", "plan", "effective_from", "effective_to", "is_current", "version")
         .orderBy("k", "version").collect().map(_.toString).toSeq
     def streamOnce(): Unit = {
-      val q = StreamingPipeline.scdUpsertStream(
+      val q = StreamingPipeline.maintain(
         spark.readStream.schema("k STRING, ts BIGINT, plan STRING")
-          .option("maxFilesPerTrigger", "16").parquet(in),
-        store, s"$base/ckpt", Seq("k"), "ts", Seq("plan")).start()
+          .option("maxFilesPerTrigger", "16").parquet(in), s"$base/ckpt")(
+        StreamingPipeline.scdUpsertBatch(store, Seq("k"), "ts", Seq("plan"))).start()
       q.awaitTermination(60000)
     }
     b1.write.mode("overwrite").parquet(in)

@@ -6,12 +6,14 @@ import scala.jdk.CollectionConverters._
 
 import graft.core.Graft
 import graft.store.{BatchStore, LocalFs}
+import graft.streaming.StreamingPipeline
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 
 /** The session's `file:` scheme: [[graft.store.LocalFs]] gives the stock
-  * local file system's mode bits and statuses without starting a process.
+  * local file system's mode bits and statuses without starting a process,
+  * and streaming checkpoints go through it too.
   */
 class LocalFsSpec extends SparkSpec {
   import spark.implicits._
@@ -25,7 +27,10 @@ class LocalFsSpec extends SparkSpec {
     Integer.toOctalString(Files.getAttribute(Paths.get(p), "unix:mode").asInstanceOf[Int] & 0xfff)
 
   /** The `jdk.ProcessStart` events JFR records while `body` runs. */
-  private def processStarts(body: => Unit): Int = {
+  private def processStarts(body: => Unit): Int = processCommands(body).size
+
+  /** The commands of the processes started while `body` runs. */
+  private def processCommands(body: => Unit): Seq[String] = {
     val rec = new jdk.jfr.Recording()
     val out = Files.createTempFile("graft_localfs", ".jfr")
     try {
@@ -33,8 +38,8 @@ class LocalFsSpec extends SparkSpec {
       rec.start()
       try body finally rec.stop()
       rec.dump(out)
-      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala
-        .count(_.getEventType.getName == "jdk.ProcessStart")
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map(_.getString("command"))
     } finally { rec.close(); Files.deleteIfExists(out) }
   }
 
@@ -102,5 +107,28 @@ class LocalFsSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/events").list().count(_.startsWith("d=")) == 30)
     assert(fs.listStatus(new Path(s"$dir/store/batch=1")).length >= 4)
     assert(starts == 0)
+  }
+
+  test("a maintain drain and its restart on the same checkpoint start no process") {
+    val dir = tmp("stream")
+    val in = s"$dir/in"; val store = s"$dir/store"
+    (0 until 40).toDF("i").repartition(4).write.parquet(in)
+    // one file per micro-batch, each landing as its own store batch
+    def drain(): Unit = StreamingPipeline.maintain(
+        spark.readStream.schema("i INT").option("maxFilesPerTrigger", "1").parquet(in),
+        s"$dir/ck") { (b, id) => BatchStore.publish(fs, store, id)(b.write.parquet(_)) }
+      .start().awaitTermination()
+    spark.range(1).count()
+    val starts = processCommands {
+      drain()
+      (40 until 60).toDF("i").repartition(2).write.mode("append").parquet(in)
+      drain()
+    }
+    assert(BatchStore.batchIds(fs, store) == (0L until 6L))
+    assert(spark.read.parquet(store).count() == 60L)
+    // Spark's own cleaner may `rm -rf` a finished query session's artifact
+    // dir whenever the garbage collector reaches it; nothing else may fork
+    val forks = starts.filterNot(c => c.startsWith("rm -rf ") && c.contains("/artifacts-"))
+    assert(forks.isEmpty, forks)
   }
 }

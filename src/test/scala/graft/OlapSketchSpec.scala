@@ -61,13 +61,15 @@ class OlapSketchSpec extends SparkSpec {
       .map(i => (i.toLong, java.sql.Timestamp.valueOf("2025-09-20 01:00:00"), "m", 1.0))
       .toDF("source_id", "ts", "metric", "value")
     mk(1, 400).write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.hllStream(
-      StreamingPipeline.readEventStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readEventStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.hllMergeBatch(store, Seq("metric"), "source_id")).start()
     q1.awaitTermination(60000)
     // second delivery: 200 NEW sources plus 200 re-delivered ones
     mk(201, 600).write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.hllStream(
-      StreamingPipeline.readEventStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readEventStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.hllMergeBatch(store, Seq("metric"), "source_id")).start()
     q2.awaitTermination(60000)
     val streamed = Sketches.hllEstimate(spark.read.parquet(store), Seq("metric")).collect()
     val batch = Sketches.hllDistinct(mk(1, 600), Seq("metric"), col("source_id")).collect()
@@ -178,13 +180,15 @@ class OlapSketchSpec extends SparkSpec {
         (i % 900).toDouble))
       .toDF("source_id", "ts", "metric", "value")
     mk(1, 1500).write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.histogramStream(
-      StreamingPipeline.readEventStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readEventStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.histMergeBatch(store, Seq("metric"), "value", 50.0, 20)).start()
     q1.awaitTermination(60000)
     // restart from the same checkpoint with a second delivery
     mk(1501, 3000).write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.histogramStream(
-      StreamingPipeline.readEventStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readEventStream(spark, in), s"$base/ckpt")(
+      StreamingPipeline.histMergeBatch(store, Seq("metric"), "value", 50.0, 20)).start()
     q2.awaitTermination(60000)
     val batchSk = Sketches.histogramSketch(mk(1, 3000), Seq("metric"), col("value"), 50.0, 20)
     val batchRows = batchSk.orderBy("bucket").collect().map(_.toString).toSeq
@@ -275,12 +279,16 @@ class OlapSketchSpec extends SparkSpec {
       .map(i => (i.toLong, s"alpha b$i gamma d$i epsilon"))
       .toDF("doc_id", "text")
     mk(1, 300).write.mode("overwrite").parquet(in)
-    val q1 = StreamingPipeline.bloomShingleStream(
-      StreamingPipeline.readDocStream(spark, in), store, s"$base/ckpt").start()
+    val q1 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt") { (b, id) =>
+      StreamingPipeline.bloomMergeBatch(store, "shingle")(graft.dedup.Dedup.wordShingles(b, 3), id)
+    }.start()
     q1.awaitTermination(60000)
     mk(301, 600).write.mode("append").parquet(in)
-    val q2 = StreamingPipeline.bloomShingleStream(
-      StreamingPipeline.readDocStream(spark, in), store, s"$base/ckpt").start()
+    val q2 = StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, in), s"$base/ckpt") { (b, id) =>
+      StreamingPipeline.bloomMergeBatch(store, "shingle")(graft.dedup.Dedup.wordShingles(b, 3), id)
+    }.start()
     q2.awaitTermination(60000)
     val batch = Sketches.bloomWords(
         graft.dedup.Dedup.wordShingles(mk(1, 600), 3), "shingle")
@@ -330,9 +338,9 @@ class OlapSketchSpec extends SparkSpec {
     val k = 8
     b1.write.mode("overwrite").parquet(in)
     def streamOnce(): Unit = {
-      val q = StreamingPipeline.mgStream(
+      val q = StreamingPipeline.maintain(
         spark.readStream.schema("item STRING").option("maxFilesPerTrigger", "16").parquet(in),
-        store, s"$base/ckpt", "item", k).start()
+        s"$base/ckpt")(StreamingPipeline.mgMergeBatch(store, "item", k)).start()
       q.awaitTermination(60000)
     }
     streamOnce()
@@ -368,10 +376,10 @@ class OlapSketchSpec extends SparkSpec {
     val b1 = mk(0, 25); val b2 = mk(25, 40)
     b1.write.mode("overwrite").parquet(in)
     def streamOnce(): Unit = {
-      val q = StreamingPipeline.pcaMomentsStream(
+      val q = StreamingPipeline.maintain(
         spark.readStream.schema("vec_id BIGINT, embedding ARRAY<DOUBLE>")
           .option("maxFilesPerTrigger", "16").parquet(in),
-        store, s"$base/ckpt", dim = 8).start()
+        s"$base/ckpt")(StreamingPipeline.pcaMomentsBatch(store, dim = 8)).start()
       q.awaitTermination(60000)
     }
     streamOnce()

@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * spell a `.staging-` dir or build a local file system in code (comments
   * excluded) — a store family publishes and swaps through
   * [[graft.store.BatchStore]], and every session's `file:` scheme is
-  * [[graft.store.LocalFs]].
+  * [[graft.store.LocalFs]]. Every store maintainer streams through the one
+  * driver, [[graft.streaming.StreamingPipeline.maintain]].
   */
 class StoreLayoutGuardSpec extends AnyFunSuite {
 
@@ -20,16 +21,16 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
       .map(l => l.indexOf("//") match { case -1 => l; case i => l.take(i) })
       .mkString("\n")
 
-  /** Every code line outside `graft/store/` that `hit` flags, as
-    * `file:line: code`.
+  /** Every code line of a main source whose path `keep` selects that `hit`
+    * flags, as `file:line: code`.
     */
-  private def hitsOutsideStore(hit: String => Boolean): Seq[String] = {
+  private def hits(keep: String => Boolean)(hit: String => Boolean): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root ($root)")
     val files = java.nio.file.Files.walk(root).toArray.toSeq
       .map(_.asInstanceOf[java.nio.file.Path])
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.toString.replace('\\', '/').contains("/graft/store/"))
+      .filter(f => keep(f.toString.replace('\\', '/')))
     assert(files.size > 10)
     files.flatMap { f =>
       val code = codeOf(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
@@ -38,6 +39,9 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
       }
     }
   }
+
+  private def hitsOutsideStore(hit: String => Boolean): Seq[String] =
+    hits(!_.contains("/graft/store/"))(hit)
 
   test("no .rename( call or .staging- literal outside graft/store") {
     val hits = hitsOutsideStore(l => l.contains(".rename(") || l.contains(".staging-"))
@@ -49,5 +53,11 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
       "FileSystem.getLocal(").exists(l.contains))
     assert(hits.isEmpty, hits.mkString(
       "local file system chosen outside graft/store (sessions use graft.store.LocalFs):\n", "\n", ""))
+  }
+
+  test("one stream chain: exactly one .writeStream in the code of src/main") {
+    val found = hits(_ => true)(_.contains(".writeStream"))
+    assert(found.size == 1, found.mkString(
+      "store maintainers stream through StreamingPipeline.maintain:\n", "\n", ""))
   }
 }

@@ -118,10 +118,10 @@ class StreamingFlagshipSpec extends SparkSpec {
   private val dsirPrefix = a1.take(5) // batch-built; a1.drop(5) ++ a2 ++ a3 stream
 
   private def dsirStream(base: String) =
-    StreamingPipeline.dsirAppendStream(
+    StreamingPipeline.maintain(
       StreamingPipeline.readColumnsStream(spark, s"$base/in_rest",
-        "doc_id LONG, text STRING, lang STRING"),
-      isT, s"$base/dsir", s"$base/ck_dsir").start()
+        "doc_id LONG, text STRING, lang STRING"), s"$base/ck_dsir")(
+      StreamingPipeline.dsirAppendBatch(s"$base/dsir", isT)).start()
 
   private def drain(base: String): Unit =
     (CorpusQueries.startFlagshipMaintainers(
@@ -176,14 +176,14 @@ class StreamingFlagshipSpec extends SparkSpec {
     deliverAll(s"$b/in_all", a2, parts = 3)
     deliverRest(s"$b/in_rest", a2, parts = 3)
     Seq(
-      StreamingPipeline.lmAppendStream(
-        StreamingPipeline.readDocStream(spark, s"$b/in_all"),
-        s"$b/lm", s"$b/ck_lm").start(),
-      StreamingPipeline.histogramStream(
+      StreamingPipeline.maintain(
+        StreamingPipeline.readDocStream(spark, s"$b/in_all"), s"$b/ck_lm")(
+        StreamingPipeline.lmAppendBatch(s"$b/lm")).start(),
+      StreamingPipeline.maintain(
         StreamingPipeline.readColumnsStream(spark, s"$b/in_all",
-          "doc_id BIGINT, lang STRING, n_chars BIGINT"),
-        s"$b/hist", s"$b/ck_hist",
-        keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20).start(),
+          "doc_id BIGINT, lang STRING, n_chars BIGINT"), s"$b/ck_hist")(
+        StreamingPipeline.histMergeBatch(s"$b/hist",
+          keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20)).start(),
       dsirStream(b)
     ).foreach(_.awaitTermination())
 
@@ -271,14 +271,14 @@ class StreamingFlagshipSpec extends SparkSpec {
     deliverAll(s"$b/in_all", a2, parts = 3)
     deliverRest(s"$b/in_rest", a2, parts = 3)
     Seq(
-      StreamingPipeline.lmAppendStream(
-        StreamingPipeline.readDocStream(spark, s"$b/in_all"),
-        s"$b/lm", s"$b/ck_lm").start(),
-      StreamingPipeline.histogramStream(
+      StreamingPipeline.maintain(
+        StreamingPipeline.readDocStream(spark, s"$b/in_all"), s"$b/ck_lm")(
+        StreamingPipeline.lmAppendBatch(s"$b/lm")).start(),
+      StreamingPipeline.maintain(
         StreamingPipeline.readColumnsStream(spark, s"$b/in_all",
-          "doc_id BIGINT, lang STRING, n_chars BIGINT"),
-        s"$b/hist", s"$b/ck_hist",
-        keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20).start(),
+          "doc_id BIGINT, lang STRING, n_chars BIGINT"), s"$b/ck_hist")(
+        StreamingPipeline.histMergeBatch(s"$b/hist",
+          keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20)).start(),
       dsirStream(b)
     ).foreach(_.awaitTermination())
     // kill-window maintenance INCLUDING the rotation: the b1 suite
@@ -326,9 +326,11 @@ class StreamingFlagshipSpec extends SparkSpec {
   // equal the monolithic packSequences chain over the same corpus.
 
   private def packStream(base: String) =
-    StreamingPipeline.packedExportStream(
-      StreamingPipeline.readDocStream(spark, s"$base/in_pack"),
-      s"$base/pack", s"$base/ck_pack", budget = 50, nShards = 4).start()
+    StreamingPipeline.maintain(
+      StreamingPipeline.readDocStream(spark, s"$base/in_pack"), s"$base/ck_pack") {
+      (b, id) => StreamingPipeline.packedExportAppendBatch(
+        s"$base/pack", budget = 50, nShards = 4)(b, id + 1)
+    }.start()
 
   private def deliverPack(dir: String, rows: Seq[(Long, String, String, Long)]): Unit =
     allDf(rows).select(col("doc_id"), col("text"))
@@ -401,14 +403,14 @@ class StreamingFlagshipSpec extends SparkSpec {
     deliverRest(s"$b/in_rest", a2, parts = 3)
     deliverPack(s"$b/in_pack", a2)
     Seq(
-      StreamingPipeline.lmAppendStream(
-        StreamingPipeline.readDocStream(spark, s"$b/in_all"),
-        s"$b/lm", s"$b/ck_lm").start(),
-      StreamingPipeline.histogramStream(
+      StreamingPipeline.maintain(
+        StreamingPipeline.readDocStream(spark, s"$b/in_all"), s"$b/ck_lm")(
+        StreamingPipeline.lmAppendBatch(s"$b/lm")).start(),
+      StreamingPipeline.maintain(
         StreamingPipeline.readColumnsStream(spark, s"$b/in_all",
-          "doc_id BIGINT, lang STRING, n_chars BIGINT"),
-        s"$b/hist", s"$b/ck_hist",
-        keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20).start(),
+          "doc_id BIGINT, lang STRING, n_chars BIGINT"), s"$b/ck_hist")(
+        StreamingPipeline.histMergeBatch(s"$b/hist",
+          keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20)).start(),
       dsirStream(b),
       packStream(b)
     ).foreach(_.awaitTermination())
@@ -469,20 +471,20 @@ class StreamingFlagshipSpec extends SparkSpec {
   private def deliverScd(dir: String, rows: Seq[(Long, Long, Int)]): Unit =
     scdDf(rows).repartition(2).write.mode("append").parquet(dir)
   private def scdStream(base: String) =
-    StreamingPipeline.scdUpsertStream(
+    StreamingPipeline.maintain(
       StreamingPipeline.readColumnsStream(spark, s"$base/in_scd",
-        "user_id BIGINT, ts_us BIGINT, plan_tier INT"),
-      s"$base/scd", s"$base/ck_scd",
-      Seq("user_id"), "ts_us", Seq("plan_tier")).start()
+        "user_id BIGINT, ts_us BIGINT, plan_tier INT"), s"$base/ck_scd")(
+      StreamingPipeline.scdUpsertBatch(s"$base/scd",
+        Seq("user_id"), "ts_us", Seq("plan_tier"))).start()
   // the drift maintainer shares the DSIR feed (baseline = the batch-built
   // prefix, deliveries stream in as (doc_id, text, lang))
   private val flagDriftFeats: Seq[(String, org.apache.spark.sql.Column)] =
     Seq("lang" -> col("lang"), "len_b" -> floor(length(col("text")) / lit(20)))
   private def driftStream(base: String) =
-    StreamingPipeline.driftAppendStream(
+    StreamingPipeline.maintain(
       StreamingPipeline.readColumnsStream(spark, s"$base/in_rest",
-        "doc_id LONG, text STRING, lang STRING"),
-      flagDriftFeats, s"$base/drift", s"$base/ck_drift").start()
+        "doc_id LONG, text STRING, lang STRING"), s"$base/ck_drift")(
+      StreamingPipeline.driftAppendBatch(s"$base/drift", flagDriftFeats)).start()
   private def driftRows(base: String): Seq[String] =
     graft.operators.Drift.psiFromStore(spark, s"$base/drift")
       .orderBy("feature").collect().map(_.toString).toSeq
@@ -559,14 +561,14 @@ class StreamingFlagshipSpec extends SparkSpec {
     deliverAll(s"$b/in_all", a2, parts = 3)
     deliverRest(s"$b/in_rest", a2, parts = 3)
     Seq(
-      StreamingPipeline.lmAppendStream(
-        StreamingPipeline.readDocStream(spark, s"$b/in_all"),
-        s"$b/lm", s"$b/ck_lm").start(),
-      StreamingPipeline.histogramStream(
+      StreamingPipeline.maintain(
+        StreamingPipeline.readDocStream(spark, s"$b/in_all"), s"$b/ck_lm")(
+        StreamingPipeline.lmAppendBatch(s"$b/lm")).start(),
+      StreamingPipeline.maintain(
         StreamingPipeline.readColumnsStream(spark, s"$b/in_all",
-          "doc_id BIGINT, lang STRING, n_chars BIGINT"),
-        s"$b/hist", s"$b/ck_hist",
-        keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20).start(),
+          "doc_id BIGINT, lang STRING, n_chars BIGINT"), s"$b/ck_hist")(
+        StreamingPipeline.histMergeBatch(s"$b/hist",
+          keys = Seq("lang"), valueCol = "n_chars", binWidth = 50.0, numBins = 20)).start(),
       dsirStream(b),
       driftStream(b)
     ).foreach(_.awaitTermination())
