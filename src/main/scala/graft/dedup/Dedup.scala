@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.store.BatchStore
+import graft.store.{BatchStore, StoreFamily}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -477,6 +477,14 @@ object Dedup {
     */
   private[graft] val decontamFormatMarker = "_format-complete-sets"
 
+  /** The decontamination store: one `shingles` half, the ledger, plus the
+    * Bloom `words` every append and rotation replaces whole. Its
+    * retirement is batch-level ([[retireDecontamBench]]) and its
+    * compaction rebuilds the words, so both are its own.
+    */
+  private[graft] val DecontamStore = StoreFamily("decontam",
+    Seq(StoreFamily.Half("shingles")), swapped = Seq("words"))
+
   /** Incremental half of the decontamination store — benchmark suites GROW
     * (a new eval ships; its prompts must start blocking immediately,
     * without re-shingling every suite already stored), and Bloom bits make
@@ -505,29 +513,22 @@ object Dedup {
                           textCol: String = "text", idCol: String = "doc_id"): Boolean = {
     require(appendId != 0L, "appendId 0 is reserved for the initial build")
     val spark = benchDocs.sparkSession
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "decontam-append") {
-      Seq("shingles", "words", "config", "retired").foreach(h =>
-        BatchStore.recover(fs, s"$path/$h"))
-      if (graft.store.Ledger.landed(fs, s"$path/shingles", appendId)) false
-      else {
-        require(!readDecontamRetirements(spark, fs, path).contains(appendId),
-          s"append id $appendId is named by a pending retirement — compact first")
-        val cfg = spark.read.parquet(s"$path/config").head()
-        val (n, k, m) = (cfg.getAs[Int]("n"), cfg.getAs[Int]("k"), cfg.getAs[Int]("m"))
-        // stage the delta once, then derive its bloom bits from the staged
-        // parquet (one computation, durable across the two publishes); the
-        // words swap lands before the shingles publish (the commit marker)
-        BatchStore.publish(fs, s"$path/shingles", appendId) { staging =>
-          wordShingles(benchDocs, n, textCol, idCol).select(col("shingle")).distinct()
-            .write.mode("overwrite").parquet(staging)
-          val mergedWords = graft.sketch.Sketches.bloomMergeWords(
-            spark.read.parquet(s"$path/words"),
-            graft.sketch.Sketches.bloomWords(spark.read.parquet(staging), "shingle", k, m))
-          BatchStore.replace(fs, s"$path/words", "append")(
-            mergedWords.write.mode("overwrite").parquet(_))
-        }
-        true
+    BatchStore.land(DecontamStore, spark, path, appendId, "append") { fs =>
+      require(!readDecontamRetirements(spark, fs, path).contains(appendId),
+        s"append id $appendId is named by a pending retirement — compact first")
+      val cfg = spark.read.parquet(s"$path/config").head()
+      val (n, k, m) = (cfg.getAs[Int]("n"), cfg.getAs[Int]("k"), cfg.getAs[Int]("m"))
+      // stage the delta once, then derive its bloom bits from the staged
+      // parquet (one computation, durable across the two publishes); the
+      // words swap lands before the shingles publish (the commit marker)
+      BatchStore.publish(fs, s"$path/shingles", appendId) { staging =>
+        wordShingles(benchDocs, n, textCol, idCol).select(col("shingle")).distinct()
+          .write.mode("overwrite").parquet(staging)
+        val mergedWords = graft.sketch.Sketches.bloomMergeWords(
+          spark.read.parquet(s"$path/words"),
+          graft.sketch.Sketches.bloomWords(spark.read.parquet(staging), "shingle", k, m))
+        BatchStore.replace(fs, s"$path/words", "append")(
+          mergedWords.write.mode("overwrite").parquet(_))
       }
     }
   }
@@ -554,26 +555,20 @@ object Dedup {
   def retireDecontamBench(spark: org.apache.spark.sql.SparkSession, path: String,
                           benchBatches: Seq[Long], retireId: Long): Boolean = {
     require(benchBatches.nonEmpty, "nothing to retire")
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "decontam-retire") {
-      require(fs.exists(new org.apache.hadoop.fs.Path(path, decontamFormatMarker)),
-        s"$path has no '$decontamFormatMarker' stamp: it was written under the " +
-        "delta-append format (or predates the stamp), so its batches are not " +
-        "complete per-suite shingle sets and batch-level retirement would " +
-        "silently drop shingles shared with live suites — rebuild the store first")
-      Seq("shingles", "retired").foreach(h => BatchStore.recover(fs, s"$path/$h"))
-      if (graft.store.Ledger.landed(fs, s"$path/retired", retireId)) false
-      else {
-        // landed-by-rule counts as published: a compaction-vacuumed
-        // suite id has no dir but its shingles live on in the base
-        benchBatches.foreach(b => require(
-          graft.store.Ledger.landed(fs, s"$path/shingles", b),
-          s"cannot retire unpublished bench batch $b"))
-        import spark.implicits._
-        BatchStore.publish(fs, s"$path/retired", retireId)(
-          benchBatches.toDF("rbatch").coalesce(1).write.mode("overwrite").parquet(_))
-        true
-      }
+    require(BatchStore.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path, decontamFormatMarker)),
+      s"$path has no '$decontamFormatMarker' stamp: it was written under the " +
+      "delta-append format (or predates the stamp), so its batches are not " +
+      "complete per-suite shingle sets and batch-level retirement would " +
+      "silently drop shingles shared with live suites — rebuild the store first")
+    BatchStore.land(DecontamStore, spark, path, retireId, "retire", "retired") { fs =>
+      // landed-by-rule counts as published: a compaction-vacuumed
+      // suite id has no dir but its shingles live on in the base
+      benchBatches.foreach(b => require(
+        graft.store.Ledger.landed(fs, s"$path/shingles", b),
+        s"cannot retire unpublished bench batch $b"))
+      import spark.implicits._
+      BatchStore.publish(fs, s"$path/retired", retireId)(
+        benchBatches.toDF("rbatch").coalesce(1).write.mode("overwrite").parquet(_))
     }
   }
 
@@ -635,9 +630,8 @@ object Dedup {
     * n_bloom_pos keeps the rotated suites' tax, and the re-run converges
     * because the still-unblanked ledger forces the full sequence again.
     */
-  def compactDecontamStore(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "decontam-compact") {
+  def compactDecontamStore(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    BatchStore.maintain(DecontamStore, spark, path, "compact") { fs =>
       val retired = readDecontamRetirements(spark, fs, path)
       // (1) apply: blank each rotated batch dir to a tombstone. mkdirs
       // runs UNCONDITIONALLY — a crash between delete and mkdirs leaves
@@ -680,7 +674,6 @@ object Dedup {
       }
       n
     }
-  }
 
   /** 60-bit SimHash over word tokens (with multiplicity): bit b of the
     * fingerprint is 1 iff the sum of +-1 contributions (tokens whose hash has

@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.store.BatchStore
+import graft.store.{BatchStore, StoreFamily}
+import graft.store.StoreFamily.Half
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -219,37 +220,33 @@ object Drift {
                              path: String, appendId: Long,
                              negate: Boolean): Boolean = {
     require(appendId != 0L, "appendId 0 is reserved for the initial build")
-    val fs = fsOf(docs, path)
-    graft.store.MaintenanceLock.withLock(fs, path,
-      if (negate) "drift-retire" else "drift-append") {
-      BatchStore.recover(fs, s"$path/cur")
-      if (graft.store.Ledger.landed(fs, s"$path/cur", appendId)) false
-      else {
-        val d = bucketCounts(docs, features)
-        val delta = if (negate) d.withColumn("c", -col("c")) else d
-        BatchStore.publish(fs, s"$path/cur", appendId)(delta.write.mode("overwrite").parquet(_))
-        true
-      }
+    BatchStore.land(DriftStore, docs.sparkSession, path, appendId,
+      if (negate) "retire" else "append") { fs =>
+      val d = bucketCounts(docs, features)
+      val delta = if (negate) d.withColumn("c", -col("c")) else d
+      BatchStore.publish(fs, s"$path/cur", appendId)(delta.write.mode("overwrite").parquet(_))
     }
   }
 
-  /** Merge the live-count batches back to one `batch=0` (exact long sums;
-    * buckets whose population reached zero drop outright — a fresh count
-    * never has non-positive rows). Published ids stay as tombstone dirs so
-    * the ledger survives; the swap is the two-rename `.prev` window every
-    * store shares. Returns true when anything merged.
+  /** The drift store: the live counts `cur` are the one ledgered half,
+    * sum-merged per (feature, bucket) — buckets whose population reached
+    * zero drop outright, as a fresh count never has non-positive rows;
+    * the frozen `base` is replaced whole by [[rebaseDriftBaseline]].
+    */
+  private[graft] val DriftStore = StoreFamily("drift",
+    Seq(Half("cur", layout = BatchStore.asMerged,
+      merge = Some(_.groupBy("feature", "bucket").agg(sum(col("c")).as("c"))
+        .filter(col("c") > 0L)))),
+    swapped = Seq("base"))
+
+  /** Merge the live-count batches back to one `batch=0` (exact long sums);
+    * the ledger lands as one watermark marker, and the swap is the
+    * two-rename `.prev` window every store shares. Returns true when
+    * anything merged.
     */
   def compactDriftStore(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Boolean = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "drift-compact") {
-      // self-running vacuum: one watermark marker instead of a tombstone
-      // dir per merged id (carries any prior watermark)
-      BatchStore.compact(spark, s"$path/cur",
-        _.groupBy("feature", "bucket").agg(sum(col("c")).as("c")).filter(col("c") > 0L),
-        vacuumLedger = true, layout = BatchStore.asMerged) > 0
-    }
-  }
+                        path: String): Boolean =
+    BatchStore.compactStore(DriftStore, spark, path, minor = false) > 0
 
   /** Accept the drift: the monitor's loop step. After the pipeline
     * retrains on the live snapshot, that snapshot becomes the new
@@ -260,10 +257,8 @@ object Drift {
     * retrain. Count-frame-sized work only.
     */
   def rebaseDriftBaseline(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "drift-rebase") {
-      Seq("base", "cur").foreach(h => BatchStore.recover(fs, s"$path/$h"))
+                          path: String): Unit =
+    BatchStore.maintain(DriftStore, spark, path, "rebase") { fs =>
       val live = spark.read.parquet(s"$path/cur")
         .groupBy("feature", "bucket").agg(sum(col("c")).as("c"))
         .filter(col("c") > 0L).localCheckpoint(true)
@@ -277,7 +272,6 @@ object Drift {
             fs, s"$path/cur", staging, curBatches)
         }
     }
-  }
 
   /** Serve the report FROM the store: baseline vs the summed live counts —
     * no corpus pass at all, and indifferent to whether compaction has

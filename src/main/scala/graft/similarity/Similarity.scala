@@ -3,7 +3,8 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.store.BatchStore
+import graft.store.{BatchStore, StoreFamily}
+import graft.store.StoreFamily.Half
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -19,6 +20,23 @@ import graft.store.BatchStore
   * blocking also powers [[cosinePairs]] for near-dup mining.
   */
 object Similarity {
+
+  /** The key of every vector store below: builds, appends, retirements
+    * and probes all name rows by it.
+    */
+  private val VecId = "vec_id"
+
+  private[graft] val IvfStore = StoreFamily("ivf",
+    Seq(Half("cells", Seq(VecId), BatchStore.partitioned("cell"))),
+    retiredKey = "rid", swapped = Seq("centroids"), built = true, vacuum = false)
+
+  private[graft] val LshStore = StoreFamily("lsh",
+    Seq(Half("vectors", Seq(VecId)), Half("sigs", Seq(VecId), BatchStore.rebalanced("t", "bucket"))),
+    retiredKey = "rid", swapped = Seq("config"), built = true, vacuum = false)
+
+  private[graft] val PqStore = StoreFamily("pq",
+    Seq(Half("vectors", Seq(VecId)), Half("codes", Seq(VecId))),
+    retiredKey = "rid", built = true, vacuum = false)
 
   /** Strict left-to-right fold; kept as the generic array-math API. The hot
     * paths below use the codegen'd [[graft.expressions.DotProduct]], which
@@ -228,28 +246,25 @@ object Similarity {
     * the DuckDB oracles re-derive them.
     */
   def buildLshIndex(vectors: DataFrame, bits: Int, tables: Int, dim: Int, path: String,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+                    vecCol: String = "embedding"): Unit = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val fs = BatchStore.fs(spark, path)
     // lock + build marker: see [[buildPqIndex]] — a rebuild over a live
     // store must not interleave with appenders, and a crash mid-rebuild
     // must refuse maintenance loudly rather than mix geometry generations
-    graft.store.MaintenanceLock.withLock(fs, path, "lsh-build") {
-      BatchStore.withBuildMarker(fs, path) {
-        val c = lshPrepped(vectors, dim, idCol, vecCol)
-        // sigs/vectors nest a batch=<append id> level so [[lshAppendVectors]]
-        // can land increments as whole directories (the [[ivfAppendCells]]
-        // layout); a REBUILD must clear prior appends, hence the deletes
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/sigs"), true)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors"), true)
-        lshSigs(c, lshPlanes(vectors, tables, bits, dim), idCol)
-          .sortWithinPartitions("t", "bucket")
-          .write.mode("overwrite").parquet(s"$path/sigs/batch=0")
-        c.write.mode("overwrite").parquet(s"$path/vectors/batch=0")
-        Seq((tables, bits, dim)).toDF("tables", "bits", "dim")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/config")
-      }
+    BatchStore.build(LshStore, spark, path) { fs =>
+      val c = lshPrepped(vectors, dim, VecId, vecCol)
+      // sigs/vectors nest a batch=<append id> level so [[lshAppendVectors]]
+      // can land increments as whole directories (the [[ivfAppendCells]]
+      // layout); a REBUILD must clear prior appends, hence the deletes
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/sigs"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors"), true)
+      lshSigs(c, lshPlanes(vectors, tables, bits, dim), VecId)
+        .sortWithinPartitions("t", "bucket")
+        .write.mode("overwrite").parquet(s"$path/sigs/batch=0")
+      c.write.mode("overwrite").parquet(s"$path/vectors/batch=0")
+      Seq((tables, bits, dim)).toDF("tables", "bits", "dim")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/config")
     }
   }
 
@@ -267,32 +282,21 @@ object Similarity {
     * drop rows.
     */
   def lshAppendVectors(vectors: DataFrame, path: String, appendId: Long,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
+                       vecCol: String = "embedding"): Boolean = {
     require(appendId >= 1, "appendId 0 is the initial build")
     val spark = vectors.sparkSession
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "lsh-append") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      BatchStore.recover(fs, s"$path/sigs")
-      BatchStore.recover(fs, s"$path/vectors")
-      BatchStore.recoverMinor(fs, s"$path/sigs")
-      BatchStore.recoverMinor(fs, s"$path/vectors")
-      if (graft.store.Ledger.landed(fs, s"$path/sigs", appendId)) false
-      else {
-        // .prev fallback covers reindexLsh's config swap window
-        val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
-        val (tables, bits, dim) = (cfg.getAs[Int]("tables"), cfg.getAs[Int]("bits"),
-          cfg.getAs[Int]("dim"))
-        val c = lshPrepped(vectors, dim, idCol, vecCol)
-        // payloads first; the sigs publish is the commit marker
-        BatchStore.publish(fs, s"$path/vectors", appendId)(
-          c.write.mode("overwrite").parquet(_))
-        BatchStore.publish(fs, s"$path/sigs", appendId)(
-          lshSigs(c, lshPlanes(vectors, tables, bits, dim), idCol)
-            .sortWithinPartitions("t", "bucket")
-            .write.mode("overwrite").parquet(_))
-        true
-      }
+    BatchStore.land(LshStore, spark, path, appendId, "append") { fs =>
+      val cfg = spark.read.parquet(s"$path/config").head()
+      val (tables, bits, dim) = (cfg.getAs[Int]("tables"), cfg.getAs[Int]("bits"),
+        cfg.getAs[Int]("dim"))
+      val c = lshPrepped(vectors, dim, VecId, vecCol)
+      // payloads first; the sigs publish is the commit marker
+      BatchStore.publish(fs, s"$path/vectors", appendId)(
+        c.write.mode("overwrite").parquet(_))
+      BatchStore.publish(fs, s"$path/sigs", appendId)(
+        lshSigs(c, lshPlanes(vectors, tables, bits, dim), VecId)
+          .sortWithinPartitions("t", "bucket")
+          .write.mode("overwrite").parquet(_))
     }
   }
 
@@ -303,42 +307,14 @@ object Similarity {
     * staging/swap/tombstone contract. Returns the number of data dirs
     * compacted across the two halves (0 = nothing to do).
     */
-  def compactLshIndex(spark: SparkSession, path: String,
-                      idCol: String = "vec_id"): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "lsh-compact") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      // retirements apply physically to BOTH halves (compactIvfIndex note)
-      val retired = BatchStore.readRetirements(spark, fs, path)
-      val alive: DataFrame => DataFrame = aliveVectors(_, retired, idCol)
-      // the two halves are disjoint dirs rebuilding independently under
-      // the one store lock this thread already holds — overlap them
-      // (guide §2.6); each half keeps its staging/swap discipline
-      val n = graft.core.Par.sumSections(
-        () => BatchStore.compact(spark, s"$path/sigs", alive, retired.nonEmpty,
-          layout = BatchStore.rebalanced("t", "bucket")),
-        () => BatchStore.compact(spark, s"$path/vectors", alive, retired.nonEmpty))
-      if (retired.nonEmpty) BatchStore.blankRetirements(fs, path)
-      n
-    }
-  }
+  def compactLshIndex(spark: SparkSession, path: String): Int =
+    BatchStore.compactStore(LshStore, spark, path, minor = false)
 
   /** [[compactIvfIndexMinor]] for the LSH store: debris-only merge of both
     * halves' appended batch dirs, `batch=0` bases untouched.
     */
-  def compactLshIndexMinor(spark: SparkSession, path: String,
-                           idCol: String = "vec_id"): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "lsh-compact") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      val retired = BatchStore.readRetirements(spark, fs, path)
-      val alive: DataFrame => DataFrame = aliveVectors(_, retired, idCol)
-      graft.core.Par.sumSections(
-        () => BatchStore.compactMinor(spark, s"$path/sigs", alive,
-          BatchStore.rebalanced("t", "bucket")),
-        () => BatchStore.compactMinor(spark, s"$path/vectors", alive))
-    }
-  }
+  def compactLshIndexMinor(spark: SparkSession, path: String): Int =
+    BatchStore.compactStore(LshStore, spark, path, minor = true)
 
   /** Probe-many half: hash ONLY the query set (tables rows per query, with
     * the geometry read from the stored config), candidate-join into the
@@ -348,33 +324,26 @@ object Similarity {
     * q117 gate hash-checks that equivalence).
     */
   def probeLshIndex(queries: DataFrame, path: String, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
+                    vecCol: String = "embedding",
                     maxBucket: Int = Int.MaxValue): DataFrame = {
     val spark = queries.sparkSession
-    // read-only .prev fallbacks cover the compactLshIndex / reindexLsh
-    // swap windows (config included — its swap publishes a re-tune)
+    val idCol = VecId
+    // pending retirements filter BOTH halves logically (candidates and
+    // rescore payloads) until full compaction applies them physically
+    val Seq(sigs, vecs) = BatchStore.live(LshStore, spark, path, Seq("sigs", "vectors")).flatten
+    // read-only .prev fallback: reindexLsh's config swap publishes a re-tune
     val fs = BatchStore.fs(spark, path)
-    // a crashed (re)build leaves a mixed-generation store that .prev
-    // fallbacks cannot read around — refuse loudly instead of serving it
-    BatchStore.requireNoPendingBuild(fs, path)
-    BatchStore.requireNoMinorPending(fs, BatchStore.active(fs, s"$path/sigs"))
-    BatchStore.requireNoMinorPending(fs, BatchStore.active(fs, s"$path/vectors"))
     val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
     val (tables, bits, dim) = (cfg.getAs[Int]("tables"), cfg.getAs[Int]("bits"),
       cfg.getAs[Int]("dim"))
     // partition columns come back as directory-inferred ints; restore the
     // build's longs so the join keys and output hash-match the in-memory
-    // path. Pending retirements filter BOTH halves logically (candidates
-    // and rescore payloads) until full compaction applies them physically.
-    val retired = BatchStore.readRetirements(spark, fs, path)
+    // path
     val sigC = boundedBuckets(
-      aliveVectors(spark.read.parquet(BatchStore.active(fs, s"$path/sigs")), retired, idCol)
-        .select(col(idCol), col("t").cast("long").as("t"),
-          col("bucket").cast("long").as("bucket")),
+      sigs.select(col(idCol), col("t").cast("long").as("t"),
+        col("bucket").cast("long").as("bucket")),
       maxBucket)
-    val cVec = aliveVectors(
-        spark.read.parquet(BatchStore.active(fs, s"$path/vectors")), retired, idCol)
-      .select(col(idCol), col("v"), col("n"))
+    val cVec = vecs.select(col(idCol), col("v"), col("n"))
     val q = lshPrepped(queries, dim, idCol, vecCol)
     val sigQ = lshSigs(q, lshPlanes(queries, tables, bits, dim), idCol)
     val cand = sigQ.as("q").join(sigC.as("c"),
@@ -703,24 +672,19 @@ object Similarity {
     * batch build, and [[probeIvfIndex]] is the hot path.
     */
   def buildIvfIndex(vectors: DataFrame, numCentroids: Int, iters: Int, path: String,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = vectors.sparkSession
-    val fs = BatchStore.fs(spark, path)
+                    vecCol: String = "embedding"): Unit =
     // lock + build marker: see [[buildPqIndex]]
-    graft.store.MaintenanceLock.withLock(fs, path, "ivf-build") {
-      BatchStore.withBuildMarker(fs, path) {
-        val cent = kmeansCentroids(vectors, numCentroids, iters, idCol, vecCol)
-        cent.write.mode("overwrite").parquet(s"$path/centroids")
-        // cells nest one more partition level (batch=<append id>/cell=<cell>)
-        // so [[ivfAppendCells]] can land increments as whole directories; a
-        // REBUILD must clear prior appends, not just batch=0, hence the delete
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/cells"), true)
-        assignTo(prepped(vectors, idCol, vecCol), cent, idCol)
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells/batch=0")
-      }
+    BatchStore.build(IvfStore, vectors.sparkSession, path) { fs =>
+      val cent = kmeansCentroids(vectors, numCentroids, iters, VecId, vecCol)
+      cent.write.mode("overwrite").parquet(s"$path/centroids")
+      // cells nest one more partition level (batch=<append id>/cell=<cell>)
+      // so [[ivfAppendCells]] can land increments as whole directories; a
+      // REBUILD must clear prior appends, not just batch=0, hence the delete
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/cells"), true)
+      assignTo(prepped(vectors, VecId, vecCol), cent, VecId)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells/batch=0")
     }
-  }
 
   /** Append-half of the persisted IVF index for a GROWING corpus: assign a
     * batch of NEW vectors to the STORED centroids — no Lloyd refit; the
@@ -736,23 +700,15 @@ object Similarity {
     * `batch` column is simply never selected.
     */
   def ivfAppendCells(vectors: DataFrame, path: String, appendId: Long,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
+                     vecCol: String = "embedding"): Boolean = {
     require(appendId >= 1, "appendId 0 is the initial build")
     val spark = vectors.sparkSession
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "ivf-append") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      BatchStore.recover(fs, s"$path/cells")
-      BatchStore.recoverMinor(fs, s"$path/cells")
-      if (graft.store.Ledger.landed(fs, s"$path/cells", appendId)) false
-      else {
-        val cent = spark.read.parquet(s"$path/centroids")
-        BatchStore.publish(fs, s"$path/cells", appendId)(
-          assignTo(prepped(vectors, idCol, vecCol), cent, idCol)
-            .repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell").parquet(_))
-        true
-      }
+    BatchStore.land(IvfStore, spark, path, appendId, "append") { fs =>
+      val cent = spark.read.parquet(s"$path/centroids")
+      BatchStore.publish(fs, s"$path/cells", appendId)(
+        assignTo(prepped(vectors, VecId, vecCol), cent, VecId)
+          .repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell").parquet(_))
     }
   }
 
@@ -764,7 +720,7 @@ object Similarity {
     * per-vector (not additive counts), so retirement is a ledgered
     * tombstone batch: the departing ids land under
     * `retired/batch=<retireId>` as a single `rid` column, and every
-    * reader applies [[aliveVectors]]' ordering rule. Nothing in the
+    * reader applies [[BatchStore.alive]]'s ordering rule. Nothing in the
     * store's data halves is touched — cost ∝ the retired slice.
     * `retireId` must exceed every published data batch id, and re-appends
     * of a changed vector must use a later id still (the delta cycle's
@@ -776,41 +732,17 @@ object Similarity {
     * preserve it (their merged rows land at the max data id, which the
     * strictly-greater rule makes immune to the still-pending ids).
     */
-  private def retireStoreIds(spark: SparkSession, path: String,
-                             retiredIds: DataFrame, retireId: Long,
-                             idCol: String, lockTag: String): Boolean = {
-    require(retireId >= 1, "retireId 0 would predate the initial build")
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, lockTag) {
-      BatchStore.requireNoPendingBuild(fs, path)
-      if (graft.store.Ledger.landed(fs, s"$path/retired", retireId)) false
-      else {
-        BatchStore.publish(fs, s"$path/retired", retireId)(
-          retiredIds.select(col(idCol).as("rid")).distinct()
-            .write.mode("overwrite").parquet(_))
-        true
-      }
-    }
-  }
-
   def retireIvfVectors(spark: SparkSession, path: String, retiredIds: DataFrame,
-                       retireId: Long, idCol: String = "vec_id"): Boolean =
-    retireStoreIds(spark, path, retiredIds, retireId, idCol, "ivf-retire")
+                       retireId: Long): Boolean =
+    BatchStore.retire(IvfStore, spark, path, retiredIds, retireId)
 
   def retireLshVectors(spark: SparkSession, path: String, retiredIds: DataFrame,
-                       retireId: Long, idCol: String = "vec_id"): Boolean =
-    retireStoreIds(spark, path, retiredIds, retireId, idCol, "lsh-retire")
+                       retireId: Long): Boolean =
+    BatchStore.retire(LshStore, spark, path, retiredIds, retireId)
 
   def retirePqVectors(spark: SparkSession, path: String, retiredIds: DataFrame,
-                      retireId: Long, idCol: String = "vec_id"): Boolean =
-    retireStoreIds(spark, path, retiredIds, retireId, idCol, "pq-retire")
-
-  /** The ANN families' liveness rule: [[BatchStore.alive]] with the
-    * vector id matched against the retirement ledger's `rid` column.
-    */
-  private[graft] def aliveVectors(df: DataFrame, retired: Option[DataFrame],
-                                  idCol: String): DataFrame =
-    BatchStore.alive(df, retired, Seq(idCol -> "rid"))
+                      retireId: Long): Boolean =
+    BatchStore.retire(PqStore, spark, path, retiredIds, retireId)
 
   /** Batch re-index of a persisted IVF store — the documented drift answer
     * for [[ivfAppendCells]]' frozen-centroid appends: refit the k-means
@@ -829,37 +761,45 @@ object Similarity {
     * vectors re-indexed.
     */
   def reindexIvf(spark: SparkSession, path: String, numCentroids: Int,
-                 iters: Int, idCol: String = "vec_id"): Long = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "ivf-reindex") {
-      BatchStore.requireNoPendingBuild(fs, path)
-    BatchStore.recover(fs, s"$path/cells")
-    BatchStore.recover(fs, s"$path/centroids")
-    // pending retirements: the refit reads LIVE rows only, and the
-    // reassigned corpus lands at the max data id so the preserved ledger
-    // (reindex never blanks it — that is full compaction's job) cannot
-    // kill the re-landed rows. With none pending this is the batch=0 base.
-    val retired = BatchStore.readRetirements(spark, fs, path)
-    val stored = aliveVectors(spark.read.parquet(s"$path/cells"), retired, idCol)
-      .select(col(idCol), col("v"))
-    val n = stored.count()
-    val cent = kmeansCentroids(stored, numCentroids, iters, idCol, "v")
-    val assigned = assignTo(prepped(stored, idCol, "v"), cent, idCol)
-    val allIds = BatchStore.batchIds(fs, s"$path/cells")
-    val dataIds = BatchStore.dataIds(fs, s"$path/cells")
-    val baseId = if (retired.nonEmpty && dataIds.nonEmpty) dataIds.max else 0L
-    val stagingCells = BatchStore.stage(fs, s"$path/cells", "reindex") { st =>
-      assigned.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$st/batch=$baseId")
-      BatchStore.stageLedger(fs, s"$path/cells", st, allIds, baseId, vacuumLedger = false)
+                 iters: Int): Long =
+    BatchStore.maintain(IvfStore, spark, path, "reindex") { fs =>
+      // pending retirements: the refit reads LIVE rows only, and the
+      // reassigned corpus lands at the max data id so the preserved ledger
+      // (reindex never blanks it — that is full compaction's job) cannot
+      // kill the re-landed rows. With none pending this is the batch=0 base.
+      val Seq(live) = BatchStore.live(IvfStore, spark, path, Seq("cells")).flatten
+      val stored = live.select(col(VecId), col("v"))
+      val n = stored.count()
+      val cent = kmeansCentroids(stored, numCentroids, iters, VecId, "v")
+      val assigned = assignTo(prepped(stored, VecId, "v"), cent, VecId)
+      val stagingCells = restage(fs, path, "cells") { (st, baseId) =>
+        assigned.repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell").parquet(s"$st/batch=$baseId")
+      }
+      val stagingCent = BatchStore.stage(fs, s"$path/centroids", "reindex")(
+        cent.write.mode("overwrite").parquet(_))
+      // cells first, then the (broadcast-sized) centroids — both windows are
+      // covered by the read-side fallbacks
+      BatchStore.swap(fs, stagingCells, s"$path/cells")
+      BatchStore.swap(fs, stagingCent, s"$path/centroids")
+      n
     }
-    val stagingCent = BatchStore.stage(fs, s"$path/centroids", "reindex")(
-      cent.write.mode("overwrite").parquet(_))
-    // cells first, then the (broadcast-sized) centroids — both windows are
-    // covered by the read-side fallbacks
-    BatchStore.swap(fs, stagingCells, s"$path/cells")
-    BatchStore.swap(fs, stagingCent, s"$path/centroids")
-    n
+
+  /** Stage a reindex's replacement of a batch half: `write` lands
+    * the live rows at the base id — the max data id while retirements are
+    * pending (they stay in the ledger, which must not kill the re-landed
+    * rows), else 0 — and every published id stays a tombstone.
+    */
+  private def restage(fs: org.apache.hadoop.fs.FileSystem, path: String, half: String)
+                     (write: (String, Long) => Unit): org.apache.hadoop.fs.Path = {
+    val dir = s"$path/$half"
+    val allIds = BatchStore.batchIds(fs, dir)
+    val dataIds = BatchStore.dataIds(fs, dir)
+    val pending = BatchStore.dataIds(fs, s"$path/retired").nonEmpty
+    val baseId = if (pending && dataIds.nonEmpty) dataIds.max else 0L
+    BatchStore.stage(fs, dir, "reindex") { st =>
+      write(st, baseId)
+      BatchStore.stageLedger(fs, dir, st, allIds, baseId, vacuumLedger = false)
     }
   }
 
@@ -882,44 +822,32 @@ object Similarity {
     * compaction and [[reindexIvf]]. Returns the number of vectors
     * re-signed.
     */
-  def reindexLsh(spark: SparkSession, path: String, tables: Int, bits: Int,
-                 idCol: String = "vec_id"): Long = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "lsh-reindex") {
-      BatchStore.requireNoPendingBuild(fs, path)
-    BatchStore.recover(fs, s"$path/sigs")
-    BatchStore.recover(fs, s"$path/vectors")
-    BatchStore.recover(fs, s"$path/config")
-    val dim = spark.read.parquet(s"$path/config").head().getAs[Int]("dim")
-    // the stored payloads ARE the prepped (idCol, v, n) rows a fresh build
-    // would derive — re-sign them directly, no source-corpus re-read.
-    // Pending retirements: only LIVE payloads re-sign, and the new sigs
-    // land at the max data id (reindexIvf's note — the vectors half keeps
-    // its dead rows + the ledger, so probes keep filtering them until a
-    // full compaction applies-and-blanks).
-    val retired = BatchStore.readRetirements(spark, fs, path)
-    val c = aliveVectors(spark.read.parquet(s"$path/vectors"), retired, idCol)
-      .select(col(idCol), col("v"), col("n"))
-    val n = c.count()
-    val allIds = BatchStore.batchIds(fs, s"$path/sigs")
-    val dataIds = BatchStore.dataIds(fs, s"$path/sigs")
-    val baseId = if (retired.nonEmpty && dataIds.nonEmpty) dataIds.max else 0L
-    val stagingSigs = BatchStore.stage(fs, s"$path/sigs", "reindex") { st =>
-      lshSigs(c, lshPlanes(c, tables, bits, dim), idCol)
-        .sortWithinPartitions("t", "bucket")
-        .write.mode("overwrite").parquet(s"$st/batch=$baseId")
-      BatchStore.stageLedger(fs, s"$path/sigs", st, allIds, baseId, vacuumLedger = false)
+  def reindexLsh(spark: SparkSession, path: String, tables: Int, bits: Int): Long =
+    BatchStore.maintain(LshStore, spark, path, "reindex") { fs =>
+      val dim = spark.read.parquet(s"$path/config").head().getAs[Int]("dim")
+      // the stored payloads ARE the prepped (vec_id, v, n) rows a fresh build
+      // would derive — re-sign them directly, no source-corpus re-read.
+      // Pending retirements: only LIVE payloads re-sign, and the new sigs
+      // land at the max data id (reindexIvf's note — the vectors half keeps
+      // its dead rows + the ledger, so probes keep filtering them until a
+      // full compaction applies-and-blanks).
+      val Seq(live) = BatchStore.live(LshStore, spark, path, Seq("vectors")).flatten
+      val c = live.select(col(VecId), col("v"), col("n"))
+      val n = c.count()
+      val stagingSigs = restage(fs, path, "sigs") { (st, baseId) =>
+        lshSigs(c, lshPlanes(c, tables, bits, dim), VecId)
+          .sortWithinPartitions("t", "bucket")
+          .write.mode("overwrite").parquet(s"$st/batch=$baseId")
+      }
+      import spark.implicits._
+      val stagingCfg = BatchStore.stage(fs, s"$path/config", "reindex")(
+        Seq((tables, bits, dim)).toDF("tables", "bits", "dim")
+          .coalesce(1).write.mode("overwrite").parquet(_))
+      // sigs first, then the 1-row config that publishes the new geometry
+      BatchStore.swap(fs, stagingSigs, s"$path/sigs")
+      BatchStore.swap(fs, stagingCfg, s"$path/config")
+      n
     }
-    import spark.implicits._
-    val stagingCfg = BatchStore.stage(fs, s"$path/config", "reindex")(
-      Seq((tables, bits, dim)).toDF("tables", "bits", "dim")
-        .coalesce(1).write.mode("overwrite").parquet(_))
-    // sigs first, then the 1-row config that publishes the new geometry
-    BatchStore.swap(fs, stagingSigs, s"$path/sigs")
-    BatchStore.swap(fs, stagingCfg, s"$path/config")
-    n
-    }
-  }
 
   /** Maintenance half of the persisted IVF index: collapse the accumulated
     * `cells/batch=<id>` append directories into a single compacted
@@ -944,22 +872,12 @@ object Similarity {
     * Returns the number of data-bearing batch directories compacted
     * (0 = nothing to do).
     */
-  def compactIvfIndex(spark: SparkSession, path: String,
-                      idCol: String = "vec_id"): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "ivf-compact") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      // pending retirements apply physically here (and only here): dead
-      // rows drop, the merged base lands at the MAX data id so a crash
-      // mid-blank leaves the leftover retirement ids harmless, and the
-      // ledger blanks to tombstones — the compactMinhashStore contract
-      val retired = BatchStore.readRetirements(spark, fs, path)
-      val n = BatchStore.compact(spark, s"$path/cells", aliveVectors(_, retired, idCol),
-        retired.nonEmpty, layout = BatchStore.partitioned("cell"))
-      if (retired.nonEmpty) BatchStore.blankRetirements(fs, path)
-      n
-    }
-  }
+  def compactIvfIndex(spark: SparkSession, path: String): Int =
+    // pending retirements apply physically here (and only here): dead
+    // rows drop, the merged base lands at the MAX data id so a crash
+    // mid-blank leaves the leftover retirement ids harmless, and the
+    // ledger blanks to tombstones — the compactMinhashStore contract
+    BatchStore.compactStore(IvfStore, spark, path, minor = false)
 
   /** [[BatchStore.compactMinor]] for the IVF store's cells half: merge the
     * append debris only, never touching the `batch=0` base — per-cycle
@@ -968,16 +886,8 @@ object Similarity {
     * row-identical before and after (rows are only re-grouped), and the
     * append ledger's tombstones keep replays refused.
     */
-  def compactIvfIndexMinor(spark: SparkSession, path: String,
-                           idCol: String = "vec_id"): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "ivf-compact") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      val retired = BatchStore.readRetirements(spark, fs, path)
-      BatchStore.compactMinor(spark, s"$path/cells", aliveVectors(_, retired, idCol),
-        BatchStore.partitioned("cell"))
-    }
-  }
+  def compactIvfIndexMinor(spark: SparkSession, path: String): Int =
+    BatchStore.compactStore(IvfStore, spark, path, minor = true)
 
   /** Probe-many half of the persisted IVF index: NO Lloyd recompute and no
     * aggregation over the stored corpus — the index is scanned as-is and
@@ -990,26 +900,21 @@ object Similarity {
     * probing is O(queries x centroids + probed-cell volume).
     */
   def probeIvfIndex(queries: DataFrame, path: String, k: Int, nprobe: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                    vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
+    val idCol = VecId
     require(nprobe >= 1, "need nprobe >= 1")
+    // a crashed (re)build or MINOR compaction leaves a tree a read-only
+    // probe cannot heal — live refuses it loudly; pending retirements
+    // (delta-driven maintenance) filter logically here until the next
+    // full compaction applies them physically
+    val Seq(cells) = BatchStore.live(IvfStore, spark, path, Seq("cells")).flatten
     // read-only .prev fallbacks cover the windows between compactIvfIndex's
     // / reindexIvf's two renames (and a crash inside) without mutating
-    val fs = BatchStore.fs(spark, path)
-    // a crashed (re)build leaves a mixed-generation store that .prev
-    // fallbacks cannot read around — refuse loudly instead of serving it
-    BatchStore.requireNoPendingBuild(fs, path)
-    val cent = spark.read.parquet(BatchStore.active(fs, s"$path/centroids"))
-    val cellsDir = BatchStore.active(fs, s"$path/cells")
-    // a crashed MINOR compaction's mid-sequence tree is missing debris
-    // rows and a read-only probe cannot heal it — refuse loudly
-    BatchStore.requireNoMinorPending(fs, cellsDir)
+    val cent = spark.read.parquet(BatchStore.active(BatchStore.fs(spark, path), s"$path/centroids"))
     // the partition column comes back as the inferred directory type (int);
-    // restore the build's long so q112 hash-matches q107's cell column.
-    // Pending retirements (delta-driven maintenance) filter logically here
-    // until the next full compaction applies them physically.
-    val retired = BatchStore.readRetirements(spark, fs, path)
-    val idx = aliveVectors(spark.read.parquet(cellsDir), retired, idCol)
+    // restore the build's long so q112 hash-matches q107's cell column
+    val idx = cells
       .select(col(idCol), col("v"), col("n"), col("cell").cast("long").as("cell"))
     val q = prepped(queries, idCol, vecCol)
     val topCells = q.join(broadcast(cent))
@@ -1244,28 +1149,24 @@ object Similarity {
     * Probes read codes + codebooks only.
     */
   def buildPqIndex(vectors: DataFrame, m: Int, k: Int, iters: Int, path: String,
-                   dim: Int = 64, idCol: String = "vec_id",
-                   vecCol: String = "embedding"): Unit = {
+                   dim: Int = 64, vecCol: String = "embedding"): Unit = {
     val spark = vectors.sparkSession
     import spark.implicits._
-    val fs = BatchStore.fs(spark, path)
     // the store-wide lock serializes the long Lloyd fit against concurrent
     // appenders (an append encoded against the OLD codebooks landing after
     // the rebuild would silently mix codeword generations); the build
     // marker turns a crash mid-rebuild into a loud refusal downstream
-    graft.store.MaintenanceLock.withLock(fs, path, "pq-build") {
-      BatchStore.withBuildMarker(fs, path) {
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes"), true)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors"), true)
-        val cb = pqCodebooks(vectors, m, k, iters, dim, idCol, vecCol)
-        prepped(vectors, idCol, vecCol)
-          .write.mode("overwrite").parquet(s"$path/vectors/batch=0")
-        cb.coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-        Seq((m, k, dim)).toDF("m", "k", "dim")
-          .coalesce(1).write.mode("overwrite").parquet(s"$path/config")
-        pqEncode(vectors, cb, m, dim, idCol, vecCol)
-          .write.mode("overwrite").parquet(s"$path/codes/batch=0")
-      }
+    BatchStore.build(PqStore, spark, path) { fs =>
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/codes"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$path/vectors"), true)
+      val cb = pqCodebooks(vectors, m, k, iters, dim, VecId, vecCol)
+      prepped(vectors, VecId, vecCol)
+        .write.mode("overwrite").parquet(s"$path/vectors/batch=0")
+      cb.coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
+      Seq((m, k, dim)).toDF("m", "k", "dim")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/config")
+      pqEncode(vectors, cb, m, dim, VecId, vecCol)
+        .write.mode("overwrite").parquet(s"$path/codes/batch=0")
     }
   }
 
@@ -1276,87 +1177,50 @@ object Similarity {
     * leaves unreachable payload rows, not codes that can't rescore).
     */
   def pqAppendVectors(vectors: DataFrame, path: String, appendId: Long,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): Boolean = {
+                      vecCol: String = "embedding"): Boolean = {
     require(appendId >= 1, "appendId 0 is the initial build")
     val spark = vectors.sparkSession
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "pq-append") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      BatchStore.recover(fs, s"$path/codes")
-      BatchStore.recover(fs, s"$path/vectors")
-      BatchStore.recoverMinor(fs, s"$path/codes")
-      BatchStore.recoverMinor(fs, s"$path/vectors")
-      if (graft.store.Ledger.landed(fs, s"$path/codes", appendId)) false
-      else {
-        val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
-        val (m, dim) = (cfg.getAs[Int]("m"), cfg.getAs[Int]("dim"))
-        val cb = spark.read.parquet(BatchStore.active(fs, s"$path/codebooks"))
-        BatchStore.publish(fs, s"$path/vectors", appendId)(
-          prepped(vectors, idCol, vecCol).write.mode("overwrite").parquet(_))
-        BatchStore.publish(fs, s"$path/codes", appendId)(
-          pqEncode(vectors, cb, m, dim, idCol, vecCol).write.mode("overwrite").parquet(_))
-        true
-      }
+    BatchStore.land(PqStore, spark, path, appendId, "append") { fs =>
+      val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
+      val (m, dim) = (cfg.getAs[Int]("m"), cfg.getAs[Int]("dim"))
+      val cb = spark.read.parquet(BatchStore.active(fs, s"$path/codebooks"))
+      BatchStore.publish(fs, s"$path/vectors", appendId)(
+        prepped(vectors, VecId, vecCol).write.mode("overwrite").parquet(_))
+      BatchStore.publish(fs, s"$path/codes", appendId)(
+        pqEncode(vectors, cb, m, dim, VecId, vecCol).write.mode("overwrite").parquet(_))
     }
   }
 
   /** [[compactIvfIndex]] for the PQ store: collapse both halves' `batch=`
     * dirs (rows, probe results, and the append ledger preserved).
     */
-  def compactPqIndex(spark: SparkSession, path: String,
-                     idCol: String = "vec_id"): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "pq-compact") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      // retirements apply physically to BOTH halves (compactIvfIndex note)
-      val retired = BatchStore.readRetirements(spark, fs, path)
-      val alive: DataFrame => DataFrame = aliveVectors(_, retired, idCol)
-      val n = graft.core.Par.sumSections(
-        () => BatchStore.compact(spark, s"$path/codes", alive, retired.nonEmpty),
-        () => BatchStore.compact(spark, s"$path/vectors", alive, retired.nonEmpty))
-      if (retired.nonEmpty) BatchStore.blankRetirements(fs, path)
-      n
-    }
-  }
+  def compactPqIndex(spark: SparkSession, path: String): Int =
+    // retirements apply physically to BOTH halves (compactIvfIndex note)
+    BatchStore.compactStore(PqStore, spark, path, minor = false)
 
   /** [[compactIvfIndexMinor]] for the PQ store: debris-only merge of both
     * halves' appended batch dirs, `batch=0` bases untouched.
     */
-  def compactPqIndexMinor(spark: SparkSession, path: String,
-                          idCol: String = "vec_id"): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "pq-compact") {
-      BatchStore.requireNoPendingBuild(fs, path)
-      val retired = BatchStore.readRetirements(spark, fs, path)
-      val alive: DataFrame => DataFrame = aliveVectors(_, retired, idCol)
-      graft.core.Par.sumSections(
-        () => BatchStore.compactMinor(spark, s"$path/codes", alive),
-        () => BatchStore.compactMinor(spark, s"$path/vectors", alive))
-    }
-  }
+  def compactPqIndexMinor(spark: SparkSession, path: String): Int =
+    BatchStore.compactStore(PqStore, spark, path, minor = true)
 
   /** Probe-many half: ADC top-k from the STORED codes and codebooks — the
     * original vectors are never read; the only per-query work is the
     * m*k-row LUT. `.prev`-aware reads cover the compaction swap window.
     */
   def probePqIndex(queries: DataFrame, path: String, k: Int,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                   vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
+    // pending retirements filter the candidate codes logically until full
+    // compaction applies them (the vectors half is not read by ADC probes,
+    // so neither is it guarded)
+    val Seq(codes) = BatchStore.live(PqStore, spark, path, Seq("codes")).flatten
     val fs = BatchStore.fs(spark, path)
-    // refuse a crashed-build mixed-generation store (probeLshIndex's note)
-    BatchStore.requireNoPendingBuild(fs, path)
-    BatchStore.requireNoMinorPending(fs, BatchStore.active(fs, s"$path/codes"))
-    BatchStore.requireNoMinorPending(fs, BatchStore.active(fs, s"$path/vectors"))
     val cfg = spark.read.parquet(BatchStore.active(fs, s"$path/config")).head()
     val (m, dim) = (cfg.getAs[Int]("m"), cfg.getAs[Int]("dim"))
     val cb = spark.read.parquet(BatchStore.active(fs, s"$path/codebooks"))
-    // pending retirements filter the candidate codes logically until full
-    // compaction applies them (the vectors half is not read by ADC probes)
-    val retired = BatchStore.readRetirements(spark, fs, path)
-    val codes = aliveVectors(
-        spark.read.parquet(BatchStore.active(fs, s"$path/codes")), retired, idCol)
-      .select(col(idCol), col("s"), col("code"))
-    pqAdcTopK(codes, cb, queries, k, m, dim, idCol, vecCol)
+    pqAdcTopK(codes.select(col(VecId), col("s"), col("code")), cb, queries, k, m, dim,
+      VecId, vecCol)
   }
 
   /** IVF-PQ search — the composition large-scale ANN engines actually run:
@@ -1435,31 +1299,20 @@ object Similarity {
     * their stores without moving a single ranking).
     */
   def ivfPqProbeStores(queries: DataFrame, ivfPath: String, pqPath: String,
-                       k: Int, nprobe: Int, idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
+                       k: Int, nprobe: Int, vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
+    // refuse a crashed (re)build or minor compaction on EITHER side; pending
+    // retirements on either store filter its rows logically
+    val Seq(cells) = BatchStore.live(IvfStore, spark, ivfPath, Seq("cells")).flatten
+    val Seq(codes) = BatchStore.live(PqStore, spark, pqPath, Seq("codes")).flatten
     val fsI = BatchStore.fs(spark, ivfPath)
     val fsP = BatchStore.fs(spark, pqPath)
-    // refuse a crashed-build mixed-generation store on EITHER side, and a
-    // crashed minor compaction's debris-missing tree on any read half
-    BatchStore.requireNoPendingBuild(fsI, ivfPath)
-    BatchStore.requireNoPendingBuild(fsP, pqPath)
-    BatchStore.requireNoMinorPending(fsI, BatchStore.active(fsI, s"$ivfPath/cells"))
-    BatchStore.requireNoMinorPending(fsP, BatchStore.active(fsP, s"$pqPath/codes"))
     val cent = spark.read.parquet(BatchStore.active(fsI, s"$ivfPath/centroids"))
-    // pending retirements on either store filter its rows logically
-    val retI = BatchStore.readRetirements(spark, fsI, ivfPath)
-    val retP = BatchStore.readRetirements(spark, fsP, pqPath)
-    val assigned = aliveVectors(
-        spark.read.parquet(BatchStore.active(fsI, s"$ivfPath/cells")), retI, idCol)
-      .select(col(idCol), col("cell"))
     val cfg = spark.read.parquet(BatchStore.active(fsP, s"$pqPath/config")).head()
     val (m, dim) = (cfg.getAs[Int]("m"), cfg.getAs[Int]("dim"))
     val cb = spark.read.parquet(BatchStore.active(fsP, s"$pqPath/codebooks"))
-    val codes = aliveVectors(
-        spark.read.parquet(BatchStore.active(fsP, s"$pqPath/codes")), retP, idCol)
-      .select(col(idCol), col("s"), col("code"))
-    ivfPqSearchCore(cent, assigned, cb, codes, queries, k, nprobe, m, dim,
-      idCol, vecCol)
+    ivfPqSearchCore(cent, cells.select(col(VecId), col("cell")), cb,
+      codes.select(col(VecId), col("s"), col("code")), queries, k, nprobe, m, dim,
+      VecId, vecCol)
   }
 }

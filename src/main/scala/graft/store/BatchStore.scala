@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
   *  2. Commit-marker order: a batch that spans several halves lands its
   *     payload halves first and the ledger half LAST, so a crash in
   *     between leaves unledgered payloads that the replay overwrites —
-  *     never a ledger entry whose payload is missing (minhash sets, bands
-  *     then pairs; LSH/PQ vectors then sigs/codes; LM tri, bi, meta then
-  *     uni; decontam words then shingles).
+  *     never a ledger entry whose payload is missing. Each family's order
+  *     is its [[StoreFamily]] declaration's `halves`, and [[land]] checks
+  *     the last of them.
   *  3. `.prev` swap ([[replace]], [[swap]]): a whole-half replacement is
   *     staged complete under `.<name>-<tag>`, then `dir` moves to
   *     `dir.prev` and the staged tree lands at `dir`. Readers go around
@@ -53,7 +53,10 @@ import org.apache.spark.sql.functions._
   *     blanked ([[blankRetirements]]) is harmless.
   *
   * Maintainers hold the store's [[MaintenanceLock]] (single maintainer);
-  * readers take no lock.
+  * readers take no lock. A declared [[StoreFamily]] takes the lock, the
+  * build guard, the heals, the ledger check, the retirement read and the
+  * compaction fan-out only through the family operations at the end of
+  * this object.
   */
 object BatchStore {
 
@@ -419,4 +422,111 @@ object BatchStore {
         val nums = txt.trim.split(",").map(_.toLong)
         applyMinor(fs, dir, nums.head, nums.tail.toIndexedSeq)
     }
+
+  // ---- family operations -----------------------------------------------
+
+  /** A maintainer's entry into a [[StoreFamily]] store: hold its lock under
+    * `<family>-<op>`, refuse a torn build, heal every declared half's
+    * `.prev` swap (and a built family's minor journals), then run `body`.
+    */
+  def maintain[T](f: StoreFamily, spark: SparkSession, path: String, op: String)
+                 (body: FileSystem => T): T = {
+    val fs = this.fs(spark, path)
+    MaintenanceLock.withLock(fs, path, s"${f.name}-$op") {
+      if (f.built) requireNoPendingBuild(fs, path)
+      f.healed.foreach(h => recover(fs, s"$path/$h"))
+      if (f.built) f.halves.foreach(h => recoverMinor(fs, s"$path/${h.name}"))
+      body(fs)
+    }
+  }
+
+  /** Exactly-once landing of batch `id`: [[maintain]], then `body` runs
+    * only when `id` has not landed in `ledger` (the family's ledger half
+    * unless named; a retirement lands in `retired`). Returns whether it ran.
+    */
+  def land(f: StoreFamily, spark: SparkSession, path: String, id: Long, op: String,
+           ledger: String = "")(body: FileSystem => Unit): Boolean =
+    maintain(f, spark, path, op) { fs =>
+      if (Ledger.landed(fs, s"$path/${if (ledger.isEmpty) f.ledger else ledger}", id)) false
+      else { body(fs); true }
+    }
+
+  /** The tombstone retirement of a row family (MinHash, the ANN indexes):
+    * land the distinct keys of `rows` as `retired/batch=<id>`, which every
+    * [[live]] read and the next full [[compactStore]] apply (contract 5).
+    * `id` must exceed every data batch it retires from.
+    */
+  def retire(f: StoreFamily, spark: SparkSession, path: String, rows: DataFrame,
+             id: Long): Boolean = {
+    require(id >= 1, "retire id 0 would predate the initial batch")
+    land(f, spark, path, id, "retire", "retired") { fs =>
+      publish(fs, s"$path/retired", id)(
+        rows.select(col(f.halves.head.keys.head).as(f.retiredKey)).distinct()
+          .write.mode("overwrite").parquet(_))
+    }
+  }
+
+  /** Under the lock and the `_build-pending` marker, `body` (re)builds a
+    * built family's store ([[withBuildMarker]]).
+    */
+  def build(f: StoreFamily, spark: SparkSession, path: String)(body: FileSystem => Unit): Unit = {
+    val fs = this.fs(spark, path)
+    MaintenanceLock.withLock(fs, path, s"${f.name}-build") {
+      withBuildMarker(fs, path)(body(fs))
+    }
+  }
+
+  private def retirements(f: StoreFamily, spark: SparkSession, fs: FileSystem,
+                          path: String): Option[DataFrame] =
+    if (f.retiredKey.isEmpty) None else readRetirements(spark, fs, path)
+
+  private def liveRows(f: StoreFamily, h: StoreFamily.Half,
+                       retired: Option[DataFrame]): DataFrame => DataFrame =
+    df => h.keys.foldLeft(df)((d, k) => alive(d, retired, Seq(k -> f.retiredKey)))
+
+  /** Compact every batch half of a family side by side under
+    * `<family>-compact`: each half's rows pass its keys' liveness under
+    * the pending retirements and its sum-merge, through [[compact]] or,
+    * `minor`, [[compactMinor]]. A full compaction applies the retirements
+    * and then blanks them. Returns the data dirs merged over the halves,
+    * a sum-merge half counting one.
+    */
+  def compactStore(f: StoreFamily, spark: SparkSession, path: String, minor: Boolean): Int = {
+    val fs = this.fs(spark, path)
+    MaintenanceLock.withLock(fs, path, s"${f.name}-compact") {
+      if (f.built) requireNoPendingBuild(fs, path)
+      val retired = retirements(f, spark, fs, path)
+      val n = graft.core.Par.sumSections(f.halves.map { h => () =>
+        val dir = s"$path/${h.name}"
+        val alive = liveRows(f, h, retired)
+        val rows = h.merge.fold(alive)(alive.andThen)
+        val merged =
+          if (minor) compactMinor(spark, dir, rows, h.layout)
+          else compact(spark, dir, rows, retired.nonEmpty, f.vacuum, h.layout)
+        if (h.merge.isDefined) math.min(1, merged) else merged
+      }: _*)
+      if (!minor && retired.nonEmpty) blankRetirements(fs, path)
+      n
+    }
+  }
+
+  /** The live rows of each of `halves`, read from its active dir with its
+    * `batch` column: a built family refuses a torn build or a pending minor
+    * compaction and reads the half's root (its build always leaves a
+    * base); any other family reads its data-bearing batches (but
+    * `exclude`), None when there are none. Rows a pending retirement names
+    * are dropped. Takes no lock.
+    */
+  def live(f: StoreFamily, spark: SparkSession, path: String, halves: Seq[String],
+           exclude: Option[Long] = None): Seq[Option[DataFrame]] = {
+    val fs = this.fs(spark, path)
+    if (f.built) requireNoPendingBuild(fs, path)
+    val dirs = halves.map(h => active(fs, s"$path/$h"))
+    if (f.built) dirs.foreach(requireNoMinorPending(fs, _))
+    val retired = retirements(f, spark, fs, path)
+    halves.zip(dirs).map { case (h, dir) =>
+      (if (f.built) Some(spark.read.parquet(dir)) else readBatches(spark, fs, dir, exclude))
+        .map(liveRows(f, f.half(h), retired))
+    }
+  }
 }

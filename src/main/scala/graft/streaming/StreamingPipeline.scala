@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.store.BatchStore
+import graft.store.{BatchStore, StoreFamily}
+import graft.store.StoreFamily.Half
 import graft.operators.DailyKpi
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -794,16 +795,11 @@ object StreamingPipeline {
                         bands: Int = 4, threshold: Double = 0.8)
                        (batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val fs = BatchStore.fs(spark, storePath)
-    // heal a compactMinhashStore crash window BEFORE the ledger check: if a
-    // crash between the compaction's two renames left only `<half>.prev`,
-    // proceeding would see an empty store (stored() returns None), re-mine
-    // without history, and strand the compacted corpus in the .prev dirs —
-    // the same BatchStore.recover treatment the IVF/LSH appenders apply
-    graft.store.MaintenanceLock.withLock(fs, storePath, "minhash-append") {
-    Seq("sets", "bands", "pairs", "retired").foreach(h =>
-      BatchStore.recover(fs, s"$storePath/$h"))
-    if (graft.store.Ledger.landed(fs, s"$storePath/pairs", batchId)) return
+    // land heals a compactMinhashStore crash window BEFORE the ledger check:
+    // if a crash between the compaction's two renames left only
+    // `<half>.prev`, proceeding would see an empty store, re-mine without
+    // history, and strand the compacted corpus in the .prev dirs
+    BatchStore.land(MinhashStore, spark, storePath, batchId, "append") { fs =>
     // stored state = every published batch dir EXCEPT this id's partial
     // leftovers (a crashed attempt's sets/bands land before the pairs
     // ledger), MINUS rows logically dead under a retirement ledger entry
@@ -811,12 +807,8 @@ object StreamingPipeline {
     // and are skipped. A retired-then-re-sent doc (the changed-doc delta
     // cycle) passes the already-stored filter and re-enters with its new
     // text, because its old rows are dead in this view.
-    val retired = BatchStore.readRetirements(spark, fs, storePath)
-    def stored(half: String): Option[DataFrame] =
-      BatchStore.readBatches(spark, fs, s"$storePath/$half", exclude = Some(batchId))
-        .map(df => aliveDocs(df, retired, "doc_id").drop("batch"))
-    val storedSets = stored("sets")
-    val storedBands = stored("bands")
+    val Seq(storedSets, storedBands) = BatchStore.live(MinhashStore, spark, storePath,
+      Seq("sets", "bands"), exclude = Some(batchId)).map(_.map(_.drop("batch")))
     val (batchSets, batchBands) = graft.dedup.Dedup.minhashState(batch, n, numPerms, bands)
     val newSets = storedSets match {
       case Some(ps) => batchSets.join(ps.select(col("doc_id")), Seq("doc_id"), "left_anti")
@@ -846,20 +838,21 @@ object StreamingPipeline {
     }
   }
 
-  /** The minhash liveness rule: [[BatchStore.alive]] with one doc-id column
-    * (for pairs, applied to EITHER endpoint in turn) matched against the
-    * retirement ledger's `doc_id`.
+  /** The MinHash dedup store: per-doc sets and bands, then the pairs half
+    * whose `batch=<id>` is the ledger. A retirement names `doc_id`s, and a
+    * pair dies with EITHER endpoint.
     */
-  private def aliveDocs(df: DataFrame, retired: Option[DataFrame],
-                        idCol: String): DataFrame =
-    BatchStore.alive(df, retired, Seq(idCol -> "doc_id"))
+  private[graft] val MinhashStore = StoreFamily("minhash",
+    Seq(Half("sets", Seq("doc_id")), Half("bands", Seq("doc_id")),
+      Half("pairs", Seq("doc_a", "doc_b"))),
+    retiredKey = "doc_id")
 
   /** Retirement half of the MinHash dedup store — [[graft.text.TextOps
     * .retireLm]]'s treatment for a ROW store (signatures are per-doc rows,
     * not additive counts, so retirement is a ledgered tombstone batch
     * rather than a negated delta): land the departing doc ids under
     * `retired/batch=<retireId>`; every reader and the appender's
-    * already-stored filter apply [[aliveDocs]]' ordering rule, and
+    * already-stored filter apply [[BatchStore.alive]]'s ordering rule, and
     * [[compactMinhashStore]] applies retirements physically. `retireId`
     * must exceed every published batch id, and re-appends of a changed doc
     * must use a later id still — the natural monotone batch numbering of
@@ -868,18 +861,8 @@ object StreamingPipeline {
     * is never touched).
     */
   def retireMinhashStore(spark: SparkSession, storePath: String,
-                         retiredIds: DataFrame, retireId: Long): Boolean = {
-    val fs = BatchStore.fs(spark, storePath)
-    graft.store.MaintenanceLock.withLock(fs, storePath, "minhash-retire") {
-      BatchStore.recover(fs, s"$storePath/retired")
-      if (graft.store.Ledger.landed(fs, s"$storePath/retired", retireId)) false
-      else {
-        BatchStore.publish(fs, s"$storePath/retired", retireId)(
-          retiredIds.select(col("doc_id")).distinct().write.mode("overwrite").parquet(_))
-        true
-      }
-    }
-  }
+                         retiredIds: DataFrame, retireId: Long): Boolean =
+    BatchStore.retire(MinhashStore, spark, storePath, retiredIds, retireId)
 
   /** The read surface for the store's verified pairs: applies the
     * retirement liveness rule to BOTH endpoints, so between a retirement
@@ -888,15 +871,11 @@ object StreamingPipeline {
     * retirements this is exactly the raw `pairs/` read every earlier
     * caller did.
     */
-  def readDedupPairs(spark: SparkSession, storePath: String): DataFrame = {
-    val fs = BatchStore.fs(spark, storePath)
-    val retired = BatchStore.readRetirements(spark, fs, storePath)
-    val pairs = BatchStore.readBatches(spark, fs, s"$storePath/pairs")
-      .getOrElse(return spark.emptyDataFrame
+  def readDedupPairs(spark: SparkSession, storePath: String): DataFrame =
+    BatchStore.live(MinhashStore, spark, storePath, Seq("pairs")).head.fold(
+      spark.emptyDataFrame
         .select(lit(0L).as("doc_a"), lit(0L).as("doc_b"), lit(0.0).as("jaccard"))
-        .limit(0))
-    aliveDocs(aliveDocs(pairs, retired, "doc_a"), retired, "doc_b").drop("batch")
-  }
+        .limit(0))(_.drop("batch"))
 
   /** [[graft.similarity.Similarity.compactIvfIndex]] for the MinHash dedup
     * store: collapse each half's accumulated `batch=` directories into one
@@ -905,33 +884,14 @@ object StreamingPipeline {
     * retirements physically on the way through. The merged base lands at
     * the MAX data id (not 0) so that if blanking the applied retirement
     * rows crashes midway, the leftover retirement ids (all <= maxId) can
-    * never re-kill the compacted rows — the [[aliveDocs]] strictly-greater
+    * never re-kill the compacted rows — the [[BatchStore.alive]] strictly-greater
     * rule makes the replay idempotent. Retirement ledger dirs survive as
     * empty tombstones, so retire replays stay refused. Run it between
     * triggers; the probe/append path needs no coordination beyond the
     * single-maintainer assumption all the stores share.
     */
-  def compactMinhashStore(spark: SparkSession, storePath: String): Int = {
-    val fs = BatchStore.fs(spark, storePath)
-    graft.store.MaintenanceLock.withLock(fs, storePath, "minhash-compact") {
-      val retired = BatchStore.readRetirements(spark, fs, storePath)
-      def alive(idCols: Seq[String]): DataFrame => DataFrame =
-        df => idCols.foldLeft(df)((d, c) => aliveDocs(d, retired, c))
-      // three disjoint halves rebuilding independently under the one store
-      // lock this thread already holds — overlap them (guide §2.6)
-      val n = graft.core.Par.sumSections(
-        Seq("sets" -> Seq("doc_id"), "bands" -> Seq("doc_id"),
-          "pairs" -> Seq("doc_a", "doc_b")).map { case (h, idCols) => () =>
-          BatchStore.compact(spark, s"$storePath/$h", alive(idCols),
-            retired.nonEmpty, vacuumLedger = true)
-        }: _*)
-      // retirements are now applied (or there were none): blank the ledger.
-      // A crash mid-blank leaves rows that the max-id base makes harmless;
-      // the next compaction finishes the job.
-      if (retired.nonEmpty) BatchStore.blankRetirements(fs, storePath)
-      n
-    }
-  }
+  def compactMinhashStore(spark: SparkSession, storePath: String): Int =
+    BatchStore.compactStore(MinhashStore, spark, storePath, minor = false)
 
   /** Incremental IVF index maintenance — the `foreachBatch` body for a
     * growing embedding corpus: each micro-batch assigns its vectors to the

@@ -1,6 +1,7 @@
 package graft.text
 
-import graft.store.BatchStore
+import graft.store.{BatchStore, StoreFamily}
+import graft.store.StoreFamily.Half
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -597,47 +598,40 @@ object TextOps {
   private def landLmDelta(docs: DataFrame, path: String, appendId: Long,
                           negate: Boolean, textCol: String, idCol: String): Boolean = {
     require(appendId != 0L, "appendId 0 is reserved for the initial build")
-    val spark = docs.sparkSession
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path,
-      if (negate) "lm-retire" else "lm-append") {
-      Seq("uni", "bi", "tri", "meta").foreach(h => BatchStore.recover(fs, s"$path/$h"))
-      if (graft.store.Ledger.landed(fs, s"$path/uni", appendId)) false
-      else {
-        writeLmTables(docs, path, appendId, negate, textCol, idCol)
-        true
-      }
-    }
+    BatchStore.land(LmStore, docs.sparkSession, path, appendId,
+      if (negate) "retire" else "append")(_ =>
+      writeLmTables(docs, path, appendId, negate, textCol, idCol))
   }
 
-  /** Maintenance half: MERGE the accumulated per-batch count deltas into
-    * one `batch=0` per table — unlike the index stores' row-preserving
-    * merge, [[BatchStore.compact]] here sums
-    * counts per gram (exact long adds), so the store shrinks back to one
-    * row per distinct n-gram no matter how many appends landed. Every
-    * previously-published id stays behind as an empty tombstone dir so the
-    * append ledger survives; each table lands via the two-rename `.prev`
-    * swap ([[scoreWithLm]] reads around the window, [[appendLm]] heals it).
-    * Returns the number of tables that had anything to merge.
+  /** One sum-merged count table: exact long adds per gram; c > 0 drops
+    * grams fully retired by [[retireLm]] deltas, so a compacted
+    * retire+append store is row-identical to a fresh build over the
+    * surviving corpus.
     */
-  def compactLm(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "lm-compact") {
-    // the four tables are disjoint dirs merging independently — overlap
-    // them (guide §2.6). Self-running vacuum: one watermark marker instead
-    // of a tombstone dir per merged id (carries any prior watermark)
-    graft.core.Par.sumSections(Seq("uni", "bi", "tri", "meta").map { h => () =>
-      val merge: DataFrame => DataFrame =
-        if (h == "meta") _.agg(sum(col("n_train")).as("n_train")).coalesce(1)
-        // c > 0 drops grams fully retired by [[retireLm]] deltas, so a
-        // compacted retire+append store is row-identical to a fresh build
-        // over the surviving corpus
-        else _.groupBy(col("g")).agg(sum(col("c")).as("c")).filter(col("c") > 0L)
-      math.min(1, BatchStore.compact(spark, s"$path/$h", merge,
-        vacuumLedger = true, layout = BatchStore.asMerged))
-    }: _*)
-    }
-  }
+  private def gramCounts(h: String): Half = Half(h, layout = BatchStore.asMerged,
+    merge = Some(_.groupBy(col("g")).agg(sum(col("c")).as("c")).filter(col("c") > 0L)))
+
+  /** The LM count store: `tri`, `bi` and `meta` land before `uni`, whose
+    * `batch=<id>` is the ledger ([[writeLmTables]]).
+    */
+  private[graft] val LmStore = StoreFamily("lm",
+    Seq(gramCounts("tri"), gramCounts("bi"),
+      Half("meta", layout = BatchStore.asMerged,
+        merge = Some(_.agg(sum(col("n_train")).as("n_train")).coalesce(1))),
+      gramCounts("uni")))
+
+  /** Maintenance half: MERGE the accumulated per-batch count deltas into
+    * one batch per table — unlike the index stores' row-preserving merge,
+    * each table here sums counts per gram (exact long adds), so the store
+    * shrinks back to one row per distinct n-gram no matter how many
+    * appends landed. The four tables merge side by side; the ledger lands
+    * as one watermark marker (the self-running vacuum), and each table
+    * lands via the two-rename `.prev` swap ([[scoreWithLm]] reads around
+    * the window, [[appendLm]] heals it). Returns the number of tables that
+    * had anything to merge.
+    */
+  def compactLm(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    BatchStore.compactStore(LmStore, spark, path, minor = false)
 
   /** Score-many half: [[trigramBackoffNll]]'s exact scoring against the
     * STORED count tables — no training pass; the only corpus-sized work is
@@ -1332,46 +1326,37 @@ object TextOps {
                             textCol: String, idCol: String): Boolean = {
     require(appendId != 0L, "appendId 0 is reserved for the initial build")
     val spark = docs.sparkSession
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path,
-      if (negate) "dsir-retire" else "dsir-append") {
-      BatchStore.recover(fs, s"$path/buckets")
-      if (graft.store.Ledger.landed(fs, s"$path/buckets", appendId)) false
-      else {
-        val m = readDsirM(spark, path)
-        val d0 = dsirPairCountsFlagged(docs, isTarget, m, textCol, idCol)
-        val d = if (negate)
-          d0.select(col("bucket"), (-col("ct")).as("ct"), (-col("cr")).as("cr"))
-        else d0
-        BatchStore.publish(fs, s"$path/buckets", appendId)(
-          d.write.mode("overwrite").parquet(_))
-        true
-      }
+    BatchStore.land(DsirStore, spark, path, appendId, if (negate) "retire" else "append") { fs =>
+      val m = readDsirM(spark, path)
+      val d0 = dsirPairCountsFlagged(docs, isTarget, m, textCol, idCol)
+      val d = if (negate)
+        d0.select(col("bucket"), (-col("ct")).as("ct"), (-col("cr")).as("cr"))
+      else d0
+      BatchStore.publish(fs, s"$path/buckets", appendId)(
+        d.write.mode("overwrite").parquet(_))
     }
   }
+
+  /** The DSIR count store: one `buckets` half, the ledger, sum-merged per
+    * bucket; zero-zero buckets drop, so a compacted retire+append store is
+    * row-identical to a fresh build over the surviving corpus.
+    */
+  private[graft] val DsirStore = StoreFamily("dsir",
+    Seq(Half("buckets", layout = BatchStore.asMerged,
+      merge = Some(_.groupBy(col("bucket")).agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
+        .filter(col("ct") > 0L || col("cr") > 0L)))))
 
   private def readDsirM(spark: org.apache.spark.sql.SparkSession,
                         path: String): Int =
     spark.read.parquet(s"$path/config").head().getAs[Int]("m")
 
   /** Maintenance half ([[compactLm]]'s shape): sum-merge the per-batch
-    * count deltas into one `batch=0`, dropping zero-zero buckets (so a
-    * compacted retire+append store is row-identical to a fresh build over
-    * the surviving corpus); previously-published ids stay behind as empty
-    * tombstone dirs so the append ledger survives, and the table lands via
-    * the two-rename `.prev` swap [[scoreWithDsir]] reads around.
+    * count deltas of [[DsirStore]] into one batch; the ledger lands as one
+    * watermark marker, and the table lands via the two-rename `.prev` swap
+    * [[scoreWithDsir]] reads around. Returns 1 when anything merged.
     */
-  def compactDsir(spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val fs = BatchStore.fs(spark, path)
-    graft.store.MaintenanceLock.withLock(fs, path, "dsir-compact") {
-      // self-running vacuum: one watermark marker instead of a tombstone
-      // dir per merged id (carries any prior watermark)
-      math.min(1, BatchStore.compact(spark, s"$path/buckets",
-        _.groupBy(col("bucket")).agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-          .filter(col("ct") > 0L || col("cr") > 0L),
-        vacuumLedger = true, layout = BatchStore.asMerged))
-    }
-  }
+  def compactDsir(spark: org.apache.spark.sql.SparkSession, path: String): Int =
+    BatchStore.compactStore(DsirStore, spark, path, minor = false)
 
   /** Score-many half: [[dsirScore]] + [[dsirSample]] against the STORED
     * count tables — no fitting pass; the only corpus-sized work is the

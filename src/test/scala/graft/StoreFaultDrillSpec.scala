@@ -32,7 +32,9 @@ import org.apache.spark.sql.functions._
   *     the W3 cases).
   *
   * Families: IVF cells, LSH sigs+vectors, PQ codes+vectors, LM count
-  * tables, decontamination shingles+words, drift bucket counts. (The
+  * tables, drift bucket counts, DSIR bucket counts, MinHash
+  * sets+bands+pairs (W1 and W2 only: it has no build apart from its first
+  * batch), decontamination shingles+words. (The
   * sketch stores' equivalent windows are exercised by the streaming
   * specs' replay cases; SCD2 has its own heal test in ScdProfileSpec.)
   */
@@ -77,6 +79,24 @@ class StoreFaultDrillSpec extends SparkSpec {
   }
   private lazy val docsA = docsAll.filter(col("doc_id") < 40)
   private lazy val docsB = docsAll.filter(col("doc_id") >= 40)
+  // the MinHash drill's second batch also re-sends five stored texts under
+  // new ids, so the append lands pairs against the stored batch
+  private lazy val mhDocsB =
+    docsB.unionByName(docsA.filter(col("doc_id") < 5).withColumn("doc_id", col("doc_id") + 100))
+
+  /** The MinHash stream body returns nothing; it landed iff a half's
+    * `batch=<id>` dir holds other files afterwards (every publish writes
+    * fresh part names).
+    */
+  private def minhashAppend(df: DataFrame, p: String, id: Long): Boolean = {
+    def parts = Seq("sets", "bands", "pairs").map { h =>
+      val d = hpath(s"${graft.store.BatchStore.active(fs, s"$p/$h")}/batch=$id")
+      if (fs.exists(d)) fs.listStatus(d).map(_.getPath.getName).sorted.toSeq else Seq.empty
+    }
+    val before = parts
+    graft.streaming.StreamingPipeline.minhashDedupBatch(p)(df, id)
+    parts != before
+  }
 
   // drift-store drill features: text-derived only (docsAll carries no
   // metadata columns)
@@ -131,6 +151,20 @@ class StoreFaultDrillSpec extends SparkSpec {
         Seq("cur"),
         p => graft.operators.Drift.psiFromStore(spark, p),
         w1ServesBase = true),
+      Family("dsir",
+        (df, p) => TextOps.saveDsir(df, col("doc_id") % 3 === 0, 64, p),
+        (df, p, id) => TextOps.appendDsir(df, col("doc_id") % 3 === 0, p, id),
+        p => rm(s"$p/buckets/batch=1"), // the single count table IS the marker
+        Seq("buckets"),
+        p => TextOps.scoreWithDsir(docsAll, p),
+        w1ServesBase = true),
+      Family("minhash",
+        (df, p) => graft.streaming.StreamingPipeline.minhashDedupBatch(p)(df, 0L),
+        minhashAppend,
+        p => rm(s"$p/pairs/batch=1"), // sets/bands of the append stay
+        Seq("sets", "bands", "pairs"),
+        p => graft.streaming.StreamingPipeline.readDedupPairs(spark, p),
+        w1ServesBase = true),
       Family("decontam",
         (df, p) => Dedup.buildDecontamStore(df, p, n = 3, k = 4, m = 1 << 16),
         (df, p, id) => Dedup.appendDecontamBench(df, p, id),
@@ -145,7 +179,8 @@ class StoreFaultDrillSpec extends SparkSpec {
   }
 
   private def data(f: Family): (DataFrame, DataFrame) =
-    if (Set("lm", "decontam", "drift")(f.name)) (docsA, docsB)
+    if (f.name == "minhash") (docsA, mhDocsB)
+    else if (Set("lm", "decontam", "drift", "dsir")(f.name)) (docsA, docsB)
     else (sliceA, sliceB)
 
   private def root(f: Family, tag: String): String =
@@ -209,7 +244,7 @@ class StoreFaultDrillSpec extends SparkSpec {
   private def deepMsgs(t: Throwable): Seq[String] =
     if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ deepMsgs(t.getCause)
 
-  for (f <- families)
+  for (f <- families if f.name != "minhash")
     test(s"${f.name}: W3 mid-initial-build crash — loud refusal, rebuild heals") {
       val (a, b) = data(f)
       val twin = root(f, "w3twin"); val drill = root(f, "w3drill")
@@ -228,6 +263,7 @@ class StoreFaultDrillSpec extends SparkSpec {
         rm(s"$drill/${f.halves.head}")
       } else if (f.name == "lm") rm(s"$drill/uni")
       else if (f.name == "drift") rm(s"$drill/base") // base is written last
+      else if (f.name == "dsir") rm(s"$drill/config") // config is written last
       else rm(s"$drill/words")
       val ex = intercept[Exception] { rows(f.probe(drill)) }
       if (markered) {

@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * spell a `.staging-` dir or build a local file system in code (comments
   * excluded) — a store family publishes and swaps through
   * [[graft.store.BatchStore]], and every session's `file:` scheme is
-  * [[graft.store.LocalFs]]. Every store maintainer streams through the one
-  * driver, [[graft.streaming.StreamingPipeline.maintain]].
+  * [[graft.store.LocalFs]]. A declared store family's lock, build guard,
+  * heals and compactions run through [[graft.store.BatchStore]]'s family
+  * operations. Every store maintainer streams through the one driver,
+  * [[graft.streaming.StreamingPipeline.maintain]].
   */
 class StoreLayoutGuardSpec extends AnyFunSuite {
 
@@ -53,6 +55,14 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
       "FileSystem.getLocal(").exists(l.contains))
     assert(hits.isEmpty, hits.mkString(
       "local file system chosen outside graft/store (sessions use graft.store.LocalFs):\n", "\n", ""))
+  }
+
+  test("store transactions run through the family operations: no build guard, minor heal or minor compaction outside graft/store") {
+    val hits = hitsOutsideStore(l =>
+      Seq("requireNoPendingBuild(", "recoverMinor(", "compactMinor(").exists(l.contains))
+    assert(hits.isEmpty, hits.mkString(
+      "store transaction steps outside graft/store (declare a StoreFamily and use " +
+        "BatchStore.maintain/land/retire/compactStore/live):\n", "\n", ""))
   }
 
   test("one stream chain: exactly one .writeStream in the code of src/main") {
