@@ -8,10 +8,12 @@ import org.apache.spark.sql.DataFrame
   * and meta carries (source_name, metric, params, generated_at, version).
   *
   * This is pure presentation: `data` is the JSON row array of a result
-  * DataFrame from [[GraftApi]]. The collect is bounded by `limit`,
-  * mirroring the reference's 10k-row API read cap
-  * (`routers/anomaly_iforest.py:60`); the engine-side query underneath
-  * stays fully distributed.
+  * DataFrame. The collect is bounded by `limit`, mirroring the reference's
+  * 10k-row API read cap (`routers/anomaly_iforest.py:60`). A [[GraftApi]]
+  * result is a local DataFrame, already computed and ordered from the
+  * source's cached slice, so the limit and the JSON projection fold into it
+  * on the driver and serializing starts no Spark job; any other DataFrame
+  * runs its plan as usual.
   */
 object Envelope {
 

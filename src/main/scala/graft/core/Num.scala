@@ -11,4 +11,10 @@ object Num {
     */
   def round6(x: Double): Double =
     BigDecimal.decimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** Spark's `least` / `greatest` over two non-null doubles: NaN orders
+    * above every number, so `least` drops it and `greatest` keeps it.
+    */
+  def sqlLeast(a: Double, b: Double): Double = if (a.isNaN) b else if (b.isNaN) a else math.min(a, b)
+  def sqlGreatest(a: Double, b: Double): Double = if (a.isNaN || b.isNaN) Double.NaN else math.max(a, b)
 }

@@ -1,5 +1,6 @@
 package graft.forecast
 
+import graft.core.Num.{sqlGreatest, sqlLeast}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -188,15 +189,28 @@ object Forecast {
     }
   }
 
+  /** W5 persistence MAPE (`forecast.py:258-270`, GET /api/forecast/health)
+    * over day-sorted metric_daily series: each [[dailyValues]] series
+    * predicts every value with the one before it, and the terms of all
+    * series pool into one [[stableAvg]] mean x 100 — the rule of
+    * `mape(value, lag(value))` over [[fetchSeries]]. None without a single
+    * (actual, prior) pair.
+    */
+  def persistenceMape(series: Seq[Seq[MdDay]]): Option[Double] = {
+    val terms = series.flatMap { md =>
+      val v = dailyValues(md).map(_._2)
+      v.zip(v.drop(1)).map { case (p, a) => math.abs(a - p) / sqlGreatest(math.abs(a), 1e-6) }
+    }
+    if (terms.isEmpty) None else Some(stableMean(terms, 1e8) * 100.0)
+  }
+
   // Spark's double semantics: avg/sum over non-null values (null when there
-  // are none), least/greatest ordering NaN above every number
+  // are none); least/greatest are graft.core.Num's
   private def mean(xs: Seq[Double]): Double = xs.sum / xs.length
   private def sumOpt(xs: Seq[Option[Double]]): Option[Double] =
     if (xs.exists(_.isDefined)) Some(xs.flatten.sum) else None
   private def meanOpt(xs: Seq[Option[Double]]): Option[Double] =
     Some(xs.flatten).filter(_.nonEmpty).map(mean)
-  private def sqlLeast(a: Double, b: Double): Double = if (a.isNaN) b else if (b.isNaN) a else math.min(a, b)
-  private def sqlGreatest(a: Double, b: Double): Double = if (a.isNaN || b.isNaN) Double.NaN else math.max(a, b)
 
   /** Row-level twin of [[stableAvg]]: each term floored at `scale` into an
     * exact integer sum, so the mean does not depend on summation order.
@@ -406,11 +420,15 @@ object Forecast {
     */
   def backtest(metricDaily: DataFrame, folds: Int = 5, horizon: Int = 7, windowN: Int = 90,
                keys: Seq[String] = Seq("source_id", "metric")): DataFrame =
-    perMdSeries(metricDaily, keys, StructField("folds", LongType, nullable = false) +:
-        Seq("avg_mae", "avg_rmse", "avg_mape", "avg_smape", "score").map(dbl)) { md =>
-      backtestSeries(md, folds, horizon, windowN).toSeq.map(b =>
-        Seq[Any](b.folds, b.avgMae, b.avgRmse, b.avgMape, b.avgSmape, b.score))
+    perMdSeries(metricDaily, keys, backtestFields) { md =>
+      backtestSeries(md, folds, horizon, windowN).toSeq.map(backtestRow)
     }
+
+  /** [[backtest]]'s output columns after the series key, and one row of them. */
+  private[graft] val backtestFields: Seq[StructField] = StructField("folds", LongType, nullable = false) +:
+    Seq("avg_mae", "avg_rmse", "avg_mape", "avg_smape", "score").map(dbl)
+  private[graft] def backtestRow(b: BacktestScore): Seq[Any] =
+    Seq[Any](b.folds, b.avgMae, b.avgRmse, b.avgMape, b.avgSmape, b.score)
 
   /** M7 — persisted reliability scorer
     * (`backend/app/services/forecast_reliability.py:57-158`): last `days`
@@ -422,19 +440,25 @@ object Forecast {
     */
   def reliability(metricDaily: DataFrame, days: Int = 90, folds: Int = 5, horizon: Int = 7,
                   keys: Seq[String] = Seq("source_id", "metric")): DataFrame =
-    perMdSeries(metricDaily, keys, StructField("folds", LongType, nullable = false) +:
-        Seq("mape_agg", "rmse_agg", "smape_agg", "instability").map(dbl) :+
-        StructField("score", IntegerType), valueCols = Seq("value_sum")) { md =>
-      reliabilitySeries(md, days, folds, horizon).toSeq.map(r =>
-        Seq[Any](r.folds, nullable(r.mapeAgg), nullable(r.rmseAgg), nullable(r.smapeAgg),
-          nullable(r.instability), r.score))
+    perMdSeries(metricDaily, keys, reliabilityFields, valueCols = Seq("value_sum")) { md =>
+      reliabilitySeries(md, days, folds, horizon).toSeq.map(reliabilityRow)
     }
 
-  private val contractFields = Seq(StructField("target_date", IntegerType),
+  /** [[reliability]]'s output columns after the series key, and one row of them. */
+  private[graft] val reliabilityFields: Seq[StructField] = StructField("folds", LongType, nullable = false) +:
+    Seq("mape_agg", "rmse_agg", "smape_agg", "instability").map(dbl) :+ StructField("score", IntegerType)
+  private[graft] def reliabilityRow(r: ReliabilityScore): Seq[Any] =
+    Seq[Any](r.folds, nullable(r.mapeAgg), nullable(r.rmseAgg), nullable(r.smapeAgg),
+      nullable(r.instability), r.score)
+
+  /** The contract's output columns after the series key (`target_date` as
+    * epoch days, leaving as DateType), and one row of them.
+    */
+  private[graft] val contractFields = Seq(StructField("target_date", IntegerType),
     dbl("yhat"), dbl("yhat_lower"), dbl("yhat_upper"),
     StructField("date", StringType), StructField("metric_date", StringType))
 
-  private def contractRow(c: ContractRow): Seq[Any] =
+  private[graft] def contractRow(c: ContractRow): Seq[Any] =
     Seq[Any](c.day, c.yhat, c.lower, c.upper, c.date.orNull, c.metricDate)
 
   /** M8+M9 — forecast contract normalizer

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Num.{sqlGreatest, sqlLeast}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,6 +57,44 @@ object Windows {
       .withColumn("is_outlier", when(cnt >= 2 && v.isNotNull, outlier).otherwise(lit(false)))
       .drop("__mu", "__sd", "__cnt")
   }
+
+  /** [[zScorePartial]] for one series on the driver: `values` in frame
+    * order (the series sorted by `orderCol`), one (z, is_outlier) per row.
+    * Each frame holds the `window` rows before the row and is folded the way
+    * Spark folds a sliding frame, from scratch per row: `avg` sums from 0.0
+    * and divides by the non-null count; `stddev_samp` runs
+    * `CentralMomentAgg`'s update (n, mean, m2) over the non-null values, in
+    * order. So z equals the window plan's to the bit, sentinel and clamp
+    * included.
+    */
+  def zScoreSeries(values: IndexedSeq[Option[Double]], window: Int,
+                   zThresh: Double): IndexedSeq[(Option[Double], Boolean)] =
+    values.indices.map { i =>
+      val frame = values.slice(math.max(0, i - window), i).flatten
+      values(i) match {
+        case Some(v) if frame.length >= 2 =>
+          val mu = frame.foldLeft(0.0)(_ + _) / frame.length
+          var n = 0.0; var mean = 0.0; var m2 = 0.0
+          frame.foreach { x =>
+            val n1 = n + 1.0
+            val delta = x - mean
+            val deltaN = delta / n1
+            mean += deltaN
+            m2 += delta * (delta - deltaN)
+            n = n1
+          }
+          val sd = math.sqrt(m2 / (n - 1.0))
+          // SQL equality: NaN equals NaN
+          val differs = !(v == mu || (v.isNaN && mu.isNaN))
+          if (sd == 0.0) (Some(if (differs) 1e9 else 0.0), differs)
+          else {
+            val q = (v - mu) / sd
+            // SQL ordering: NaN is above every number
+            (Some(sqlLeast(sqlGreatest(q, -1e9), 1e9)), q.isNaN || math.abs(q) >= zThresh)
+          }
+        case _ => (None, false)
+      }
+    }
 
   /** W3 — IsolationForest feature builder
     * (`backend/app/services/anomaly_iforest.py:13-23`): over the date-sorted

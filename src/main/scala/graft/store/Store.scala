@@ -24,16 +24,8 @@ object Store {
     spark.read.parquet(path)
 
   /** Overwrite only the partitions present in `metricDaily` (dynamic mode). */
-  def overwriteMetricDaily(metricDaily: DataFrame, path: String): Unit = {
-    val spark = metricDaily.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try metricDaily.write.mode("overwrite").partitionBy("metric_date").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  def overwriteMetricDaily(metricDaily: DataFrame, path: String): Unit =
+    overwritePartitions(metricDaily, path, "metric_date")
 
   /** True when a date-filtered scan of `df` prunes partitions (plan audit). */
   def prunesPartitions(df: DataFrame): Boolean =
@@ -80,7 +72,7 @@ object Store {
         .filter(col("event_date").cast("string").isin(todo: _*))
         .repartition(todo.length, col("event_date"))
         .localCheckpoint(true)
-      overwriteByDate(compacted, path, "event_date")
+      overwritePartitions(compacted, path, "event_date")
     }
     todo
   }
@@ -198,14 +190,12 @@ object Store {
     }.sum
   }
 
-  private def overwriteByDate(df: DataFrame, path: String, dateCol: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy(dateCol).parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  /** Overwrite only the `partCol` partitions present in `df`: dynamic
+    * partition overwrite as a per-write option, so the shared session conf
+    * stays untouched and a concurrent writer in the same session never sees
+    * (or loses) this write's mode.
+    */
+  private[graft] def overwritePartitions(df: DataFrame, path: String, partCol: String): Unit =
+    df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(path)
 }

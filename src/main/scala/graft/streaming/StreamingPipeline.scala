@@ -1472,7 +1472,7 @@ object StreamingPipeline {
         val all = stored.map(_.unionByName(freshAlive)).getOrElse(freshAlive)
           .withColumn("bucket", bucketExpr)
           .filter(col("bucket").isin(touched.map(Integer.valueOf): _*))
-        rewriteScdBuckets(spark, all, storePath, keyCols, tsCol, attrCols,
+        rewriteScdBuckets(all, storePath, keyCols, tsCol, attrCols,
           touched.length, buckets)
       }
       // a fully-duplicate batch still lands its (empty) ledger so the
@@ -1612,7 +1612,7 @@ object StreamingPipeline {
     * present). One shuffle on the key; each bucket lands in one partition
     * dir.
     */
-  private def rewriteScdBuckets(spark: SparkSession, changes: DataFrame,
+  private def rewriteScdBuckets(changes: DataFrame,
                                 storePath: String, keyCols: Seq[String],
                                 tsCol: String, attrCols: Seq[String],
                                 nTouched: Int, bucketMod: Int): Unit = {
@@ -1621,13 +1621,7 @@ object StreamingPipeline {
       .withColumn("bucket", pmod(hash(keyCols.map(col): _*), lit(bucketMod)))
       .repartition(math.max(nTouched, 1), col("bucket"))
       .localCheckpoint(true) // Spark refuses to overwrite a path it reads
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try dim.write.mode("overwrite").partitionBy("bucket").parquet(s"$storePath/dim")
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    graft.store.Store.overwritePartitions(dim, s"$storePath/dim", "bucket")
   }
 
   /** Heal the [[scdUpsertBatch]] and [[retireScdEntities]] crash windows.
@@ -1692,7 +1686,7 @@ object StreamingPipeline {
         (touched.toSet -- present).foreach(b => fs.delete(
           new org.apache.hadoop.fs.Path(s"$storePath/dim/bucket=$b"), true))
         if (present.nonEmpty)
-          rewriteScdBuckets(spark, filtered, storePath, keyCols, tsCol, attrCols,
+          rewriteScdBuckets(filtered, storePath, keyCols, tsCol, attrCols,
             present.size, buckets)
       case None =>
         // no surviving ledgered history at all — the touched buckets'

@@ -36,6 +36,37 @@ class AnomalySpec extends SparkSpec {
     assert(out(3).getAs[Boolean]("is_outlier") && out(3).getAs[Double]("z") == 1e9)
   }
 
+  test("W2 zScoreSeries equals zScorePartial to the bit: nulls, flat windows, short series, clamp") {
+    val rnd = new scala.util.Random(20261019L)
+    def noisy(n: Int, scale: Double) = Seq.fill(n)(
+      if (rnd.nextInt(5) == 0) None else Some(math.rint(rnd.nextGaussian() * scale * 1e3) / 1e3))
+    val flat = Seq(Seq(5.0, 5.0, 5.0, 9.0, 5.0, 5.0, 5.0, 5.0, 5.0), Seq(2.5, 2.5, 2.5, 2.5),
+      Seq(0.0, 0.0, 0.0, -1.0, 0.0)).map(_.map(Some(_)))
+    val short = Seq(Nil, Seq(Some(1.0)), Seq(Some(1.0), Some(2.0)), Seq(None, Some(1.0), Some(3.0)),
+      Seq(Some(4.0), None, Some(4.0), Some(8.0)))
+    // near-flat priors then a far value: |z| passes 1e9 on either side
+    val clamp = Seq(Seq(1.0, 1.0 + 1e-12, 1.0, 1.0 + 1e-12, 5e3), Seq(7.0, 7.0 - 1e-9, 7.0, -4e9),
+      Seq(1e15, 1e15 + 0.125, 1e15, 1e15 + 0.125, 1e15 + 1e9)).map(_.map(Some(_)))
+    val series = (Seq.fill(40)(noisy(1 + rnd.nextInt(30), 10.0)) ++ Seq.fill(10)(noisy(25, 1e6)) ++
+      flat ++ short ++ clamp).toIndexedSeq
+    val d0 = java.time.LocalDate.of(2025, 1, 1)
+    val df = series.zipWithIndex.flatMap { case (vs, s) =>
+      vs.zipWithIndex.map { case (v, i) => (s.toLong, "m", java.sql.Date.valueOf(d0.plusDays(i)), v) }
+    }.toDF("source_id", "metric", "metric_date", "value")
+    for (window <- Seq(2, 7); zThresh <- Seq(3.0, 1.5)) {
+      val byId = Windows.zScorePartial(df, window, zThresh, Seq("source_id", "metric")).collect()
+        .groupBy(_.getAs[Long]("source_id"))
+      series.zipWithIndex.foreach { case (vs, s) =>
+        val want = byId.getOrElse(s.toLong, Array.empty).sortBy(_.getAs[java.sql.Date]("metric_date").getTime)
+          .map(r => (Option(r.getAs[Any]("z")).map(_.asInstanceOf[Double]), r.getAs[Boolean]("is_outlier"))).toSeq
+        val got = Windows.zScoreSeries(vs.toIndexedSeq, window, zThresh)
+        assert(got == want, s"series $s (window $window, z $zThresh): ${vs.mkString(",")}")
+      }
+      val zs = byId.values.flatten.map(_.getAs[Any]("z")).toSet
+      if (window == 2) assert(zs(1e9) && zs(-1e9), "the clamp cases must reach ±1e9")
+    }
+  }
+
   test("W1 strict z-score needs a full finite window and uses pstdev") {
     val out = Windows.zScoreStrict(spikeSeries, window = 3, Seq("source_id", "metric"))
       .orderBy("metric_date").collect()

@@ -70,4 +70,12 @@ class StoreLayoutGuardSpec extends AnyFunSuite {
     assert(found.size == 1, found.mkString(
       "store maintainers stream through StreamingPipeline.maintain:\n", "\n", ""))
   }
+
+  test("no session-wide partition overwrite mode: writes pass it as a per-write option") {
+    val found = hits(_ => true)(l => Seq("conf.set(", "conf.unset(").exists(l.contains) &&
+      l.contains("partitionOverwriteMode"))
+    assert(found.isEmpty, found.mkString(
+      "session conf partitionOverwriteMode set in src/main (a concurrent writer in the " +
+        "session sees it; use .option(\"partitionOverwriteMode\", \"dynamic\")):\n", "\n", ""))
+  }
 }

@@ -158,4 +158,32 @@ class StoreSpec extends SparkSpec {
     assert(out(0).getAs[Double]("value_sum") == 10.0)
     assert(out(1).getAs[Double]("value_sum") == 99.0)
   }
+
+  test("overwriteMetricDaily is dynamic per write: the session conf stays untouched") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    val base = Files.createTempDirectory("graft_store3").toString + "/md"
+    def day(d: String, v: Double) = (java.sql.Date.valueOf(d), 1L, "m", v)
+    Store.overwriteMetricDaily(Seq(day("2025-09-01", 1.0), day("2025-09-02", 2.0), day("2025-09-03", 3.0))
+      .toDF("metric_date", "source_id", "metric", "value_sum"), base)
+    // every job of the rewrite carries the session's SQL confs as local
+    // properties: none may see the mode set on the session
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach(seen.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Store.overwriteMetricDaily(Seq(day("2025-09-02", 20.0)).toDF("metric_date", "source_id", "metric",
+        "value_sum"), base)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(seen.isEmpty, s"a job of the write saw $key in the session conf: $seen")
+    assert(spark.conf.getOption(key) == before)
+    val out = spark.read.parquet(base).orderBy("metric_date").collect()
+      .map(r => r.getAs[java.sql.Date]("metric_date").toString -> r.getAs[Double]("value_sum")).toSeq
+    assert(out == Seq("2025-09-01" -> 1.0, "2025-09-02" -> 20.0, "2025-09-03" -> 3.0),
+      "partitions absent from the write must survive it")
+  }
 }
